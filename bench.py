@@ -88,10 +88,7 @@ def main() -> None:
     # not 2x the suite.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_REPEATS", "3")))
     REPEAT_FLOOR = 0.2
-    from xngin_spark.operators.dedup import (
-        release_checkpoints,
-        release_persisted,
-    )
+    from xngin_spark.operators.util import release_all
 
     samples: dict[str, list[float]] = {}
     empty: list[str] = []
@@ -110,6 +107,12 @@ def main() -> None:
         # count() re-executed every pass-1 query with operator caches
         # already released (r9 ADVICE: ~2x pass-1 wall time).
         fn = Q.QUERIES[name]
+        # free the previous query's operator caches (e.g. minhash
+        # signatures) and returned-plan checkpoints (graph operators),
+        # failed or not, so 200+ queries in one session don't
+        # accumulate storage memory; that result is fully materialized
+        # (noop sink + observed count) or abandoned, so this is safe
+        release_all(spark)
         t = time.perf_counter()
         try:
             df = fn(spark, sf_dir)
@@ -128,13 +131,6 @@ def main() -> None:
             return
         dt = round(time.perf_counter() - t, 3)
         samples.setdefault(name, []).append(dt)
-        # free any operator-internal caches (e.g. minhash signatures)
-        # and returned-plan checkpoints (graph operators) so 200+
-        # queries in one session don't accumulate storage memory; the
-        # result is fully materialized (noop sink + observed count), so
-        # releasing the checkpoints here is safe
-        release_persisted()
-        release_checkpoints()
         if not record_rows:
             return
         n = obs.get["n"]

@@ -22,16 +22,6 @@ SF_ORACLE = os.environ.get("XNGIN_ORACLE_SF_DIR", "/root/testdata/sf0.01")
 #   does not need them to re-prove query correctness.
 RUN_SLOW = os.environ.get("XNGIN_FULL_TESTS", "") not in ("", "0")
 
-#: Hypothesis/property modules skipped wholesale in the default tier —
-#: generative fuzz over the dialect/predicate surface, not per-query
-#: correctness (the parity sweep stays default-tier).
-_SLOW_MODULES = {
-    "test_fuzz_predicates.py",
-    "test_fuzz_reflect.py",
-    "test_dialect_properties.py",
-    "test_corpus_props.py",
-}
-
 
 def pytest_configure(config):
     config.addinivalue_line(
@@ -48,10 +38,7 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tier: set XNGIN_FULL_TESTS=1 to run"
     )
     for item in items:
-        if (
-            "slow" in item.keywords
-            or os.path.basename(str(item.fspath)) in _SLOW_MODULES
-        ):
+        if "slow" in item.keywords:
             item.add_marker(skip)
 
 
@@ -79,15 +66,15 @@ def oracle_con():
 
 @pytest.fixture(autouse=True)
 def _drain_operator_caches():
-    """Free operator-internal persists and returned-plan checkpoints
-    after every test: a full suite runs 1000+ queries through one JVM,
-    and graph-operator checkpoints (track_checkpoint) have no GC owner
-    until released. Safe here — no plan outlives its test."""
+    """Free every persisted and checkpointed RDD after each test: a full
+    suite runs 1000+ queries through one JVM, and operator checkpoints
+    have no GC owner until released. Safe here — no plan outlives its
+    test."""
     yield
-    from xngin_spark.operators.dedup import (
-        release_checkpoints,
-        release_persisted,
-    )
+    from pyspark.sql import SparkSession
 
-    release_persisted()
-    release_checkpoints()
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        from xngin_spark.operators.util import release_all
+
+        release_all(active)

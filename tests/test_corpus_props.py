@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from xngin_spark.operators.corpus import (
@@ -14,6 +15,8 @@ from xngin_spark.operators.corpus import (
     connected_components,
     token_ngrams,
 )
+
+pytestmark = pytest.mark.slow
 
 
 def test_token_ngram_count_invariant(spark):
@@ -75,10 +78,7 @@ def _union_find_components(edges, nodes):
     return {v: min(vs) for r, vs in comp.items() for v in vs}
 
 
-import pytest as _pytest
-
-
-@_pytest.mark.parametrize("cap", [0, 1_000_000])  # distributed + driver paths
+@pytest.mark.parametrize("cap", [0, 1_000_000])  # distributed + driver paths
 def test_connected_components_random_graphs(spark, cap):
     rng = random.Random(42)
     for trial in range(3):

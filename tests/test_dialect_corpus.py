@@ -24,6 +24,13 @@ SQL_DIR = "/root/reference/sql"
 TPCH = [f"tpch{i}" for i in range(1, 23)]
 PRETTY = [f"pretty{i}" for i in range(1, 12)]
 
+#: the corpus is a snapshot of the reference repository's SQL files;
+#: tests that read it skip where the snapshot is not checked out
+needs_reference = pytest.mark.skipif(
+    not os.path.isdir(SQL_DIR),
+    reason="reference SQL snapshot absent on this host",
+)
+
 
 def _read(name: str) -> str:
     with open(os.path.join(SQL_DIR, f"{name}.sql")) as f:
@@ -46,6 +53,7 @@ def reference_views(spark):
         spark.catalog.dropTempView(name)
 
 
+@needs_reference
 @pytest.mark.parametrize("name", TPCH)
 def test_tpch_corpus_runs_verbatim(name, spark, reference_views):
     df = spark.sql(rewrite_sql(_read(name)))
@@ -53,17 +61,20 @@ def test_tpch_corpus_runs_verbatim(name, spark, reference_views):
     assert len(df.columns) > 0
 
 
+@needs_reference
 @pytest.mark.parametrize("name", PRETTY)
 def test_pretty_corpus_runs_verbatim(name, spark, reference_views):
     spark.sql(rewrite_sql(_read(name))).collect()
 
 
+@needs_reference
 def test_scalar_agg_on_empty_returns_one_row(spark, reference_views):
     # TPC-H Q6 shape: ungrouped aggregate over empty input = 1 row, NULL sum
     row = spark.sql(rewrite_sql(_read("tpch6"))).collect()
     assert len(row) == 1 and row[0][0] is None
 
 
+@needs_reference
 def test_ddl_corpus_parses_to_reference_schemas(spark):
     tables = parse_ddl(_read("tpch_ddl"))
     assert set(tables) == set(REFERENCE_SCHEMAS)
@@ -88,6 +99,7 @@ def test_ddl_corpus_parses_to_reference_schemas(spark):
     assert tables["partsupp"].primary_key == ("ps_partkey", "ps_suppkey")
 
 
+@needs_reference
 def test_ddl_register_empty_runs_query(spark):
     tables = parse_ddl(_read("tpch_ddl"))
     register_empty(spark, tables)

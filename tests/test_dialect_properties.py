@@ -7,10 +7,13 @@ show.
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from xngin_spark.dialect import rewrite_sql
+
+pytestmark = pytest.mark.slow
 
 # SQL-ish fragments: identifiers, operators, quoted strings (with ''
 # escapes), the shimmed tokens

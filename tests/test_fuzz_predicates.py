@@ -18,6 +18,8 @@ from hypothesis import strategies as st
 
 from tests.conftest import SF_SMALL
 
+pytestmark = pytest.mark.slow
+
 PATH = f"{SF_SMALL}/lineitem.parquet"
 
 _num_atom = st.one_of(

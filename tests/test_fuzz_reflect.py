@@ -21,6 +21,8 @@ from pyspark.sql import functions as F
 
 from xngin_spark.plans.reflect import Unreflectable, roundtrip_equivalent
 
+pytestmark = pytest.mark.slow
+
 N_SEEDS = 40
 JOINS = ["inner", "left", "right", "full", "left_semi", "left_anti"]
 

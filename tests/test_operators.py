@@ -305,7 +305,7 @@ def test_minhash_lsh_bucket_cap(spark):
     # A planted mega-cluster (identical boilerplate) must not reach the
     # pairing join when max_bucket_size caps it; unrelated near-dup
     # pairs in small buckets survive.
-    from xngin_spark.operators.dedup import minhash_lsh_pairs, release_persisted
+    from xngin_spark.operators.dedup import minhash_lsh_pairs
 
     boiler = [(i, "all rights reserved standard license header text here") for i in range(40)]
     near = [
@@ -321,7 +321,6 @@ def test_minhash_lsh_bucket_cap(spark):
     got_capped = {(r.id_a, r.id_b) for r in capped.collect()}
     assert (100, 101) in got_capped  # small-bucket pair survives the cap
     assert not any(a < 40 and b < 40 for a, b in got_capped)
-    release_persisted()
 
 
 @pytest.mark.parametrize(
@@ -568,6 +567,17 @@ def test_iterative_operators_do_not_leak_checkpoints(spark):
     # the final labels checkpoint survives (the caller holds it); the
     # per-iteration + edge-list ones must be gone
     assert jsc.getPersistentRDDs().size() <= before + 1
+    # bpe's above-cap path checkpoints the symbol table once per merge
+    # round; the merge table it returns is plain rows, so none survive
+    # (<=: the context cleaner may free the unreferenced labels above)
+    from xngin_spark.operators import bpe
+
+    held = jsc.getPersistentRDDs().size()
+    docs = spark.createDataFrame(
+        [(1, "low lower lowest newer newest wider")], "doc_id long, text string"
+    )
+    assert bpe.learn(spark, docs, merges=6, driver_cap=0).count() == 6
+    assert jsc.getPersistentRDDs().size() <= held
 
 
 def test_sequence_pack_fills_budget(spark):
@@ -1017,7 +1027,6 @@ def test_minhash_index_persist_and_screen(spark, tmp_path, docs):
         (r.new_id, r.corpus_id): r.est_jaccard
         for r in D.minhash_screen(new, path, threshold=0.5).collect()
     }
-    D.release_persisted()
     # 101 duplicates corpus docs 1/2 exactly -> identical signatures
     assert hits[(101, 1)] == 1.0 and hits[(101, 2)] == 1.0
     assert all(nid != 102 for nid, _ in hits), "novel doc must not match"
@@ -1027,7 +1036,6 @@ def test_minhash_index_persist_and_screen(spark, tmp_path, docs):
         (r.new_id, r.corpus_id)
         for r in D.minhash_screen(new, path, threshold=0.5).collect()
     }
-    D.release_persisted()
     assert again == set(hits)
     # an index persisted under a NON-default id column screens with the
     # persist-time name recorded in the meta, not the caller's default
@@ -1039,7 +1047,6 @@ def test_minhash_index_persist_and_screen(spark, tmp_path, docs):
         (r.new_id, r.corpus_id)
         for r in D.minhash_screen(new, path2, threshold=0.5).collect()
     }
-    D.release_persisted()
     assert {(101, 1), (101, 2)} <= uid_hits
     # an index without metadata must refuse to screen (guessed banding
     # constants silently match nothing)

@@ -477,7 +477,7 @@ def test_dedup_synthesis_bounded_pair_growth(tmp_path):
     linear in K. Round 11 shipped two broken ciphers before this test:
     rot(g*7) repeated every 130 groups, and mixed-radix rotations
     collapsed to 26 distinct ciphers on the lowercase-only corpus
-    (measured 123x pair growth per 10x data, tools/lsh_phase_probe.py).
+    (measured 123x pair growth per 10x data; SCALE.md, LSH phase split).
     A permutation cipher with asserted uniqueness is structural, but
     only a shingle-level check catches an alphabet/corpus mismatch —
     so check shingles, not cipher strings."""

@@ -543,10 +543,7 @@ def test_winnow_cap_collapse_warns_not_silent(spark):
     duplicates'."""
     import warnings
 
-    from xngin_spark.operators.dedup import (
-        release_persisted,
-        winnow_candidate_pairs,
-    )
+    from xngin_spark.operators.dedup import winnow_candidate_pairs
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     rows = [(i, f"{base} variant {i % 3}") for i in range(60)]
@@ -555,7 +552,6 @@ def test_winnow_cap_collapse_warns_not_silent(spark):
         warnings.simplefilter("always")
         out = winnow_candidate_pairs(d, max_fp_docs=4, min_shared=1)
         n = out.count()
-    release_persisted()
     assert n == 0
     assert any("max_fp_docs" in str(w.message) for w in caught), (
         "cap collapse did not warn"
@@ -570,7 +566,6 @@ def test_winnow_cap_collapse_warns_not_silent(spark):
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
         winnow_candidate_pairs(healthy, min_shared=1).count()
-    release_persisted()
     assert not any("max_fp_docs" in str(w.message) for w in caught)
 
 
@@ -1079,10 +1074,7 @@ def test_kcore_fixpoint_within_budget(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from xngin_spark.operators.corpus import kcore_peel
-    from xngin_spark.operators.dedup import (
-        release_persisted,
-        winnow_candidate_pairs,
-    )
+    from xngin_spark.operators.dedup import winnow_candidate_pairs
 
     d = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -1092,7 +1084,6 @@ def test_kcore_fixpoint_within_budget(spark, sf_dir):
     e = pairs.select(F.col("doc_a").alias("lo"), F.col("doc_b").alias("hi"))
     a = _rows(kcore_peel(e, k=3, rounds=16))
     b = _rows(kcore_peel(e, k=3, rounds=17))
-    release_persisted()
     assert a == b and a, "peel did not converge within the 16-round budget"
 
 

@@ -77,8 +77,8 @@ def make_dedup_docs(src: str, dst: str, k: int) -> None:
     # the synthetic corpus is lowercase-only — at sf100 (250 groups)
     # every ~10th group shared a cipher, so copies of the same source
     # doc agreed on >=50% of their minhashes across groups and the LSH
-    # pair count grew 123x per 10x data (measured with
-    # tools/lsh_phase_probe.py: 160-doc band buckets, a=1.38). With
+    # pair count grew 123x per 10x data (SCALE.md, LSH phase split:
+    # 160-doc band buckets, a=1.38). With
     # per-group shuffles the cipher space is 26! per class; uniqueness
     # over the emitted groups is asserted, so cross-group pairs are
     # structurally impossible rather than probabilistic.

@@ -306,20 +306,16 @@ def main() -> int:
                     outcome = f"ERROR({_classify(err)})"
         if outcome != "OK":
             failed.append(name)
-        # release per-row storage BEFORE the next row: operator persists,
-        # dedup-tracked checkpoints, and (via gc -> ContextCleaner) the
-        # anonymous localCheckpoints the CDC rows hold — at sf100 the
-        # incremental_agg_multi checkpoint+shuffle footprint is ~45 GB
-        # of spark-local that otherwise coexists with the NEXT row's
-        # oracle spill (the disk death the round-10 sweep hit twice)
+        # release per-row storage BEFORE the next row: operator persists
+        # and checkpoints, including the localCheckpoints the CDC rows
+        # hold — at sf100 the incremental_agg_multi checkpoint+shuffle
+        # footprint is ~45 GB of spark-local that otherwise coexists with
+        # the NEXT row's oracle spill (the disk death the round-10 sweep
+        # hit twice); gc -> ContextCleaner then frees their shuffle files
         try:
-            from xngin_spark.operators.dedup import (
-                release_checkpoints,
-                release_persisted,
-            )
+            from xngin_spark.operators.util import release_all
 
-            release_persisted()
-            release_checkpoints()
+            release_all(spark)
         except Exception:
             pass
         import gc

@@ -94,7 +94,7 @@ def write_results(
 
 def main(small_dir: str, big_dir: str, ratio: float, only: set[str]) -> None:
     from xngin_spark import queries as Q
-    from xngin_spark.operators.dedup import release_persisted
+    from xngin_spark.operators.util import release_all
     from xngin_spark.session import get_spark
 
     Q.load_all()
@@ -129,7 +129,7 @@ def main(small_dir: str, big_dir: str, ratio: float, only: set[str]) -> None:
             "noop"
         ).save()
         dt = time.perf_counter() - t0
-        release_persisted()
+        release_all(spark)
         return round(dt, 3)
 
     # warm both datasets' DATA PAGES so neither SF pays cold-read:

@@ -172,7 +172,7 @@ def learn(
             list(zip(probe["syms"].tolist(), probe["freq"].tolist())), merges
         )
     else:
-        rows = _distributed_learn(symtab0, merges, checkpointed=True)
+        rows = _distributed_learn(symtab0, merges)
     # rows are plain Python now — the checkpoint's blocks are dead
     from xngin_spark.operators.util import release_checkpoint
 
@@ -190,13 +190,16 @@ def learn(
     )
 
 
-def _distributed_learn(
-    symtab: DataFrame, merges: int, checkpointed: bool = False
-) -> list[tuple]:
+def _distributed_learn(symtab0: DataFrame, merges: int) -> list[tuple]:
     """The above-cap merge loop: per round one pair-count shuffle, one
-    top-1 collect, one checkpointed JVM fold (unchanged semantics)."""
-    if not checkpointed:
-        symtab = symtab.localCheckpoint()
+    top-1 collect, one checkpointed JVM fold (unchanged semantics).
+    ``symtab0`` is the caller's checkpoint and stays the caller's to
+    release; each round's checkpoint is released once its successor has
+    materialized, and the last one before returning, so storage is O(1)
+    in merge count."""
+    from xngin_spark.operators.util import release_checkpoint
+
+    symtab = symtab0
     rows: list[tuple] = []
     for rank in range(1, merges + 1):
         top = (
@@ -210,7 +213,12 @@ def _distributed_learn(
             break
         l, r, c = top["left_sym"], top["right_sym"], int(top["pair_count"])
         rows.append((rank, l, r, l + r, c))
-        symtab = apply_merge(symtab, l, r).localCheckpoint()
+        merged = apply_merge(symtab, l, r).localCheckpoint()
+        if symtab is not symtab0:
+            release_checkpoint(symtab)
+        symtab = merged
+    if symtab is not symtab0:
+        release_checkpoint(symtab)
     return rows
 
 

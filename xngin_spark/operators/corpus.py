@@ -343,9 +343,7 @@ def bm25_topk(
     # one-row cross join instead of a driver-blocking .first(): one
     # fewer serialized driver round-trip, bit-identical values (COUNT/
     # AVG land in the same doubles whether collected or joined).
-    from xngin_spark.operators.dedup import track_checkpoint
-
-    tf = track_checkpoint(
+    tf = (
         pairs.groupBy(id_col, "tok")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"))
         .localCheckpoint(eager=True)
@@ -491,6 +489,15 @@ def bm25_index_persist(
     release_checkpoint(tf)
 
 
+#: the one-row ``_meta/`` dataset of a BM25 index. The probe reads it
+#: with this schema pinned (no inference pass), so writer and reader
+#: must share it: a pinned schema reads a field it lacks as null.
+_BM25_META_SCHEMA = (
+    "id_col string, text_col string, n_docs long, sum_dl long,"
+    " applied_token string"
+)
+
+
 def _write_bm25_meta(
     spark, path: str, id_col: str, text_col: str,
     n_docs: int, sum_dl: int, mode: str = "overwrite",
@@ -500,10 +507,7 @@ def _write_bm25_meta(
     # path costs ~4s per write — this is the streaming sink's per-batch
     # commit, so it must be a plain one-task JVM job (round-9 verdict #1)
     values_df(
-        spark,
-        "id_col string, text_col string, n_docs long, sum_dl long,"
-        " applied_token string",
-        [(id_col, text_col, n_docs, sum_dl, applied_token)],
+        spark, _BM25_META_SCHEMA, [(id_col, text_col, n_docs, sum_dl, applied_token)]
     ).coalesce(1).write.mode(mode).json(f"{path}/_meta")
 
 
@@ -848,14 +852,7 @@ def bm25_index_probe(
     ]
     # schema pinned: inference would read the _meta file twice (one
     # pass to infer, one to load) and cost an extra driver job per probe
-    meta = (
-        spark.read.schema(
-            "id_col string, text_col string, n_docs long, sum_dl long,"
-            " applied_token string"
-        )
-        .json(f"{path}/_meta")
-        .head()
-    )
+    meta = spark.read.schema(_BM25_META_SCHEMA).json(f"{path}/_meta").head()
     id_col = meta["id_col"]
     n_docs = float(meta["n_docs"])
     # a drained corpus (CDC deletes can legitimately empty the index)
@@ -1830,8 +1827,6 @@ def triangle_count(
     shuffles total (degree groupBy, wedge self-join, closure join),
     all on compact long keys.
     """
-    from xngin_spark.operators.dedup import track_checkpoint
-
     # materialize the (possibly expensive) upstream edge pipeline ONCE:
     # deg and oriented below each consumed it separately before, so the
     # winnow self-join behind triangle_dedup_graph executed twice; the
@@ -1845,10 +1840,9 @@ def triangle_count(
         if out is not None:
             release_checkpoint(e)
             return out
-    # deg/oriented checkpoints are part of the RETURNED plan, so they
-    # are registered for the session-wide release_persisted() drain
-    # instead of accumulating across a long bench session (ADVICE r9)
-    deg = track_checkpoint(
+    # deg/oriented checkpoints are part of the RETURNED plan: they stay
+    # until the query runner's util.release_all drain
+    deg = (
         e.select(F.col("lo").alias("nid"))
         .unionByName(e.select(F.col("hi").alias("nid")))
         .groupBy("nid")
@@ -1863,7 +1857,7 @@ def triangle_count(
     lo_first = (F.col("dlo") < F.col("dhi")) | (
         (F.col("dlo") == F.col("dhi")) & (F.col("lo") < F.col("hi"))
     )
-    oriented = track_checkpoint(
+    oriented = (
         e.join(dl, "lo")
         .join(dh, "hi")
         .select(
@@ -2004,8 +1998,6 @@ def kcore_peel(
     """
     import warnings
 
-    from xngin_spark.operators.dedup import track_checkpoint
-
     e = edges.select(
         F.col("lo").cast("long"), F.col("hi").cast("long")
     ).localCheckpoint(eager=True)
@@ -2055,7 +2047,8 @@ def kcore_peel(
             "raise the `rounds` knob",
             stacklevel=2,
         )
-    track_checkpoint(e)
+    # e's checkpoint is part of the RETURNED plan: it stays until the
+    # query runner's util.release_all drain
     return (
         e.select(F.col("lo").alias("nid"))
         .unionByName(e.select(F.col("hi").alias("nid")))

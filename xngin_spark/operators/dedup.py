@@ -38,57 +38,6 @@ from xngin_spark.operators.util import fan_out, values_df
 # permutation are noise for dedup purposes).
 _P = (1 << 31) - 1
 
-# DataFrames persisted internally by operators in this module (e.g. the
-# minhash signature cache). Persisted RDDs outlive the returned result
-# in a long-lived session, so callers that loop over many dedup runs
-# should call release_persisted() after materializing each result.
-_PERSISTED: list[DataFrame] = []
-
-
-def release_persisted() -> None:
-    """Unpersist every internally persisted DataFrame (safe anytime:
-    unpersisted lineage recomputes on next use rather than failing)."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-
-
-def track_persisted(df: DataFrame) -> DataFrame:
-    """Register an externally persisted DataFrame for release by
-    ``release_persisted()`` — the session-wide storage drain the bench
-    (and any long-lived service) calls between queries. Lets other
-    modules share one release point instead of growing their own."""
-    _PERSISTED.append(df)
-    return df
-
-
-#: localCheckpoint(eager=True) frames that are part of a RETURNED plan
-#: (graph operators' degree/oriented/final-peel caches). Deliberately
-#: NOT in _PERSISTED: release_persisted()'s contract is "safe anytime —
-#: lineage recomputes", and several query wrappers call it BEFORE
-#: returning; a checkpoint has no lineage, so draining it early would
-#: kill the returned plan (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
-_CHECKPOINTS: list[DataFrame] = []
-
-
-def track_checkpoint(df: DataFrame) -> DataFrame:
-    """Register a ``localCheckpoint(eager=True)`` DataFrame whose
-    blocks should be freed by :func:`release_checkpoints` once the
-    query's result is FULLY MATERIALIZED (the bench calls it after the
-    noop sink; a service calls it after shipping the result). Until
-    then the blocks must stay — checkpoints cannot recompute."""
-    _CHECKPOINTS.append(df)
-    return df
-
-
-def release_checkpoints() -> None:
-    """Free every tracked returned-plan checkpoint. Only call when no
-    tracked plan will be re-executed — the data is unrecoverable."""
-    from xngin_spark.operators.util import release_checkpoint
-
-    while _CHECKPOINTS:
-        release_checkpoint(_CHECKPOINTS.pop())
-
-
 def _perm_consts(k: int, seed: int = 42) -> list[tuple[int, int]]:
     # deterministic LCG so signatures are reproducible across runs/engines
     out, state = [], seed
@@ -296,9 +245,9 @@ def minhash_lsh_pairs(
     which rarely need pairwise enumeration (dedup wants one keeper per
     cluster, not m² edges).
 
-    The signature cache persisted internally is tracked; call
-    ``release_persisted()`` after materializing the result to free
-    executor storage in long-lived sessions.
+    The signature cache persisted internally stays in the block manager
+    until the query runner calls ``util.release_all`` after
+    materializing the result.
     """
     r = k // bands
     # signatures feed banding AND both sides of the verification join —
@@ -306,10 +255,8 @@ def minhash_lsh_pairs(
     # LSH layout: n × k×8B ≈ 0.5 KB/doc, disk-spillable)
     from pyspark.storagelevel import StorageLevel
 
-    sigs = track_persisted(
-        minhash_signatures(df, text_col, id_col, k, shingle_n, portable).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    sigs = minhash_signatures(df, text_col, id_col, k, shingle_n, portable).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     # materialize eagerly: the banding stage and both verification-join
     # sides consume `sigs`; without a barrier they race the cold cache
@@ -319,10 +266,8 @@ def minhash_lsh_pairs(
     # persist the (band, bucket, id) rows (24 B each) so the explode +
     # band-hash transform runs once, not three times (measured ~1s per
     # recompute at sf1)
-    banded = track_persisted(
-        _band_buckets(sigs, id_col, k, bands, portable).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    banded = _band_buckets(sigs, id_col, k, bands, portable).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     banded.count()
 
@@ -752,15 +697,13 @@ def winnow_candidate_pairs(
     """
     # the char-level rolling-hash projection feeds the cap count AND
     # both self-join sides — persist so the text is hashed exactly once
-    # (n × ~30 fp × 16B, disk-spillable; released via release_persisted)
+    # (n × ~30 fp × 16B, disk-spillable; released by util.release_all)
     from pyspark.storagelevel import StorageLevel
 
-    fps = track_persisted(
-        winnow_fingerprints(df, text_col, id_col, k=k, w=w).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    fps = winnow_fingerprints(df, text_col, id_col, k=k, w=w).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
-    keep = track_persisted(
+    keep = (
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("__df"))
         .filter(F.col("__df") <= max_fp_docs)
@@ -1157,10 +1100,8 @@ def minhash_screen(
         ) from exc
     k, bands, shingle_n = int(meta["k"]), int(meta["bands"]), int(meta["shingle_n"])
     stored_id = meta["id_col"]
-    nsig = track_persisted(
-        minhash_signatures(new_df, text_col, id_col, k, shingle_n).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
+    nsig = minhash_signatures(new_df, text_col, id_col, k, shingle_n).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     nsig.count()
     nband = _band_buckets(nsig, id_col, k, bands).select(

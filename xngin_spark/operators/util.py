@@ -120,3 +120,24 @@ def release_checkpoint(df: DataFrame) -> None:
             plan.rdd().unpersist(False)
     except Exception:
         pass  # release is best-effort; never fail the query over cleanup
+
+
+def release_all(spark: SparkSession) -> int:
+    """Free every persisted and checkpointed RDD in the session and the
+    cache manager's cached plans; return how many RDDs were held.
+
+    Spark's block manager is the one record of what operators stored:
+    ``persist`` caches (minhash signatures, winnow fingerprints) and
+    ``localCheckpoint`` barriers alike. Query runners (the bench, the
+    test fixture, the probe tools) call this once per query, after its
+    result is fully materialized or has failed. Library code never
+    calls it: a checkpoint has no lineage, so draining one that a live
+    plan still reads kills that plan. Per-iteration release inside an
+    operator is :func:`release_checkpoint`.
+    """
+    held = spark.sparkContext._jsc.getPersistentRDDs()
+    n = held.size()
+    for rdd in list(held.values()):
+        rdd.unpersist(True)
+    spark.catalog.clearCache()
+    return n

@@ -347,15 +347,13 @@ def hll_partitioned_distinct(spark, sf_dir):
     equals the direct whole-table sketch."""
     from pyspark.storagelevel import StorageLevel
 
-    from xngin_spark.operators.dedup import track_persisted
-
     d = T(spark, sf_dir, "documents")
     # persist: both union branches (per-source rows AND the merged
     # __ALL__ row) consume this frame — without the pin each branch
     # re-scans and re-sketches the table (review finding: 2x the I/O
     # for a query whose point is that rollups touch only sketches);
-    # released by the bench's release_persisted() drain
-    per = track_persisted(
+    # released by the query runner's util.release_all drain
+    per = (
         d.groupBy("source")
         .agg(
             F.hll_sketch_agg(F.xxhash64("text")).alias("sk"),

@@ -723,17 +723,13 @@ def dedup_best_keeper(spark, sf_dir):
     from pyspark.sql import Window
 
     from xngin_spark.operators.corpus import connected_components
-    from xngin_spark.operators.dedup import (
-        release_persisted,
-        winnow_candidate_pairs,
-    )
+    from xngin_spark.operators.dedup import winnow_candidate_pairs
 
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     edges = winnow_candidate_pairs(d, min_shared=8).select(
         F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     )
     comps = connected_components(edges, d.select("doc_id"), id_col="doc_id")
-    release_persisted()
     j = comps.join(
         X.with_text_stats(d).select("doc_id", "quality"), "doc_id"
     )
@@ -823,10 +819,7 @@ def pagerank_dedup_graph(spark, sf_dir):
     pairwise verifiers (doc_id < 1000); per-iteration cost is linear
     in |E| at any scale (operators/corpus.pagerank_fixed)."""
     from xngin_spark.operators.corpus import pagerank_fixed
-    from xngin_spark.operators.dedup import (
-        release_persisted,
-        winnow_candidate_pairs,
-    )
+    from xngin_spark.operators.dedup import winnow_candidate_pairs
 
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     pairs = winnow_candidate_pairs(d, min_shared=8)
@@ -835,9 +828,7 @@ def pagerank_dedup_graph(spark, sf_dir):
     ).unionByName(
         pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
-    out = pagerank_fixed(edges, d.select("doc_id"), id_col="doc_id", iters=3)
-    release_persisted()
-    return out
+    return pagerank_fixed(edges, d.select("doc_id"), id_col="doc_id", iters=3)
 
 
 def _pagerank_chain_oracle(iters: int = 3, damping: float = 0.85) -> str:
@@ -2477,7 +2468,6 @@ def dedup_pipeline(spark, sf_dir):
     from xngin_spark.operators.corpus import connected_components
     from xngin_spark.operators.dedup import (
         minhash_lsh_pairs,
-        release_persisted,
         winnow_candidate_pairs,
     )
 
@@ -2500,7 +2490,6 @@ def dedup_pipeline(spark, sf_dir):
         d.select("doc_id"),
         id_col="doc_id",
     )
-    release_persisted()
     w = Window.partitionBy("component")
     return comps.select(
         "doc_id",
@@ -2662,14 +2651,10 @@ def docs_stream_screen(spark, sf_dir):
     # map-side band/bucket projection of the checkpointed signatures,
     # so checkpointing it too (the old shape) paid a second blocking
     # driver action to save a trivial per-batch recompute over a
-    # #corpus-sized frame. Tracked so release_checkpoints() can free
-    # the blocks after the run (r11 ADVICE convention).
-    from xngin_spark.operators.dedup import track_checkpoint
-
-    csig = track_checkpoint(
-        minhash_signatures(corpus, k=k, portable=True).localCheckpoint(
-            eager=True
-        )
+    # #corpus-sized frame. The query runner's util.release_all drain
+    # frees the blocks after the run.
+    csig = minhash_signatures(corpus, k=k, portable=True).localCheckpoint(
+        eager=True
     )
     cband = _band_buckets(csig, "doc_id", k, bands).select(
         F.col("doc_id").alias("corpus_id"), "band", "bucket"
@@ -2799,9 +2784,7 @@ def emb_stream_screen(spark, sf_dir):
         "IF(CAST(element_at(embedding, i) AS DOUBLE) < 0, "
         "shiftleft(1L, i - 1), 0L)), 0L, (a, x) -> a + x)"
     )
-    from xngin_spark.operators.dedup import track_checkpoint
-
-    corpus = track_checkpoint(
+    corpus = (
         emb.filter(F.col("vec_id") % 5 != 4)
         .select(
             F.col("vec_id").alias("corpus_id"),
@@ -3305,18 +3288,13 @@ def triangle_dedup_graph(spark, sf_dir):
     point — a 10^6-degree hub contributes wedges only through its
     low-degree neighbors."""
     from xngin_spark.operators.corpus import triangle_count
-    from xngin_spark.operators.dedup import (
-        release_persisted,
-        winnow_candidate_pairs,
-    )
+    from xngin_spark.operators.dedup import winnow_candidate_pairs
 
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     pairs = winnow_candidate_pairs(d, min_shared=8)
-    out = triangle_count(
+    return triangle_count(
         pairs.select(F.col("doc_a").alias("lo"), F.col("doc_b").alias("hi"))
     )
-    release_persisted()
-    return out
 
 
 @register(
@@ -3488,17 +3466,12 @@ def kcore_dedup_graph(spark, sf_dir):
     other survivors — from incidental pairwise matches: the review
     queue's first page. Operator: operators/corpus.kcore_peel."""
     from xngin_spark.operators.corpus import kcore_peel
-    from xngin_spark.operators.dedup import (
-        release_persisted,
-        winnow_candidate_pairs,
-    )
+    from xngin_spark.operators.dedup import winnow_candidate_pairs
 
     d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
     pairs = winnow_candidate_pairs(d, min_shared=5)
-    out = kcore_peel(
+    return kcore_peel(
         pairs.select(F.col("doc_a").alias("lo"), F.col("doc_b").alias("hi")),
         k=3,
         rounds=16,
     )
-    release_persisted()
-    return out

@@ -1034,13 +1034,8 @@ def events_concurrent_sessions(spark, sf_dir):
         # hash-identical output)
         .localCheckpoint(eager=True)
     )
-    # the checkpoint is part of the RETURNED plan: register it so
-    # release_checkpoints() (bench / tests / services) frees the blocks
-    # after full materialization instead of pinning one #sessions-sized
-    # frame per invocation in a long-lived session (ADVICE r11)
-    from xngin_spark.operators.dedup import track_checkpoint
-
-    sess = track_checkpoint(sess)
+    # the checkpoint is part of the RETURNED plan: the query runner's
+    # util.release_all drain frees its blocks after full materialization
     overlap = interval_overlap_join(
         sess, sess, start="session_start", end="session_end"
     ).filter(F.col("user_id") != F.col("user_id_r"))
