@@ -83,6 +83,41 @@ def test_cosine_topk_self_match(spark):
     assert first == {0: 0, 1: 1}  # every query's own vector ranks first
 
 
+def _topk_corpus_longer_than_query(spark):
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0, 1.0, 1.0, 1.0, 1.0])], "vec_id long, embedding array<float>"
+    )
+    q = spark.createDataFrame([(0, [1.0, 0.0, 0.0, 0.0])], "qid long, embedding array<float>")
+    return S.cosine_topk(emb, q, k=1)
+
+
+def _pair_cosine(a, b):
+    return lambda spark: spark.createDataFrame(
+        [(a, b)], "a array<float>, b array<float>"
+    ).select(S.cosine("a", "b").alias("cosine"))
+
+
+@pytest.mark.parametrize(
+    "build, raises",
+    [
+        (_topk_corpus_longer_than_query, True),
+        (_pair_cosine([1.0, 2.0], [1.0, 2.0, 3.0]), True),
+        (_pair_cosine(None, [1.0, 2.0]), False),
+    ],
+    ids=["topk_corpus_longer", "pair_unequal", "pair_null"],
+)
+def test_cosine_unequal_dimensions_raise(spark, build, raises):
+    # a silent score over the shared prefix (or a NULL that drops the
+    # row from every cosine >= t filter) is a wrong answer; a NULL
+    # vector stays a NULL score
+    df = build(spark)
+    if raises:
+        with pytest.raises(Exception, match="dimensions differ"):
+            df.collect()
+    else:
+        assert [r["cosine"] for r in df.collect()] == [None]
+
+
 def test_lsh_recall_on_exact_match(spark):
     import random
 

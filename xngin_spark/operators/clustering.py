@@ -276,6 +276,41 @@ def ivf_index(
     return assign_clusters(corpus, centroids, vec_col=vec_col, out_col="ivf_list")
 
 
+def _probes(
+    queries: DataFrame,
+    centroids: list[list[float]],
+    nprobe: int,
+    vec_col: str,
+    query_id_col: str,
+) -> DataFrame:
+    """(qid, qvec, ivf_list): each query once per list among its
+    ``nprobe`` nearest centroids."""
+    carr = _lit_matrix(centroids)
+    probe_lists = F.slice(
+        F.transform(
+            F.array_sort(
+                F.transform(
+                    F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
+                    lambda i: F.struct(
+                        _sq_dist(F.col(vec_col), F.element_at(carr, i + 1)).alias("d"),
+                        i.alias("c"),
+                    ),
+                )
+            ),
+            lambda s: s["c"],
+        ),
+        1,
+        nprobe,
+    )
+    return queries.select(
+        F.col(query_id_col).alias("qid"),
+        F.col(vec_col).alias("qvec"),
+        # explode_outer + post-filter: plain explode would re-run the
+        # all-centroid distance scoring inside an inferred size()>0 scan guard
+        F.explode_outer(probe_lists).alias("ivf_list"),
+    ).filter(F.col("ivf_list").isNotNull())
+
+
 def cosine_topk_ivf(
     corpus: DataFrame,
     queries: DataFrame,
@@ -295,50 +330,18 @@ def cosine_topk_ivf(
     |corpus|·nprobe/nlist distance computations. Recall rises with
     nprobe (nprobe = nlist ⇒ exact).
     """
-    from xngin_spark.operators.similarity import vec_dot, vec_norm
+    from xngin_spark.operators.similarity import _top_k, cosine
 
     if centroids is None:
         centroids = kmeans_fit(corpus, nlist, vec_col, max_iter=max_iter)
     # transient per-call assignment, nothing persisted → BLAS path OK
     indexed = ivf_index(corpus, centroids, vec_col, deterministic=False)
 
-    carr = _lit_matrix(centroids)
-    probe_lists = F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-                    lambda i: F.struct(
-                        _sq_dist(F.col(vec_col), F.element_at(carr, i + 1)).alias("d"),
-                        i.alias("c"),
-                    ),
-                )
-            ),
-            lambda s: s["c"],
-        ),
-        1,
-        nprobe,
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        # explode_outer + post-filter: plain explode would re-run the
-        # all-centroid distance scoring inside an inferred size()>0 scan guard
-        F.explode_outer(probe_lists).alias("ivf_list"),
-    ).filter(F.col("ivf_list").isNotNull())
+    q = _probes(queries, centroids, nprobe, vec_col, query_id_col)
     scored = indexed.join(F.broadcast(q), "ivf_list").withColumn(
-        "cosine",
-        vec_dot(F.col(vec_col), F.col("qvec"))
-        / (vec_norm(F.col(vec_col)) * vec_norm(F.col("qvec"))),
+        "cosine", cosine(F.col(vec_col), F.col("qvec"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.select("qid", id_col, "cosine")
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, id_col)
 
 
 def tune_nprobe(
@@ -526,47 +529,15 @@ def cosine_topk_ivf_persisted(
     handful of vectors by contract — same broadcast-side assumption as
     cosine_topk_ivf); the corpus side never materializes un-probed
     partitions."""
-    from xngin_spark.operators.similarity import vec_dot, vec_norm
+    from xngin_spark.operators.similarity import _top_k, cosine
 
-    carr = _lit_matrix(centroids)
-    probe_lists = F.slice(
-        F.transform(
-            F.array_sort(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(len(centroids) - 1)),
-                    lambda i: F.struct(
-                        _sq_dist(F.col(vec_col), F.element_at(carr, i + 1)).alias("d"),
-                        i.alias("c"),
-                    ),
-                )
-            ),
-            lambda s: s["c"],
-        ),
-        1,
-        nprobe,
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        # explode_outer + post-filter: plain explode would re-run the
-        # all-centroid distance scoring inside an inferred size()>0 scan guard
-        F.explode_outer(probe_lists).alias("ivf_list"),
-    ).filter(F.col("ivf_list").isNotNull())
+    q = _probes(queries, centroids, nprobe, vec_col, query_id_col)
     probed = sorted({r.ivf_list for r in q.select("ivf_list").distinct().collect()})
     indexed = spark.read.parquet(path).filter(F.col("ivf_list").isin(probed))
     scored = indexed.join(F.broadcast(q), "ivf_list").withColumn(
-        "cosine",
-        vec_dot(F.col(vec_col), F.col("qvec"))
-        / (vec_norm(F.col(vec_col)) * vec_norm(F.col("qvec"))),
+        "cosine", cosine(F.col(vec_col), F.col("qvec"))
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.select("qid", id_col, "cosine")
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k, id_col)
 
 
 # --- Product quantization (PQ) --------------------------------------------

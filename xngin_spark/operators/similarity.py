@@ -12,18 +12,20 @@ Scale design:
   bucket) pairs are scored. Turns the scan into a bucket-local join —
   the IVF-style scale path.
 
-Determinism: dot products and norms accumulate through DECIMAL(25,9)
-(exact, order-independent) and finish in IEEE doubles, so results are
-bit-identical to the DuckDB oracle. The plain-double variants
-(`*_fast`) exist for benchmarks where cross-engine parity isn't needed.
+One cosine recipe: every cosine score in the package is built from
+``vec_norm`` and ``vec_dot`` (``cosine`` when neither norm is hoisted),
+and every per-query top-k from ``_top_k``. Dot products and norms
+accumulate through DECIMAL(25,9) (exact, order-independent) and finish
+in IEEE doubles, so results are bit-identical to the DuckDB oracle.
+Precondition: the two vectors of a pair have equal dimension. A pair
+of unequal dimension raises; a NULL vector scores NULL.
 """
 
 from __future__ import annotations
 
-import math
 import random
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from xngin_spark.operators.util import fan_out
@@ -31,75 +33,15 @@ from xngin_spark.operators.util import fan_out
 DEC9 = "decimal(25,9)"
 
 
-def _norms(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, norm) with decimal-deterministic accumulation."""
-    e = df.select(F.col(id_col).alias("id"), F.posexplode(vec_col).alias("pos", "x"))
-    return (
-        e.groupBy("id")
-        .agg(
-            F.sqrt(
-                F.sum((F.col("x").cast("double") * F.col("x").cast("double")).cast(DEC9)).cast(
-                    "double"
-                )
-            ).alias("norm")
-        )
-    )
-
-
-def cosine_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "qid",
-) -> DataFrame:
-    """Exact cosine top-k: (qid, vec_id, cosine, rank).
-
-    Plan shape: ONE corpus posexplode (map-side) ⋈ broadcast exploded
-    queries on position → decimal-sum per (qid, id) → window top-k
-    partitioned by qid. The only shuffle is on (qid, id) partial dot
-    products; corpus text/embeddings never re-shuffle. The corpus norm
-    rides the SAME (qid, id) aggregation as the dot product — decimal
-    accumulation is exact and order-independent, so sum(cx²) over a
-    (qid, id) group is bit-identical to the per-id norm a separate pass
-    would compute (r12: this removes the second corpus explode, its
-    groupBy shuffle and the norm re-join that the old two-pass shape
-    paid).
-    """
-    c = fan_out(corpus).select(
-        F.col(id_col).alias("cid"), F.posexplode(vec_col).alias("pos", "cx")
-    )
-    q = queries.select(
-        F.col(query_id_col).alias("qid"), F.posexplode(vec_col).alias("pos", "qx")
-    )
-    dots = (
-        c.join(F.broadcast(q), "pos")
-        .groupBy("qid", "cid")
-        .agg(
-            F.sum((F.col("qx").cast("double") * F.col("cx").cast("double")).cast(DEC9))
-            .cast("double")
-            .alias("dot"),
-            F.sqrt(
-                F.sum(
-                    (F.col("cx").cast("double") * F.col("cx").cast("double")).cast(DEC9)
-                ).cast("double")
-            ).alias("cnorm"),
-        )
-    )
-    qn = _norms(queries, query_id_col, vec_col).select(
-        F.col("id").alias("qid"), F.col("norm").alias("qnorm")
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col("cid"))
-    return (
-        dots.join(F.broadcast(qn), "qid")
-        .withColumn("cosine", F.col("dot") / (F.col("qnorm") * F.col("cnorm")))
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("qid", F.col("cid").alias(id_col), "cosine", "rank")
-    )
+def _same_dims(size_a, size_b, value) -> "F.Column":
+    """``value``, or a runtime error when the two sizes differ. NULL
+    sizes (NULL vectors) fall through to ``value``."""
+    return F.when(
+        size_a != size_b,
+        F.raise_error(
+            F.format_string("cosine: vector dimensions differ (%d vs %d)", size_a, size_b)
+        ),
+    ).otherwise(value)
 
 
 def vec_norm(vec_col) -> "F.Column":
@@ -118,12 +60,87 @@ def vec_norm(vec_col) -> "F.Column":
 
 def vec_dot(a, b) -> "F.Column":
     """Deterministic dot product of two array columns (decimal
-    accumulation, double result)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(DEC9)),
-        F.lit(0).cast(DEC9),
-        lambda acc, x: (acc + x).cast(DEC9),
-    ).cast("double")
+    accumulation, double result). Raises on unequal dimensions."""
+    return _same_dims(
+        F.array_size(a),
+        F.array_size(b),
+        F.aggregate(
+            F.zip_with(a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(DEC9)),
+            F.lit(0).cast(DEC9),
+            lambda acc, x: (acc + x).cast(DEC9),
+        ).cast("double"),
+    )
+
+
+def cosine(a, b) -> "F.Column":
+    """Deterministic cosine of two array columns."""
+    return vec_dot(a, b) / (vec_norm(a) * vec_norm(b))
+
+
+def _top_k(scored: DataFrame, k: int, id_col: str) -> DataFrame:
+    """Per-query top-k of (qid, id, cosine): rank by cosine descending,
+    ties toward the smaller id → (qid, id, cosine, rank)."""
+    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), F.col(id_col))
+    return (
+        scored.select("qid", id_col, "cosine")
+        .withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def cosine_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    k: int = 10,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    query_id_col: str = "qid",
+) -> DataFrame:
+    """Exact cosine top-k: (qid, vec_id, cosine, rank).
+
+    Plan shape: ONE corpus posexplode (map-side) ⋈ broadcast exploded
+    queries on position → decimal-sum per (qid, id) → window top-k
+    partitioned by qid. The only shuffle is on (qid, id) partial dot
+    products; corpus text/embeddings never re-shuffle. Each side's norm
+    and dimension are computed map-side with ``vec_norm`` over the
+    whole vector before the explode; the corpus pair rides the
+    (qid, id) group key and the query pair a broadcast select, so no
+    norm needs its own aggregation. Vectors of unequal dimension raise.
+    """
+    # norm and size in their own select: next to the generator they
+    # would be evaluated once per exploded element instead of per vector
+    c = fan_out(corpus).select(
+        id_col,
+        vec_col,
+        vec_norm(vec_col).alias("cnorm"),
+        F.array_size(vec_col).alias("csize"),
+    ).select(id_col, "cnorm", "csize", F.posexplode(vec_col).alias("pos", "cx"))
+    q = queries.select(
+        F.col(query_id_col).alias("qid"), F.posexplode(vec_col).alias("pos", "qx")
+    )
+    qn = queries.select(
+        F.col(query_id_col).alias("qid"),
+        vec_norm(vec_col).alias("qnorm"),
+        F.array_size(vec_col).alias("qsize"),
+    )
+    dots = (
+        c.join(F.broadcast(q), "pos")
+        .groupBy("qid", id_col, "cnorm", "csize")
+        .agg(
+            F.sum((F.col("qx").cast("double") * F.col("cx").cast("double")).cast(DEC9))
+            .cast("double")
+            .alias("dot"),
+        )
+    )
+    scored = dots.join(F.broadcast(qn), "qid").withColumn(
+        "cosine",
+        _same_dims(
+            F.col("csize"),
+            F.col("qsize"),
+            F.col("dot") / (F.col("qnorm") * F.col("cnorm")),
+        ),
+    )
+    return _top_k(scored, k, id_col)
 
 
 def cosine_dup_pairs(
@@ -168,6 +185,51 @@ def cosine_dup_pairs(
     )
 
 
+def _blocked_pairs(df, threshold, id_col, vec_col, block_col, row_chunk, slabs):
+    """The per-block pair screen shared by the BLAS and grid variants:
+    one shuffle onto ``block_col``, then per block the rows sorted by
+    id, ``slabs(X)`` built once over the block's (n, d) double matrix,
+    and each ``row_chunk``-row slab's (chunk, n) score matrix
+    ``slabs(X)(s, e)`` screened at ``threshold`` on its strict upper
+    triangle → (id_a < id_b, cosine)."""
+    idt = {f.name: f.dataType.simpleString() for f in df.schema.fields}[id_col]
+    out_schema = f"id_a {idt}, id_b {idt}, cosine double"
+
+    def score(pdf):
+        import numpy as np
+        import pandas as pd
+
+        n = len(pdf)
+        if n < 2:
+            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
+                {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
+            )
+        # deterministic intra-block order so pair emission is stable
+        pdf = pdf.sort_values(id_col, kind="mergesort")
+        X = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
+        slab = slabs(X)
+        ids = pdf[id_col].to_numpy()
+        out_a, out_b, out_c = [], [], []
+        for s in range(0, n, row_chunk):
+            G = slab(s, min(s + row_chunk, n))
+            # strict upper triangle in GLOBAL index space: j > i
+            ri, cj = np.nonzero(G >= threshold)
+            keep = cj > (ri + s)
+            ri, cj = ri[keep], cj[keep]
+            out_a.append(ids[ri + s])
+            out_b.append(ids[cj])
+            out_c.append(G[ri, cj])
+        return pd.DataFrame(
+            {
+                "id_a": np.concatenate(out_a),
+                "id_b": np.concatenate(out_b),
+                "cosine": np.concatenate(out_c),
+            }
+        )
+
+    return df.groupBy(block_col).applyInPandas(score, out_schema)
+
+
 def cosine_dup_pairs_blas(
     df: DataFrame,
     threshold: float = 0.3,
@@ -189,45 +251,14 @@ def cosine_dup_pairs_blas(
     in ``row_chunk``-row slabs so a skewed block bounds memory at
     chunk×occupancy doubles instead of occupancy².
     """
-    idt = dict(zip(df.columns, (f.dataType.simpleString() for f in df.schema.fields)))[
-        id_col
-    ]
-    out_schema = f"id_a {idt}, id_b {idt}, cosine double"
 
-    def score(pdf):
+    def gram(X):
         import numpy as np
-        import pandas as pd
 
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cosine": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cosine": "float64"}
-            )
-        # deterministic intra-block order so pair emission is stable
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        X = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
         Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-        ids = pdf[id_col].to_numpy()
-        out_a, out_b, out_c = [], [], []
-        for s in range(0, n, row_chunk):
-            e = min(s + row_chunk, n)
-            G = Xn[s:e] @ Xn.T  # (chunk, n)
-            # strict upper triangle in GLOBAL index space: j > i
-            ri, cj = np.nonzero(G >= threshold)
-            keep = cj > (ri + s)
-            ri, cj = ri[keep], cj[keep]
-            out_a.append(ids[ri + s])
-            out_b.append(ids[cj])
-            out_c.append(G[ri, cj])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a) if out_a else [],
-                "id_b": np.concatenate(out_b) if out_b else [],
-                "cosine": np.concatenate(out_c) if out_c else [],
-            }
-        )
+        return lambda s, e: Xn[s:e] @ Xn.T  # (chunk, n)
 
-    return df.groupBy(block_col).applyInPandas(score, out_schema)
+    return _blocked_pairs(df, threshold, id_col, vec_col, block_col, row_chunk, gram)
 
 
 #: Default quantization grid for the integer-exact cosine screen:
@@ -270,45 +301,18 @@ def cosine_dup_pairs_grid(
     coordinate. Oracle twin: ``grid_cosine_oracle_cte``.
     """
     scale = float(1 << grid_bits)
-    idt = {f.name: f.dataType.simpleString() for f in df.schema.fields}[id_col]
-    out_schema = f"id_a {idt}, id_b {idt}, cosine double"
 
-    def score(pdf):
+    def grid(X):
         import numpy as np
-        import pandas as pd
 
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(
-                {"id_a": [], "id_b": [], "cosine": []}
-            ).astype({"id_a": "int64", "id_b": "int64", "cosine": "float64"})
-        pdf = pdf.sort_values(id_col, kind="mergesort")
-        X = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
         Q = np.floor(X * scale).astype(np.int64)
-        n2 = (Q * Q).sum(axis=1)  # int64, exact
-        ids = pdf[id_col].to_numpy()
-        out_a, out_b, out_c = [], [], []
-        for s in range(0, n, row_chunk):
-            e = min(s + row_chunk, n)
-            D = Q[s:e] @ Q.T  # int64 dots, exact
-            cos = D.astype(np.float64) / np.sqrt(
-                n2[s:e, None].astype(np.float64) * n2[None, :].astype(np.float64)
-            )
-            ri, cj = np.nonzero(cos >= threshold)
-            keep = cj > (ri + s)
-            ri, cj = ri[keep], cj[keep]
-            out_a.append(ids[ri + s])
-            out_b.append(ids[cj])
-            out_c.append(cos[ri, cj])
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a) if out_a else [],
-                "id_b": np.concatenate(out_b) if out_b else [],
-                "cosine": np.concatenate(out_c) if out_c else [],
-            }
+        n2 = (Q * Q).sum(axis=1).astype(np.float64)  # int64 sums, exact
+        # int64 dots, exact; three correctly-rounded double ops after
+        return lambda s, e: (Q[s:e] @ Q.T).astype(np.float64) / np.sqrt(
+            n2[s:e, None] * n2[None, :]
         )
 
-    return df.groupBy(block_col).applyInPandas(score, out_schema)
+    return _blocked_pairs(df, threshold, id_col, vec_col, block_col, row_chunk, grid)
 
 
 def grid_scale_sql(grid_bits: int = GRID_BITS) -> str:
@@ -356,7 +360,8 @@ def cosine_topk_lsh(
     query signature (flip one bit per probe), trading compute for
     recall — the standard knob. Bucketing keys are 8-byte longs; the
     join is bucket-local, so cost follows bucket occupancy (≈ n/2^p),
-    not n·q.
+    not n·q. Candidates score with the decimal cosine recipe →
+    (qid, vec_id, cosine, rank), like ``cosine_topk``.
     """
     if dim is None:
         dim = len(corpus.select(vec_col).first()[0])
@@ -370,61 +375,29 @@ def cosine_topk_lsh(
         F.col("bucket").isNotNull()
     )
     # qnorm rides the BROADCAST side, evaluated once per (query, probe)
-    # row instead of once per candidate pair — the old per-pair form
-    # re-ran the 64-element fold for the same query against every
-    # candidate (r12; expression unchanged, so cosines are bit-equal).
+    # row instead of once per candidate pair (the per-pair form re-ran
+    # the 64-element fold for the same query against every candidate).
     # A full decide-narrow/re-attach restructure (guide §8) was measured
     # interleaved and REVERTED: with one signature per corpus vector a
     # (query, candidate) pair matches at most ONE probed bucket, so
     # there are no duplicate matches to dedup away, and the second
     # corpus scan + candidate broadcast cost 5 -> 7 jobs and ~10% wall.
-    pairs = c.alias("c").join(
+    pairs = c.join(
         F.broadcast(
             q.select(
-                query_id_col,
+                F.col(query_id_col).alias("qid"),
                 "bucket",
                 F.col(vec_col).alias("qvec"),
-                F.sqrt(
-                    F.aggregate(
-                        F.transform(
-                            F.col(vec_col),
-                            lambda a: a.cast("double") * a.cast("double"),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    )
-                ).alias("qnorm"),
+                vec_norm(vec_col).alias("qnorm"),
             )
         ),
         "bucket",
     )
     scored = pairs.withColumn(
         "cosine",
-        F.aggregate(
-            F.zip_with(F.col(vec_col), F.col("qvec"), lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        / (
-            F.sqrt(
-                F.aggregate(
-                    F.transform(F.col(vec_col), lambda a: a.cast("double") * a.cast("double")),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            )
-            * F.col("qnorm")
-        ),
+        vec_dot(F.col(vec_col), F.col("qvec")) / (vec_norm(vec_col) * F.col("qnorm")),
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(F.col("cosine").desc(), F.col(id_col))
-    return (
-        scored.select(query_id_col, id_col, "cosine")
-        .distinct()
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored.select("qid", id_col, "cosine").distinct(), k, id_col)
 
 
 def mmr_select(

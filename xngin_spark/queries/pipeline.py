@@ -1550,9 +1550,7 @@ def knn_cosine_ivf_checked(spark, sf_dir):
     cosines and ranks bit-for-bit. Upgrades the ANN family from
     rows-only (iterative training / recall-bounded tests) to a
     value-checked row; the trained variants keep their recall tests."""
-    from pyspark.sql import Window
-
-    from xngin_spark.operators.similarity import vec_dot, vec_norm
+    from xngin_spark.operators.similarity import _top_k, cosine
 
     emb = T(spark, sf_dir, "embeddings")
     scores = _quadrant_scores_expr()
@@ -1575,16 +1573,9 @@ def knn_cosine_ivf_checked(spark, sf_dir):
         .filter(F.col("ivf_list").isNotNull())
     )
     scored = indexed.join(F.broadcast(q), "ivf_list").withColumn(
-        "cosine",
-        vec_dot(F.col("embedding"), F.col("qvec"))
-        / (vec_norm(F.col("embedding")) * vec_norm(F.col("qvec"))),
+        "cosine", cosine(F.col("embedding"), F.col("qvec"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        scored.select("qid", "vec_id", "cosine")
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 10)
-    )
+    return _top_k(scored, 10, "vec_id")
 
 
 _NPROBE_TARGET = 0.9
@@ -1760,9 +1751,7 @@ def knn_cosine_lsh_checked(spark, sf_dir):
     candidate sets, cosines and ranks bit-for-bit. Production keeps
     random Gaussian planes + multiprobe (knn_cosine_lsh, recall-tested);
     this row value-checks the bucket-join machinery itself."""
-    from pyspark.sql import Window
-
-    from xngin_spark.operators.similarity import vec_dot, vec_norm
+    from xngin_spark.operators.similarity import _top_k, cosine
 
     emb = T(spark, sf_dir, "embeddings")
     bucket = F.expr(
@@ -1777,16 +1766,9 @@ def knn_cosine_lsh_checked(spark, sf_dir):
         "bucket",
     )
     scored = b.join(F.broadcast(q), "bucket").withColumn(
-        "cosine",
-        vec_dot(F.col("embedding"), F.col("qvec"))
-        / (vec_norm(F.col("embedding")) * vec_norm(F.col("qvec"))),
+        "cosine", cosine(F.col("embedding"), F.col("qvec"))
     )
-    w = Window.partitionBy("qid").orderBy(F.col("cosine").desc(), "vec_id")
-    return (
-        scored.select("qid", "vec_id", "cosine")
-        .withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 10)
-    )
+    return _top_k(scored, 10, "vec_id")
 
 
 # 4-codeword 8-dim codebook shared by all 8 PQ subspaces (±0.1 quadrant
@@ -2923,7 +2905,7 @@ def mmr_rerank(spark, sf_dir):
     the loop's arithmetic (0.7*rel - 0.3*maxsim, tie toward smaller id)
     is plain C-double ops in oracle order, so DuckDB's recursive-CTE
     twin reproduces every pick, score and rank bit-for-bit."""
-    from xngin_spark.operators.similarity import mmr_select, vec_dot, vec_norm
+    from xngin_spark.operators.similarity import cosine, mmr_select
 
     emb = T(spark, sf_dir, "embeddings")
     qemb = emb.filter(F.col("vec_id") < 3).select(
@@ -2948,11 +2930,7 @@ def mmr_rerank(spark, sf_dir):
         F.col("pa.qid").alias("qid"),
         F.col("pa.vec_id").alias("a_id"),
         F.col("pb.vec_id").alias("b_id"),
-        F.round(
-            vec_dot(F.col("pa.embedding"), F.col("pb.embedding"))
-            / (vec_norm(F.col("pa.embedding")) * vec_norm(F.col("pb.embedding"))),
-            8,
-        ).alias("sim"),
+        F.round(cosine(F.col("pa.embedding"), F.col("pb.embedding")), 8).alias("sim"),
     )
     sel = mmr_select(cand, pairs, k=10, lam=0.7, mu=0.3)
     return sel.select(

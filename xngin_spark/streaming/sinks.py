@@ -277,7 +277,7 @@ def streaming_vector_ingest_admit(
     contract as the document loop, partition-local file rewrites only.
     """
     from xngin_spark.operators.clustering import ivf_index, ivf_index_update
-    from xngin_spark.operators.similarity import vec_dot, vec_norm
+    from xngin_spark.operators.similarity import cosine
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -314,11 +314,7 @@ def streaming_vector_ingest_admit(
                 ),
                 "ivf_list",
             )
-            .withColumn(
-                "cosine",
-                vec_dot(F.col("qvec"), F.col("cvec"))
-                / (vec_norm("qvec") * vec_norm("cvec")),
-            )
+            .withColumn("cosine", cosine(F.col("qvec"), F.col("cvec")))
             .filter(F.col("cosine") >= threshold)
             .select(F.col("new_id").alias(id_col))
             .distinct()
