@@ -577,3 +577,125 @@ def test_reorder_join_facade_dispatches(spark):
     chain33[5] = Edge("v05", "v06", (("k05", "k06"),), "left")
     with pytest.raises(ValueError, match="exact-DP budget"):
         reorder_join(many33, chain33, measure_ndv=False)
+
+
+# --- the SQL-entry gate's measurement cost (plans/sqlreorder.py) ----------
+
+
+def _jobs_in_group(spark, fn):
+    """``(fn(), number of Spark jobs fn submitted)``, counted by job
+    group through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"reorder-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_engine_sql_gate_measures_in_one_job(spark, sf_dir):
+    """A stock q8 through Engine.sql (the default auto gate) measures
+    its eight vertices in at most one job when its constants are new
+    to the session, and in none when the same text repeats."""
+    import random
+
+    from xngin_spark.engine import Engine
+    from xngin_spark.queries import ORACLE, load_all
+
+    load_all()
+    eng = Engine(sf_dir, spark=spark)
+    day = random.Random().randint(1, 28)
+    text = ORACLE["q8"].replace(
+        "1996-01-01 00:00:00", f"1996-01-{day:02d} 00:00:00"
+    )
+    assert text != ORACLE["q8"]
+    _, first = _jobs_in_group(spark, lambda: eng.sql(text))
+    _, again = _jobs_in_group(spark, lambda: eng.sql(text))
+    assert first <= 1 and again == 0, (first, again)
+
+
+def test_measure_edge_ndv_one_job_matches_per_vertex_aggregates(spark, sf_dir):
+    """The single observed job returns exactly what one
+    ``agg(count, approx_count_distinct...)`` per vertex returns."""
+    from xngin_spark.plans.reorder import measure_edge_ndv
+    from xngin_spark.queries.micro import _q5_join_graph
+
+    vertices, raw = _q5_join_graph(spark, sf_dir)
+    edges = [E(a, b, *on) for a, b, on in raw]
+    got, jobs = _jobs_in_group(
+        spark, lambda: measure_edge_ndv(vertices, edges, cache={})
+    )
+    assert jobs == 1
+    want = {}
+    for v, df in vertices.items():
+        cols = sorted(
+            {l for e in edges if e.a == v for l, _ in e.on}
+            | {r for e in edges if e.b == v for _, r in e.on}
+        )
+        row = df.agg(
+            F.count(F.lit(1)).alias("__rows__"),
+            *[F.approx_count_distinct(c).alias(c) for c in cols],
+        ).first()
+        for c in cols + ["__rows__"]:
+            want[(v, c)] = float(row[c]) or 1.0
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "empty", ["n_nationkey < 0", "false"], ids=["scan", "pruned"]
+)
+def test_measure_edge_ndv_empty_vertex_counts_one_row(spark, sf_dir, empty):
+    """A vertex whose filter matches nothing (read and found empty, or
+    optimized away) reports one row and one distinct key instead of
+    blocking on its observation."""
+    import threading
+
+    from xngin_spark.plans.reorder import measure_edge_ndv
+
+    vertices = {
+        "nation": spark.read.parquet(f"{sf_dir}/nation.parquet").filter(empty),
+        "region": spark.read.parquet(f"{sf_dir}/region.parquet"),
+    }
+    edges = [E("nation", "region", ("n_regionkey", "r_regionkey"))]
+    out: dict = {}
+    t = threading.Thread(
+        target=lambda: out.update(measure_edge_ndv(vertices, edges, cache={})),
+        daemon=True,
+    )
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "measure_edge_ndv blocked on an empty vertex"
+    assert out[("nation", "__rows__")] == 1.0
+    assert out[("nation", "n_regionkey")] == 1.0
+    assert out[("region", "__rows__")] == 5.0
+
+
+def test_auto_gate_measures_q21_without_its_subquery_conjuncts(
+    spark, sf_dir, monkeypatch
+):
+    """q21's EXISTS / NOT EXISTS conjuncts list only l1's attributes
+    as children. The gate leaves subquery conjuncts out of the leaf
+    filters, so the l1 vertex analyzes, the region's NDVs are
+    measured, and the region still declines."""
+    import xngin_spark.plans.sqlreorder as sq
+    from xngin_spark.engine import Engine
+    from xngin_spark.queries import ORACLE, load_all
+
+    load_all()
+    Engine(sf_dir, spark=spark)  # registers the TPC-H views
+    measured = []
+    real = sq.measure_edge_ndv
+
+    def spy(vertices, edges, cache=None):
+        out = real(vertices, edges, cache)
+        measured.append(out)
+        return out
+
+    monkeypatch.setattr(sq, "measure_edge_ndv", spy)
+    text, traces = sq.dphyp_rewrite(spark, ORACLE["q21"], mode="auto")
+    assert text == ORACLE["q21"] and traces == []
+    assert any(("l1", "l_orderkey") in ndv for ndv in measured)

@@ -420,3 +420,30 @@ def test_e2e_xngin_reorder_sysvar(served_engine, monkeypatch):
         assert rows == [["2"]]
         conn2.query(sql)
         assert calls[-1] == (sql, "auto")
+
+
+def test_stmt_prepare_runs_no_spark_job(served_engine, spark):
+    """COM_STMT_PREPARE only analyzes ("nothing executes until
+    COM_STMT_EXECUTE"): the metadata probe of a q5 text with constants
+    new to the session must not run the reorder gate's NDV job."""
+    import random
+    import socket
+
+    from xngin_spark.queries import ORACLE, load_all
+
+    load_all()
+    day = random.Random().randint(2, 28)
+    sql = ORACLE["q5"].replace("1996-01-01 00:00:00", f"1996-01-{day:02d} 00:00:00")
+    sc = spark.sparkContext
+    gid = f"stmt-prepare-{day}-{random.Random().getrandbits(32)}"
+    server_end, client_end = socket.socketpair()
+    stmts: dict = {}
+    sc.setJobGroup(gid, gid)
+    try:
+        served_engine._stmt_prepare(server_end, 0, sql.encode(), stmts, [1])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        server_end.close()
+        client_end.close()
+    assert stmts[1]["sql"] == sql
+    assert sc.statusTracker().getJobIdsForGroup(gid) == []

@@ -140,8 +140,9 @@ class Engine:
     def explain(self, query: str) -> str:
         """Formatted physical plan — the analog of the reference's EXPLAIN
         renderer (doradb-plan/src/explain.rs:38-41)."""
-        return self.sql(query)._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-            self.sql(query)._jdf.queryExecution(), "formatted"
+        df = self.sql(query)
+        return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
+            df._jdf.queryExecution(), "formatted"
         )
 
     def explain_analyze(self, query: str) -> str:

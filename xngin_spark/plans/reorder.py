@@ -246,10 +246,14 @@ def measure_edge_ndv(
     edges: list[Edge],
     cache: dict[tuple[str, str], float] | None = None,
 ) -> dict[tuple[str, str], float]:
-    """Approximate NDV for every join-key column an edge touches — ONE
-    ``approx_count_distinct`` aggregate per vertex (HLL, map-side
-    partials). This is the measured analog of the stats an ANALYZE pass
-    would persist; pass ``cache`` (caller-owned, e.g. keyed per
+    """Approximate NDV for every join-key column an edge touches, plus
+    each vertex's exact row count. Every vertex that misses ``cache`` is
+    measured in ONE single-stage job: each carries ``count(1)`` and an
+    ``approx_count_distinct`` (HLL) per key column as an
+    :class:`~pyspark.sql.Observation`, and their union is written to
+    the ``noop`` sink, so no vertex pays a shuffle aggregate or a job
+    of its own. This is the measured analog of the stats an ANALYZE
+    pass would persist; pass ``cache`` (caller-owned, e.g. keyed per
     dataset) to pay each vertex once per session instead of once per
     query. Without it the naive max-base-rows key-domain guess
     mis-ranks low-cardinality equi-edges (e.g. a 25-value nationkey
@@ -261,48 +265,42 @@ def measure_edge_ndv(
     orders to one year), and a different query reusing the cache with a
     different filter on the same table name must re-measure, not reuse
     stale cardinalities. The RETURNED dict is name-keyed for the
-    current graph (what goo_order/dp_order consume)."""
+    current graph (what goo_order/dp_order consume). An empty vertex
+    counts as one row and one distinct value."""
+    from functools import reduce
+
+    from pyspark.sql import Observation
+
     cache = cache if cache is not None else {}
-    touched: set[str] = set()
     want: dict[str, set[str]] = {}
     for e in edges:
         for v, c in ((e.a, [l for l, _ in e.on]), (e.b, [r for _, r in e.on])):
-            touched.add(v)
             want.setdefault(v, set()).update(c)
-    fp = {v: plan_fingerprint(vertices[v]) for v in touched}
+    fp = {v: plan_fingerprint(vertices[v]) for v in want}
     need: dict[str, set[str]] = {}
     for v, cols in want.items():
         missing = {c for c in cols if (fp[v], c) not in cache}
         if missing or (fp[v], "__rows__") not in cache:
             need[v] = missing
-    if not need:
-        return {
-            (v, c): cache[(fp[v], c)]
-            for v, cols in want.items()
-            for c in cols | {"__rows__"}
-        }
-    # one independent job per vertex — submit them concurrently so the
-    # scheduler interleaves their stages (per-job fixed overhead
-    # dominates these tiny HLL aggregates; measured 3.5s -> ~1s for the
-    # six-vertex q5 graph)
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _one(item):
-        v, cols = item
-        return v, cols, (
-            vertices[v].agg(
-                F.count(F.lit(1)).alias("__rows__"),
-                *[F.approx_count_distinct(c).alias(c) for c in sorted(cols)],
+    if need:
+        legs, seen = [], []
+        for v, cols in need.items():
+            obs, cols = Observation(), sorted(cols)
+            legs.append(
+                vertices[v]
+                .observe(obs, F.count(F.lit(1)), *map(F.approx_count_distinct, cols))
+                .select()
             )
-        ).first()
-
-    with ThreadPoolExecutor(max_workers=min(len(need), 8)) as ex:
-        for v, cols, row in ex.map(_one, need.items()):
-            # exact row count rides along for free in the same job —
-            # goo_join prefers it over the sizeInBytes/width guess
-            cache[(fp[v], "__rows__")] = float(row["__rows__"]) or 1.0
-            for c in cols:
-                cache[(fp[v], c)] = float(row[c]) or 1.0
+            # the exact row count rides along for free in the same job
+            # — goo_join prefers it over the sizeInBytes/width guess
+            seen.append((v, ["__rows__", *cols], obs))
+        reduce(DataFrame.unionAll, legs).write.format("noop").mode(
+            "overwrite"
+        ).save()
+        for v, names, obs in seen:
+            # metrics come back in the order they were observed
+            for c, x in zip(names, obs.get.values()):
+                cache[(fp[v], c)] = float(x) or 1.0
     return {
         (v, c): cache[(fp[v], c)]
         for v, cols in want.items()

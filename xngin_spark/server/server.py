@@ -261,7 +261,9 @@ class MySQLServer:
                 from xngin_spark.server import compat
 
                 rewritten = compat.rewrite(probe)
-                df = self.engine.sql(rewritten) if rewritten else None
+                # the schema does not depend on join order, and the
+                # reorder gate would run its NDV job here
+                df = self.engine.sql(rewritten, reorder=False) if rewritten else None
                 if df is not None and df.columns:
                     fields = list(df.schema.fields)
             except Exception:
