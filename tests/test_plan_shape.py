@@ -234,3 +234,23 @@ def test_runtime_bloom_filter_injection_fires(spark, sf_dir):
             spark.conf.set(k, v)
     assert "bloom_filter_agg" in plan, "no bloom filter built on the dim side"
     assert "might_contain" in plan.lower() or "BloomFilter" in plan, plan[:500]
+
+
+def test_codegen_cache_holds_a_repeated_working_set(spark):
+    """The session's compiled-class cache outgrows Spark's default of
+    100 classes: a second round of the same 150 distinct statements
+    compiles no new class."""
+    jvm = spark.sparkContext._jvm
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def one_round() -> int:
+        before = compiled.getCount()
+        for i in range(150):
+            spark.range(8, numPartitions=1).selectExpr(
+                f"id * {i + 2} + {i} AS c{i}"
+            ).filter(f"c{i} % 3 <> {i % 3}").collect()
+        return compiled.getCount() - before
+
+    first = one_round()
+    assert first > 100, first
+    assert one_round() == 0

@@ -787,7 +787,7 @@ def test_streaming_rollup_batch_replay_converges(spark, tmp_path):
     """The epoch protocol's exactly-once claim, tested directly:
     re-applying a batch (foreachBatch replay after a crash-before-
     commit) must leave the rollup state identical, not double-count."""
-    from xngin_spark.sources.dml import agg_snapshot, cdc_changes
+    from xngin_spark.sources.dml import agg_snapshot, agg_state_additive, cdc_changes
     from xngin_spark.streaming.sinks import (
         _latest_rollup_epoch,
         apply_cdc_rollup_batch,
@@ -804,9 +804,7 @@ def test_streaming_rollup_batch_replay_converges(spark, tmp_path):
         + [(100, "g9", 1.5)],
         schema,
     )
-    agg_snapshot(v1, "g", "v").select(
-        "g", "cnt", F.col("total_dec").cast("decimal(30,6)").alias("total_dec")
-    ).write.parquet(f"{rollup}/epoch=-1")
+    agg_state_additive(v1, "g", "v").write.parquet(f"{rollup}/epoch=-1")
     changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint()
     b0 = changes.filter(F.col("k") % 2 == 0)
     b1 = changes.filter(F.col("k") % 2 == 1)
@@ -834,16 +832,14 @@ def test_streaming_rollup_batch_replay_converges(spark, tmp_path):
 
 
 def test_streaming_rollup_inbatch_duplicate_rows_collapse(spark, tmp_path):
-    from xngin_spark.sources.dml import agg_snapshot, cdc_changes
+    from xngin_spark.sources.dml import agg_state_additive, cdc_changes
     from xngin_spark.streaming.sinks import apply_cdc_rollup_batch
 
     rollup = str(tmp_path / "rollup")
     schema = "k bigint, g string, v double"
     v1 = spark.createDataFrame([(1, "a", 2.0), (2, "a", 3.0)], schema)
     v2 = spark.createDataFrame([(1, "a", 2.0), (2, "a", 5.0)], schema)
-    agg_snapshot(v1, "g", "v").select(
-        "g", "cnt", F.col("total_dec").cast("decimal(30,6)").alias("total_dec")
-    ).write.parquet(f"{rollup}/epoch=-1")
+    agg_state_additive(v1, "g", "v").write.parquet(f"{rollup}/epoch=-1")
     changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"])
     doubled = changes.unionByName(changes)  # duplicate delivery in-batch
     apply_cdc_rollup_batch(doubled, 0, rollup, "g", "v", ["k"])
@@ -859,16 +855,14 @@ def test_streaming_rollup_prunes_unreachable_epochs(spark, tmp_path):
     be of b, which re-reads the predecessor) and is deleted."""
     import os
 
-    from xngin_spark.sources.dml import agg_snapshot, cdc_changes
+    from xngin_spark.sources.dml import agg_state_additive, cdc_changes
     from xngin_spark.streaming.sinks import apply_cdc_rollup_batch
 
     rollup = str(tmp_path / "rollup")
     schema = "k bigint, g string, v double"
     v1 = spark.createDataFrame([(i, "a", 1.0) for i in range(9)], schema)
     v2 = spark.createDataFrame([(i, "a", 1.0) for i in range(12)], schema)
-    agg_snapshot(v1, "g", "v").select(
-        "g", "cnt", F.col("total_dec").cast("decimal(30,6)").alias("total_dec")
-    ).write.parquet(f"{rollup}/epoch=-1")
+    agg_state_additive(v1, "g", "v").write.parquet(f"{rollup}/epoch=-1")
     changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint()
     for b in range(3):
         apply_cdc_rollup_batch(
@@ -926,6 +920,77 @@ def test_maintain_agg_insert_only_never_touches_snapshot(spark):
     assert sorted(map(tuple, out2.select(*cols).collect())) == sorted(
         map(tuple, expect.select(*cols).collect())
     )
+
+
+def _jobs_in_group(spark, fn):
+    """``(fn(), number of Spark jobs fn submitted)``, counted by job
+    group through the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    gid = f"maint-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, gid)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(gid))
+
+
+def test_maintain_agg_insert_only_probes_nothing_and_skips_snapshot(spark, tmp_path):
+    """assume_destructive=None on an append-only feed: building the
+    plan submits no probe job, and once it ran, the final adaptive plan
+    holds no scan of the parquet snapshot — the broadcast side of the
+    touched-group semi-join came back empty and the scan was dropped."""
+    from xngin_spark.sources.dml import agg_snapshot, cdc_changes, maintain_agg
+
+    schema = "k bigint, g string, v double"
+    v1_rows = [(i, f"g{i % 4}", float(i)) for i in range(20)]
+    v1 = spark.createDataFrame(v1_rows, schema)
+    v2_rows = v1_rows + [(100, "g1", -5.0), (101, "g9", 7.0)]
+    spark.createDataFrame(v2_rows, schema).write.parquet(str(tmp_path / "v2"))
+    v2 = spark.read.parquet(str(tmp_path / "v2"))
+    changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint()
+    out, jobs = _jobs_in_group(
+        spark, lambda: maintain_agg(agg_snapshot(v1, "g", "v"), changes, v2, "g", "v")
+    )
+    assert jobs == 0
+    cols = ["g", "cnt", "total_dec", "min_val", "max_val"]
+    assert sorted(map(tuple, out.select(*cols).collect())) == sorted(
+        map(tuple, agg_snapshot(v2, "g", "v").select(*cols).collect())
+    )
+    out.collect()
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in final and "FileScan" not in final, plan
+    assert "FileScan" in plan  # the initial plan did hold the scan
+
+
+def test_streaming_rollup_batch_submits_at_most_three_jobs(spark, tmp_path):
+    """One micro-batch of a mixed feed (inserts, deletes, updates,
+    in-batch duplicates) costs at most three jobs: no barrier, no
+    schema-inference read, one aggregate."""
+    from xngin_spark.sources.dml import agg_state_additive, cdc_changes
+    from xngin_spark.streaming.sinks import apply_cdc_rollup_batch
+
+    rollup = str(tmp_path / "rollup")
+    schema = "k bigint, g string, v double"
+    v1 = spark.createDataFrame([(i, f"g{i % 3}", float(i)) for i in range(12)], schema)
+    v2 = spark.createDataFrame(
+        [(i, f"g{i % 4}", float(i) + 1.0) for i in range(12) if i % 5]
+        + [(50, "g0", 2.5)],
+        schema,
+    )
+    agg_state_additive(v1, "g", "v").write.parquet(f"{rollup}/epoch=-1")
+    changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint(eager=True)
+    batch = changes.unionByName(changes.filter(F.col("k") < 4))
+    jobs = [
+        _jobs_in_group(
+            spark, lambda: apply_cdc_rollup_batch(batch, b, rollup, "g", "v", ["k"])
+        )[1]
+        for b in range(2)
+    ]
+    assert max(jobs) <= 3, jobs
 
 
 def test_maintain_agg_mixed_feed_insert_extrema_still_right(spark):
@@ -1100,7 +1165,7 @@ def test_maintain_agg_null_group_is_a_group(spark):
 
 def test_maintain_agg_additive_null_group(spark):
     from xngin_spark.sources.dml import (
-        agg_snapshot,
+        agg_state_additive,
         cdc_changes,
         maintain_agg_additive,
     )
@@ -1111,7 +1176,7 @@ def test_maintain_agg_additive_null_group(spark):
         [(1, None, 2.0), (3, None, 5.0), (2, "a", 3.0)], schema
     )
     out = maintain_agg_additive(
-        agg_snapshot(v1, "g", "v"),
+        agg_state_additive(v1, "g", "v"),
         cdc_changes(v1, v2, ["k"], cols=["g", "v"]),
         "g",
         "v",
@@ -1123,6 +1188,47 @@ def test_maintain_agg_additive_null_group(spark):
     assert got == [(None, 2, 7.0), ("a", 1, 3.0)]
 
 
+def test_maintain_agg_additive_all_null_group_sums_to_null(spark):
+    """A group whose values are all NULL reads total_dec NULL, as SQL
+    SUM and agg_snapshot do, not 0 — also after its last non-NULL value
+    is deleted and through the multi-measure twin."""
+    from xngin_spark.sources.dml import (
+        agg_snapshot,
+        agg_state_additive,
+        agg_state_additive_multi,
+        cdc_changes,
+        maintain_agg_additive,
+        maintain_agg_additive_multi,
+    )
+
+    schema = "k bigint, g string, v double"
+    v1 = spark.createDataFrame([(1, "a", None), (2, "b", 3.0)], schema)
+    v2 = spark.createDataFrame(
+        [(1, "a", None), (2, "b", 3.0), (3, "a", None)], schema
+    )
+    v3 = spark.createDataFrame([(1, "a", None), (3, "a", None), (4, "b", None)], schema)
+    cols = ["g", "cnt", "total_dec"]
+    for old, new in ((v1, v2), (v1, v3)):
+        out = maintain_agg_additive(
+            agg_state_additive(old, "g", "v"),
+            cdc_changes(old, new, ["k"], cols=["g", "v"]),
+            "g",
+            "v",
+        )
+        got = sorted(map(tuple, out.select(*cols).collect()))
+        want = sorted(map(tuple, agg_snapshot(new, "g", "v").select(*cols).collect()))
+        assert got == want
+    assert ("a", 2, None) in got and ("b", 1, None) in got
+    multi = maintain_agg_additive_multi(
+        agg_state_additive_multi(v1, "g", ["v"]),
+        cdc_changes(v1, v3, ["k"], cols=["g", "v"]),
+        "g",
+        ["v"],
+    )
+    got = multi.select("g", "cnt", "total_dec_v", "cnt_v").collect()
+    assert sorted(map(tuple, got)) == [("a", 2, None, 0), ("b", 1, None, 0)]
+
+
 def test_streaming_rollup_random_batches_and_replays(spark, tmp_path):
     """Property test of the epoch protocol: random mutation stream cut
     into random batches, with random REPLAYS interleaved after each
@@ -1130,7 +1236,7 @@ def test_streaming_rollup_random_batches_and_replays(spark, tmp_path):
     or replay pattern."""
     import random
 
-    from xngin_spark.sources.dml import agg_snapshot, cdc_changes
+    from xngin_spark.sources.dml import agg_snapshot, agg_state_additive, cdc_changes
     from xngin_spark.streaming.sinks import (
         _latest_rollup_epoch,
         apply_cdc_rollup_batch,
@@ -1156,9 +1262,7 @@ def test_streaming_rollup_random_batches_and_replays(spark, tmp_path):
     rollup = str(tmp_path / "rollup")
     v1 = spark.createDataFrame(v1_rows, schema)
     v2 = spark.createDataFrame(v2_rows, schema)
-    agg_snapshot(v1, "g", "v").select(
-        "g", "cnt", F.col("total_dec").cast("decimal(30,6)").alias("total_dec")
-    ).write.parquet(f"{rollup}/epoch=-1")
+    agg_state_additive(v1, "g", "v").write.parquet(f"{rollup}/epoch=-1")
     changes = cdc_changes(v1, v2, ["k"], cols=["g", "v"]).localCheckpoint()
     nb = 5
     for b in range(nb):

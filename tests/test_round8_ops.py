@@ -665,7 +665,11 @@ def test_streaming_rollup_cold_restart_converges(spark, tmp_path):
     import subprocess
     import sys
 
-    from xngin_spark.sources.dml import agg_snapshot, cdc_changes
+    from xngin_spark.sources.dml import (
+        agg_snapshot,
+        agg_state_additive,
+        cdc_changes,
+    )
     from xngin_spark.streaming.sinks import (
         _latest_rollup_epoch,
         streaming_agg_maintain,
@@ -693,9 +697,7 @@ def test_streaming_rollup_cold_restart_converges(spark, tmp_path):
         changes.filter(F.col("k") % 3 == i).coalesce(1).write.mode(
             "append"
         ).parquet(delta)
-    agg_snapshot(v1, "g", "v").select(
-        "g", "cnt", F.col("total_dec").cast("decimal(30,6)").alias("total_dec")
-    ).write.parquet(os.path.join(rollup, "epoch=-1"))
+    agg_state_additive(v1, "g", "v").write.parquet(os.path.join(rollup, "epoch=-1"))
 
     crash_script = f"""
 import sys
@@ -860,7 +862,11 @@ def test_streaming_rollup_multi_replay_and_recompute(spark, tmp_path):
     """Multi-measure epoch maintenance: replays converge and the final
     epoch equals the multi-measure recompute — k measures, one merge
     per batch."""
-    from xngin_spark.sources.dml import agg_snapshot_multi, cdc_changes
+    from xngin_spark.sources.dml import (
+        agg_snapshot_multi,
+        agg_state_additive_multi,
+        cdc_changes,
+    )
     from xngin_spark.streaming.sinks import (
         _latest_rollup_epoch,
         apply_cdc_rollup_batch_multi,
@@ -882,12 +888,9 @@ def test_streaming_rollup_multi_replay_and_recompute(spark, tmp_path):
         + [(200, "g7", 1.0, 9.5)],
         schema,
     )
-    agg_snapshot_multi(v1, "g", ["a", "b"]).select(
-        "g",
-        "cnt",
-        F.col("total_dec_a").cast("decimal(30,6)").alias("total_dec_a"),
-        F.col("total_dec_b").cast("decimal(30,6)").alias("total_dec_b"),
-    ).write.parquet(f"{rollup}/epoch=-1")
+    agg_state_additive_multi(v1, "g", ["a", "b"]).write.parquet(
+        f"{rollup}/epoch=-1"
+    )
     changes = cdc_changes(v1, v2, ["k"], cols=["g", "a", "b"]).localCheckpoint()
     b0 = changes.filter(F.col("k") % 2 == 0)
     b1 = changes.filter(F.col("k") % 2 == 1)

@@ -1483,10 +1483,10 @@ def incremental_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintain_agg): the snapshot_diff scenario's delta (deletes %97,
     repricings %89, re-inserts %101) applied to a per-priority
     (count, decimal-sum, min, max) rollup WITHOUT recomputing it —
-    additive measures maintained from the delta alone (signed image
-    adjustments + one full-outer merge on the group key), min/max
-    recomputed only for delta-touched groups via a left-semi join
-    against the new snapshot. The oracle is the full recompute over
+    the old rollup's rows and the delta's signed images merged in one
+    aggregate, min/max recomputed only for the groups that lost a row,
+    whose snapshot rows (a left-semi join against the new snapshot)
+    join the same aggregate. The oracle is the full recompute over
     the new snapshot, so the value hash proves maintenance ≡
     recompute end-to-end, decimal-exact. The HTAP story the
     reference's CDC surface points at: the delta is consumed, the
@@ -1509,9 +1509,8 @@ def incremental_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # materialize the delta once: a real CDC feed ARRIVES materialized,
-    # and maintain_agg consumes it in several branches (adjustments,
-    # insert extrema, destructive probe, affected groups) — without
-    # this the full-outer diff join re-executes per branch
+    # and maintain_agg's one aggregate reads it twice (both row images
+    # in one pass, and the groups that lost a row)
     changes = cdc_changes(
         v1, v2, ["o_orderkey"], cols=["o_orderpriority", "o_totalprice"]
     ).localCheckpoint(eager=True)
@@ -1555,8 +1554,8 @@ def orders_stream_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING twin of incremental_agg_maintain — a maintained
     materialized view: the snapshot delta arrives as a CDC change
     STREAM in three chunk files (maxFilesPerTrigger=1 → three
-    micro-batches), each batch folds its signed per-group adjustments
-    into the epoch-versioned persisted rollup
+    micro-batches), each batch folds its signed images into the
+    epoch-versioned persisted rollup in one aggregate
     (streaming/sinks.streaming_agg_maintain), and the final epoch must
     equal the full recompute over the new snapshot — the oracle IS
     that recompute, so the hash proves stream-maintenance ≡ batch
@@ -1567,7 +1566,7 @@ def orders_stream_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from xngin_spark.sources.dml import agg_snapshot, cdc_changes
+    from xngin_spark.sources.dml import agg_state_additive, cdc_changes
     from xngin_spark.streaming.sinks import (
         _latest_rollup_epoch,
         streaming_agg_maintain,
@@ -1599,26 +1598,21 @@ def orders_stream_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta_dir = os.path.join(root, "delta")
     rollup = os.path.join(root, "rollup")
     ckpt = os.path.join(root, "ckpt")
-    key = "spark.sql.shuffle.partitions"
-    old_sp = spark.conf.get(key)
+    # every read below names its schema: an inferred parquet read
+    # costs one job
+    seed = agg_state_additive(v1, "o_orderpriority", "o_totalprice")
     try:
         # three delivery chunks -> three micro-batches
         for i in range(3):
             changes.filter(F.col("o_orderkey") % 3 == i).coalesce(1).write.mode(
                 "append"
             ).parquet(delta_dir)
-        agg_snapshot(v1, "o_orderpriority", "o_totalprice").select(
-            "o_orderpriority",
-            "cnt",
-            F.col("total_dec").cast("decimal(30,6)").alias("total_dec"),
-        ).write.parquet(os.path.join(rollup, "epoch=-1"))
-        schema = spark.read.parquet(delta_dir).schema
+        seed.write.parquet(os.path.join(rollup, "epoch=-1"))
         stream = (
-            spark.readStream.schema(schema)
+            spark.readStream.schema(changes.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(delta_dir)
         )
-        spark.conf.set(key, "8")
         streaming_agg_maintain(
             stream,
             rollup,
@@ -1630,7 +1624,8 @@ def orders_stream_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         final = _latest_rollup_epoch(rollup)
         out = (
-            spark.read.parquet(os.path.join(rollup, f"epoch={final}"))
+            spark.read.schema(seed.schema)
+            .parquet(os.path.join(rollup, f"epoch={final}"))
             .select(
                 "o_orderpriority",
                 "cnt",
@@ -1639,7 +1634,6 @@ def orders_stream_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
     finally:
-        spark.conf.set(key, old_sp)
         shutil.rmtree(root, ignore_errors=True)
     return out.orderBy("o_orderpriority")
 

@@ -120,6 +120,14 @@ def get_spark(
         # collection headroom. On a real cluster the streaming twins
         # write parquet/Kafka sinks and this limit never carries data.
         .config("spark.driver.maxResultSize", "8g")
+        # Compiled-class cache: Spark keeps 100 generated classes by
+        # default, fewer than one pass of the benchmark's statements
+        # compiles, so every warm pass recompiled (and re-JITted) most
+        # of them. Measured at sf0.01: a first pass compiles 159
+        # (cdc_stream), 175 (tpch_wire) and 422 (pipeline_ops) distinct
+        # classes, and tpch_wire's fresh constants add about 15 per
+        # pass; 4000 holds all three with room for a long-lived server.
+        .config("spark.sql.codegen.cache.maxEntries", "4000")
         # --- quieter driver ---
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "false")

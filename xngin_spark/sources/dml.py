@@ -594,7 +594,15 @@ def cdc_changes(
     )
 
 
+
+
 _AGG_DEC = "decimal(25,6)"
+# fixed carrier type for the additive state's decimal sum: decimal
+# addition widens precision per operand, so an epoch-chained rollup
+# would creep to decimal(38,6); pinning 30,6 (24 integer digits) keeps
+# the state schema stable across arbitrarily many maintenance rounds,
+# exactly.
+_AGG_STATE_DEC = "decimal(30,6)"
 
 
 def agg_snapshot(df: DataFrame, group_col: str, val_col: str) -> DataFrame:
@@ -611,6 +619,201 @@ def agg_snapshot(df: DataFrame, group_col: str, val_col: str) -> DataFrame:
     )
 
 
+def agg_snapshot_multi(
+    df: DataFrame, group_col: str, val_cols: list[str]
+) -> DataFrame:
+    """Multi-measure rollup shape: one shared cnt plus, per measure c,
+    (total_dec_{c} DECIMAL, min_{c}, max_{c}) — all measures in ONE
+    aggregation pass."""
+    aggs = [F.count(F.lit(1)).alias("cnt")]
+    for c in val_cols:
+        aggs += [
+            F.sum(F.col(c).cast(_AGG_DEC)).alias(f"total_dec_{c}"),
+            F.min(c).alias(f"min_{c}"),
+            F.max(c).alias(f"max_{c}"),
+        ]
+    return df.groupBy(group_col).agg(*aggs)
+
+
+def agg_state_additive_multi(
+    df: DataFrame, group_col: str, val_cols: list[str]
+) -> DataFrame:
+    """The additive state :func:`maintain_agg_additive_multi` maintains,
+    built from a snapshot (the ``epoch=-1`` seed of
+    streaming/sinks.streaming_agg_maintain_multi): (group, cnt BIGINT,
+    total_dec_{c} DECIMAL(30,6) per measure, cnt_{c} BIGINT per
+    measure). cnt_{c} counts the group's non-NULL values of c, so a sum
+    over zero of them reads NULL, as SQL SUM does."""
+    return df.groupBy(group_col).agg(
+        F.count(F.lit(1)).alias("cnt"),
+        *[
+            F.sum(F.col(c).cast(_AGG_STATE_DEC))
+            .cast(_AGG_STATE_DEC)
+            .alias(f"total_dec_{c}")
+            for c in val_cols
+        ],
+        *[F.count(c).alias(f"cnt_{c}") for c in val_cols],
+    )
+
+
+def agg_state_additive(df: DataFrame, group_col: str, val_col: str) -> DataFrame:
+    """Single-measure :func:`agg_state_additive_multi`: (group, cnt,
+    total_dec DECIMAL(30,6), cnt_val) — the state
+    :func:`maintain_agg_additive` maintains and the ``epoch=-1`` seed of
+    streaming/sinks.streaming_agg_maintain."""
+    return agg_state_additive_multi(df, group_col, [val_col]).withColumnsRenamed(
+        _from_k1(val_col)
+    )
+
+
+def _to_k1(val_col: str) -> dict[str, str]:
+    """Single-measure column names -> their names in the k=1 case of
+    the multi-measure functions."""
+    v = val_col
+    return {
+        "total_dec": f"total_dec_{v}",
+        "cnt_val": f"cnt_{v}",
+        "min_val": f"min_{v}",
+        "max_val": f"max_{v}",
+    }
+
+
+def _from_k1(val_col: str) -> dict[str, str]:
+    return {multi: single for single, multi in _to_k1(val_col).items()}
+
+
+def _union_aggregate(
+    state: DataFrame,
+    changes: DataFrame,
+    keys: list[str],
+    val_cols: list[str] = (),
+    count_col: str = "cnt",
+    extrema: bool = False,
+    new_snap: DataFrame | None = None,
+    skip_null: str | None = None,
+) -> DataFrame:
+    """The one kernel behind every maintained CDC state: the state rows
+    and the delta's signed row images (+new image for insert/update,
+    −old image for delete/update, so a group-moving update debits one
+    group and credits another) are unioned and grouped by ``keys`` —
+    ONE aggregate per maintenance round, partial-merged map-side, with
+    no join against the state. Grouping treats a NULL key as a group
+    like any other, so nothing here needs a null-safe join. Rows whose
+    ``count_col`` reaches zero drop. Change rows whose ``skip_null``
+    image field is NULL are skipped (COUNT DISTINCT semantics).
+
+    Per measure c the state carries ``total_dec_{c}`` and either
+    ``cnt_{c}``, its non-NULL count (additive, the default: the sum is
+    carried in DECIMAL(30,6) and reads NULL when the count is 0, as
+    SQL SUM does), or ``min_{c}``/``max_{c}`` (``extrema``). Inserts
+    only grow extrema, so new images merge with the state's by min/max.
+    A group that loses an old image may shrink: its snapshot rows —
+    ``new_snap`` semi-joined with the old images' groups, broadcast —
+    join the SAME union as a third row kind, and a per-group ``hit``
+    flag picks their recomputed extrema, even NULL ones (an all-NULL
+    survivor set must overwrite stale extrema). When the delta removes
+    nothing, the broadcast side is empty and adaptive execution drops
+    the snapshot scan at runtime. ``extrema`` without ``new_snap``
+    merges inserts only; the caller guards that the feed is
+    append-only."""
+
+    def image(side: str, sign: int) -> Column:
+        ops = ("insert", "update") if sign > 0 else ("delete", "update")
+        keep = F.col("op").isin(*ops)
+        if skip_null:
+            keep &= F.col(f"{side}.{skip_null}").isNotNull()
+        fields = [F.col(f"{side}.{k}").alias(k) for k in keys]
+        fields.append(F.lit(sign).cast("bigint").alias("__n"))
+        for c in val_cols:
+            v = F.col(f"{side}.{c}")
+            dv = v.cast(_AGG_DEC if extrema else _AGG_STATE_DEC)
+            fields.append((dv if sign > 0 else -dv).alias(f"__s_{c}"))
+            if extrema:
+                grow = F.lit(sign > 0)
+                fields += [
+                    F.when(grow, v).alias(f"__lo_{c}"),
+                    F.when(grow, v).alias(f"__hi_{c}"),
+                ]
+            else:
+                nn = v.isNotNull().cast("bigint") * sign
+                fields.append(nn.alias(f"__nn_{c}"))
+        if new_snap is not None:
+            fields.append(F.lit(sign < 0).alias("__hit"))
+        return F.when(keep, F.struct(*fields))
+
+    cols = [*keys, F.col(count_col).alias("__n")]
+    for c in val_cols:
+        cols.append(F.col(f"total_dec_{c}").alias(f"__s_{c}"))
+        if extrema:
+            cols += [
+                F.col(f"min_{c}").alias(f"__lo_{c}"),
+                F.col(f"max_{c}").alias(f"__hi_{c}"),
+            ]
+        else:
+            # an epoch read with its known schema yields NULL for a
+            # column its files lack: fail instead of mis-presenting sums
+            cols.append(
+                F.coalesce(
+                    F.col(f"cnt_{c}"),
+                    F.raise_error(F.lit(f"maintained state lacks cnt_{c}")),
+                ).alias(f"__nn_{c}")
+            )
+    # both images of a change row come out of one pass over the delta
+    images = changes.select(
+        F.inline(F.array(image("_new", 1), image("_old", -1)))
+    ).filter(F.col("__n").isNotNull())
+    rows = state.select(*cols).unionByName(images, allowMissingColumns=True)
+    if new_snap is not None:
+        (g,) = keys
+        # no distinct on the broadcast side: the semi-join's hash
+        # relation keeps one entry per key anyway, and an aggregate
+        # there adds a shuffle plus a runtime bloom-filter job
+        gone = changes.filter(F.col("op").isin("delete", "update")).select(
+            F.col(f"_old.{g}").alias(g)
+        )
+        # a PLAIN equi semi-join for non-NULL groups (eqNullSafe would
+        # disable dynamic partition pruning on a group-partitioned
+        # snapshot); the NULL group rides its own branch, read only
+        # when the delta removed a NULL-group row
+        hit = new_snap.join(
+            F.broadcast(gone.filter(F.col(g).isNotNull())), g, "left_semi"
+        ).unionByName(
+            new_snap.filter(F.col(g).isNull()).join(
+                F.broadcast(gone.filter(F.col(g).isNull())),
+                F.lit(True),
+                "left_semi",
+            )
+        )
+        recompute = hit.select(
+            g,
+            F.lit(0).cast("bigint").alias("__n"),
+            *[F.col(c).alias(f"__r_{c}") for c in val_cols],
+        )
+        rows = rows.unionByName(recompute, allowMissingColumns=True)
+
+    sums, extra = [], []
+    for c in val_cols:
+        if extrema:
+            s = F.sum(f"__s_{c}").cast(state.schema[f"total_dec_{c}"].dataType)
+            lo, hi = F.min(f"__lo_{c}"), F.max(f"__hi_{c}")
+            if new_snap is not None:
+                lo = F.when(F.max("__hit"), F.min(f"__r_{c}")).otherwise(lo)
+                hi = F.when(F.max("__hit"), F.max(f"__r_{c}")).otherwise(hi)
+            # min IS NULL exactly when the group holds no non-NULL value
+            sums.append(F.when(lo.isNotNull(), s).alias(f"total_dec_{c}"))
+            extra += [lo.alias(f"min_{c}"), hi.alias(f"max_{c}")]
+        else:
+            s = F.sum(f"__s_{c}").cast(_AGG_STATE_DEC)
+            nn = F.sum(f"__nn_{c}")
+            sums.append(F.when(nn > 0, s).alias(f"total_dec_{c}"))
+            extra.append(nn.alias(f"cnt_{c}"))
+    return (
+        rows.groupBy(*keys)
+        .agg(F.sum("__n").alias(count_col), *sums, *extra)
+        .filter(F.col(count_col) > 0)
+    )
+
+
 def maintain_agg(
     agg_old: DataFrame,
     changes: DataFrame,
@@ -622,197 +825,78 @@ def maintain_agg(
     """Incrementally maintain an :func:`agg_snapshot` rollup under a
     :func:`cdc_changes` delta — the materialized-view-maintenance
     capability a CDC feed exists to enable, without recomputing the
-    aggregate from the new snapshot.
+    aggregate from the new snapshot. The k=1 case of
+    :func:`maintain_agg_multi`.
 
-    Cost model (the whole point): the additive measures (cnt, decimal
-    sum) are maintained from the DELTA ALONE — signed per-group
-    adjustments (+new image for insert/update, −old image for
-    delete/update, so a group-moving update debits one group and
-    credits another), merged into the old rollup by one full-outer
-    join on the group key. min/max split by op kind: INSERTS only grow
-    extrema, so insert deltas merge additively (least/greatest) with
-    zero snapshot access — an append-only feed (the 100 TB ingest
-    common case) never reads the base table at all. DELETES/UPDATES
-    can shrink extrema and force a recompute — but only for the groups
-    destructive ops touch (delta-sized left-semi join against the new
-    snapshot; with a group-partitioned layout that scan partition-
-    prunes to the affected groups). At 100 TB a delta touching 0.1%
-    of groups costs delta + 0.1%-of-table, never a full recompute.
-    ``assume_destructive``: None (default) probes the delta with one
-    tiny job; pass False for a known append-only feed (skips both the
-    probe and the recompute join entirely) or True for a known-mixed
-    CDC feed. Groups whose count reaches zero are dropped (never
-    emitted with NULL measures).
+    Cost model (the whole point): ONE aggregate over the union of the
+    old rollup's rows and the delta's signed images (see
+    ``_union_aggregate``) — no probe job, no join against the rollup.
+    cnt and the decimal sum come from the delta alone; inserts only
+    grow extrema, so an append-only feed (the 100 TB ingest common
+    case) never reads the base table at all: the snapshot side is a
+    broadcast semi-join on the groups that lost a row, and when there
+    are none adaptive execution drops the snapshot scan at runtime.
+    Deletes/updates recompute min/max only for the groups they touch —
+    their snapshot rows join the same union (with a group-partitioned
+    layout the scan partition-prunes to those groups). At 100 TB a
+    delta touching 0.1% of groups costs delta + 0.1%-of-table, never a
+    full recompute. ``assume_destructive``: None or True read the
+    touched groups' snapshot rows as above; False declares an
+    append-only feed — the plan has no snapshot side at all, and any
+    delete/update row fails the job in-plan instead of silently
+    corrupting the rollup. Groups whose count reaches zero are dropped
+    (never emitted with NULL measures).
 
     Exactness contract: decimal addition is associative, so
     cast(total_dec_v1 + Σsigned_deltas AS DOUBLE) equals the oracle's
     direct decimal sum over the new snapshot bit-for-bit — the
     maintained result is value-checkable against a plain GROUP BY,
-    which is exactly how incremental_agg_maintain's oracle checks it."""
-    g = group_col
+    which is exactly how incremental_agg_maintain's oracle checks it.
+    A group with no non-NULL value presents total_dec NULL, as SQL SUM
+    does."""
+    return maintain_agg_multi(
+        agg_old.withColumnsRenamed(_to_k1(val_col)),
+        changes,
+        new_snap,
+        group_col,
+        [val_col],
+        assume_destructive,
+    ).withColumnsRenamed(_from_k1(val_col))
+
+
+def maintain_agg_multi(
+    agg_old: DataFrame,
+    changes: DataFrame,
+    new_snap: DataFrame,
+    group_col: str,
+    val_cols: list[str],
+    assume_destructive: bool | None = None,
+) -> DataFrame:
+    """Multi-measure :func:`maintain_agg`: every measure rides the SAME
+    union-aggregate — a rollup with k measures costs one maintenance
+    aggregate, not k: the count and per-measure decimal sums from the
+    delta alone, insert extrema merged in the aggregate, and the
+    extrema of groups that lost a row recomputed from their snapshot
+    rows in the same pass (one semi-joined scan for all measures).
+    Same ``assume_destructive`` contract. Shapes: agg_old from
+    :func:`agg_snapshot_multi`; the result is (group, cnt,
+    total_dec_{c}..., min_{c}, max_{c}...)."""
     if assume_destructive is False:
-        # the append-only fast path is only correct if the feed IS
-        # append-only — enforce in-plan (zero extra jobs): any
-        # delete/update row fails the maintenance job instead of
-        # silently corrupting the maintained sums
         changes = changes.withColumn(
             "op",
             F.when(F.col("op") == "insert", F.col("op")).otherwise(
-                F.expr(
-                    "raise_error('maintain_agg(assume_destructive=False) "
-                    "received a non-insert change row')"
+                F.raise_error(
+                    F.lit(
+                        "maintain_agg(assume_destructive=False) received "
+                        "a non-insert change row"
+                    )
                 )
             ),
         )
-    # every group-key join below is NULL-SAFE (<=>): a NULL group is a
-    # group like any other, and a plain equi-join would silently split
-    # it into dangling halves (planted-NULL-group test pins this)
-    adj = _signed_adjustments(changes, g, val_col).withColumnRenamed(
-        g, "__adj_g"
+        new_snap = None
+    return _union_aggregate(
+        agg_old, changes, [group_col], val_cols, extrema=True, new_snap=new_snap
     )
-    zero_dec = F.lit(0).cast(_AGG_DEC)
-    merged = (
-        agg_old.join(
-            adj, F.col(g).eqNullSafe(F.col("__adj_g")), "full_outer"
-        )
-        .select(
-            F.coalesce(F.col(g), F.col("__adj_g")).alias(g),
-            (
-                F.coalesce(F.col("cnt"), F.lit(0))
-                + F.coalesce(F.col("dc"), F.lit(0))
-            ).alias("cnt"),
-            (
-                F.coalesce(F.col("total_dec"), zero_dec)
-                + F.coalesce(F.col("dv"), zero_dec)
-            ).alias("total_dec"),
-            "min_val",
-            "max_val",
-        )
-        .filter(F.col("cnt") > 0)
-    )
-    # inserts only GROW a group's extrema — mergeable additively from
-    # the delta (least/greatest, null-skipping), no snapshot access.
-    ins = (
-        changes.filter(F.col("op") == "insert")
-        .groupBy(F.col(f"_new.{g}").alias(g))
-        .agg(
-            F.min(f"_new.{val_col}").alias("ins_min"),
-            F.max(f"_new.{val_col}").alias("ins_max"),
-        )
-    )
-    destructive = changes.filter(F.col("op").isin("delete", "update"))
-    if assume_destructive is None:
-        # one delta-sized probe job; callers who know their feed shape
-        # (append-only ingest vs CDC with deletes) pass the flag and
-        # skip the probe
-        assume_destructive = bool(destructive.head(1))
-    out = merged.join(
-        ins.withColumnRenamed(g, "__ins_g"),
-        F.col(g).eqNullSafe(F.col("__ins_g")),
-        "left",
-    ).drop("__ins_g")
-    if assume_destructive:
-        # deletes/updates can SHRINK extrema — recompute, but only for
-        # the groups destructive ops touch: the old side of every
-        # destructive row, plus the new side of updates (a delete's
-        # _new image is NULL — that's an absent row, not the NULL
-        # group; an update INTO the NULL group is the NULL group)
-        affected = (
-            destructive.select(F.col(f"_old.{g}").alias(g))
-            .unionByName(
-                changes.filter(F.col("op") == "update").select(
-                    F.col(f"_new.{g}").alias(g)
-                )
-            )
-            .distinct()
-        )
-        # the snapshot scan keeps a PLAIN equi semi-join for non-NULL
-        # affected groups — eqNullSafe would disable dynamic partition
-        # pruning on a group-partitioned layout (plan-asserted). The
-        # NULL group rides a separate branch: its partition is read
-        # only if the delta actually touched the NULL group (lazy
-        # non-empty gate, no driver action).
-        scan_nn = new_snap.join(
-            affected.filter(F.col(g).isNotNull()), on=g, how="left_semi"
-        )
-        scan_null = new_snap.filter(F.col(g).isNull()).join(
-            affected.filter(F.col(g).isNull()), F.lit(True), "left_semi"
-        )
-        recomputed = (
-            scan_nn.unionByName(scan_null)
-            .groupBy(g)
-            .agg(
-                F.min(val_col).alias("min_r"),
-                F.max(val_col).alias("max_r"),
-                # explicit membership flag: a group whose surviving rows
-                # are all NULL in val_col recomputes min_r/max_r = NULL,
-                # and coalesce would silently keep the stale pre-delete
-                # extrema — membership must not be inferred from a
-                # non-null recomputed value
-                F.lit(True).alias("__rec_hit"),
-            )
-        )
-        out = out.join(
-            recomputed.withColumnRenamed(g, "__rec_g"),
-            F.col(g).eqNullSafe(F.col("__rec_g")),
-            "left",
-        ).drop("__rec_g")
-        # destructive-affected groups take the recomputed extrema
-        # UNCONDITIONALLY (even when NULL); others merge insert extrema
-        min_out = F.when(F.col("__rec_hit"), F.col("min_r")).otherwise(
-            F.least("min_val", "ins_min")
-        )
-        max_out = F.when(F.col("__rec_hit"), F.col("max_r")).otherwise(
-            F.greatest("max_val", "ins_max")
-        )
-    else:
-        min_out = F.least("min_val", "ins_min")
-        max_out = F.greatest("max_val", "ins_max")
-    # SQL SUM over a group with zero non-NULL values is NULL, not 0 —
-    # and min_val IS NULL is exactly that condition (least/greatest
-    # skip NULLs; the recompute is a real MIN). The additive state can
-    # keep carrying 0 internally (coalesced on the next merge), but
-    # the PRESENTED sum must match the plain GROUP BY bit-for-bit.
-    return out.select(
-        F.col(g),
-        "cnt",
-        F.when(min_out.isNull(), F.lit(None).cast(_AGG_DEC))
-        .otherwise(F.col("total_dec"))
-        .alias("total_dec"),
-        min_out.alias("min_val"),
-        max_out.alias("max_val"),
-    )
-
-
-def _signed_adjustments(
-    changes: DataFrame, group_col: str, val_col: str
-) -> DataFrame:
-    """Per-group signed (Δsum, Δcount) from an image-carrying delta:
-    +new image for insert/update, −old image for delete/update — a
-    group-moving update debits one group and credits another."""
-    g = group_col
-    plus = changes.filter(F.col("op").isin("insert", "update")).select(
-        F.col(f"_new.{g}").alias(g),
-        F.col(f"_new.{val_col}").cast(_AGG_DEC).alias("dv"),
-        F.lit(1).cast("bigint").alias("dc"),
-    )
-    minus = changes.filter(F.col("op").isin("delete", "update")).select(
-        F.col(f"_old.{g}").alias(g),
-        (-F.col(f"_old.{val_col}").cast(_AGG_DEC)).alias("dv"),
-        F.lit(-1).cast("bigint").alias("dc"),
-    )
-    return (
-        plus.unionByName(minus)
-        .groupBy(g)
-        .agg(F.sum("dv").alias("dv"), F.sum("dc").alias("dc"))
-    )
-
-
-# fixed carrier type for the maintained decimal sum: decimal addition
-# widens precision per operand, so an epoch-chained rollup would creep
-# to decimal(38,6); pinning 30,6 (24 integer digits) keeps the state
-# schema stable across arbitrarily many maintenance rounds, exactly.
-_AGG_STATE_DEC = "decimal(30,6)"
 
 
 def maintain_agg_additive(
@@ -824,37 +908,21 @@ def maintain_agg_additive(
     """Additive-only rollup maintenance (count + exact decimal sum):
     consumes the DELTA ALONE — no snapshot access of any kind — which
     is what makes the rollup maintainable from a change STREAM
-    (streaming/sinks.streaming_agg_maintain). Schema in/out:
-    (group, cnt BIGINT, total_dec DECIMAL(30,6)); groups whose count
-    reaches zero drop. A NULL group key is a group like any other —
-    all merges here are null-safe (``<=>``), since a plain equi-join
-    would silently split the NULL group into dangling halves. For
-    min/max (which need delta-group recompute against the snapshot)
-    use :func:`maintain_agg`."""
-    g = group_col
-    adj = _signed_adjustments(changes, g, val_col).withColumnRenamed(
-        g, "__adj_g"
-    )
-    zero_dec = F.lit(0).cast(_AGG_STATE_DEC)
-    return (
-        agg_old.join(
-            adj, F.col(g).eqNullSafe(F.col("__adj_g")), "full_outer"
-        )
-        .select(
-            F.coalesce(F.col(g), F.col("__adj_g")).alias(g),
-            (
-                F.coalesce(F.col("cnt"), F.lit(0))
-                + F.coalesce(F.col("dc"), F.lit(0))
-            ).alias("cnt"),
-            (
-                F.coalesce(F.col("total_dec").cast(_AGG_STATE_DEC), zero_dec)
-                + F.coalesce(F.col("dv").cast(_AGG_STATE_DEC), zero_dec)
-            )
-            .cast(_AGG_STATE_DEC)
-            .alias("total_dec"),
-        )
-        .filter(F.col("cnt") > 0)
-    )
+    (streaming/sinks.streaming_agg_maintain). The k=1 case of
+    :func:`maintain_agg_additive_multi`.
+
+    Cost model: ONE aggregate over the union of the state's rows and
+    the delta's signed images — no join against the state. State in
+    and out: :func:`agg_state_additive`'s (group, cnt BIGINT, total_dec
+    DECIMAL(30,6), cnt_val BIGINT); cnt_val counts non-NULL values, so
+    a group whose values are all NULL reads total_dec NULL, as SQL SUM
+    and :func:`agg_snapshot` do. Groups whose count reaches zero drop;
+    a NULL group key is a group like any other. For min/max (which
+    need a touched-group recompute against the snapshot) use
+    :func:`maintain_agg`."""
+    return maintain_agg_additive_multi(
+        agg_old.withColumnsRenamed(_to_k1(val_col)), changes, group_col, [val_col]
+    ).withColumnsRenamed(_from_k1(val_col))
 
 
 def maintain_agg_additive_multi(
@@ -864,62 +932,11 @@ def maintain_agg_additive_multi(
     val_cols: list[str],
 ) -> DataFrame:
     """Multi-measure :func:`maintain_agg_additive`: k additive
-    measures maintained from the delta alone in ONE pass and ONE
-    merge join — the streaming-state twin of
-    :func:`maintain_agg_multi`'s additive half. Schema in/out:
-    (group, cnt BIGINT, total_dec_{c} DECIMAL(30,6) per measure);
-    same null-safe group merge, same fixed decimal carrier."""
-    g = group_col
-    plus = changes.filter(F.col("op").isin("insert", "update")).select(
-        F.col(f"_new.{g}").alias(g),
-        F.lit(1).cast("bigint").alias("dc"),
-        *[
-            F.col(f"_new.{c}").cast(_AGG_STATE_DEC).alias(f"dv_{c}")
-            for c in val_cols
-        ],
-    )
-    minus = changes.filter(F.col("op").isin("delete", "update")).select(
-        F.col(f"_old.{g}").alias(g),
-        F.lit(-1).cast("bigint").alias("dc"),
-        *[
-            (-F.col(f"_old.{c}").cast(_AGG_STATE_DEC)).alias(f"dv_{c}")
-            for c in val_cols
-        ],
-    )
-    adj = (
-        plus.unionByName(minus)
-        .groupBy(g)
-        .agg(
-            F.sum("dc").alias("dc"),
-            *[F.sum(f"dv_{c}").alias(f"dv_{c}") for c in val_cols],
-        )
-        .withColumnRenamed(g, "__adj_g")
-    )
-    zero = F.lit(0).cast(_AGG_STATE_DEC)
-    return (
-        agg_old.join(
-            adj, F.col(g).eqNullSafe(F.col("__adj_g")), "full_outer"
-        )
-        .select(
-            F.coalesce(F.col(g), F.col("__adj_g")).alias(g),
-            (
-                F.coalesce(F.col("cnt"), F.lit(0))
-                + F.coalesce(F.col("dc"), F.lit(0))
-            ).alias("cnt"),
-            *[
-                (
-                    F.coalesce(
-                        F.col(f"total_dec_{c}").cast(_AGG_STATE_DEC), zero
-                    )
-                    + F.coalesce(F.col(f"dv_{c}").cast(_AGG_STATE_DEC), zero)
-                )
-                .cast(_AGG_STATE_DEC)
-                .alias(f"total_dec_{c}")
-                for c in val_cols
-            ],
-        )
-        .filter(F.col("cnt") > 0)
-    )
+    measures maintained from the delta alone in ONE union-aggregate —
+    the streaming-state twin of :func:`maintain_agg_multi`'s additive
+    half. State in and out: :func:`agg_state_additive_multi`'s (group,
+    cnt BIGINT, total_dec_{c} DECIMAL(30,6)..., cnt_{c} BIGINT...)."""
+    return _union_aggregate(agg_old, changes, [group_col], val_cols)
 
 
 def distinct_state(
@@ -956,55 +973,21 @@ def maintain_distinct_state(
     delta ALONE — no snapshot access of any kind, for ANY op mix
     (unlike min/max, which need a recompute for deletes): the
     per-(group, value) multiplicity takes +1 for each insert/update
-    new image and −1 for each delete/update old image, merged by one
-    full-outer join on (group, value); rows whose multiplicity
-    reaches zero drop, which is precisely when the value stops
-    counting as distinct. NULL group keys are groups (null-safe
-    join); NULL values never count (COUNT DISTINCT semantics).
+    new image and −1 for each delete/update old image, in one
+    union-aggregate with the state's rows keyed (group, value); rows
+    whose multiplicity reaches zero drop, which is precisely when the
+    value stops counting as distinct. NULL group keys are groups;
+    NULL values never count (COUNT DISTINCT semantics).
 
-    The merge join is keyed (group, value) — the state's OWN key —
-    so a hot GROUP is spread across its many values and the shuffle
-    is as balanced as the value distribution itself."""
-    g, v = group_col, val_col
-    plus = changes.filter(
-        F.col("op").isin("insert", "update")
-        & F.col(f"_new.{v}").isNotNull()
-    ).select(
-        F.col(f"_new.{g}").alias(g),
-        F.col(f"_new.{v}").alias(v),
-        F.lit(1).cast("bigint").alias("d"),
-    )
-    minus = changes.filter(
-        F.col("op").isin("delete", "update")
-        & F.col(f"_old.{v}").isNotNull()
-    ).select(
-        F.col(f"_old.{g}").alias(g),
-        F.col(f"_old.{v}").alias(v),
-        F.lit(-1).cast("bigint").alias("d"),
-    )
-    adj = (
-        plus.unionByName(minus)
-        .groupBy(g, v)
-        .agg(F.sum("d").alias("d"))
-        .withColumnRenamed(g, "__adj_g")
-        .withColumnRenamed(v, "__adj_v")
-    )
-    return (
-        state_old.join(
-            adj,
-            F.col(g).eqNullSafe(F.col("__adj_g"))
-            & (F.col(v) == F.col("__adj_v")),
-            "full_outer",
-        )
-        .select(
-            F.coalesce(F.col(g), F.col("__adj_g")).alias(g),
-            F.coalesce(F.col(v), F.col("__adj_v")).alias(v),
-            (
-                F.coalesce(F.col("vcnt"), F.lit(0))
-                + F.coalesce(F.col("d"), F.lit(0))
-            ).alias("vcnt"),
-        )
-        .filter(F.col("vcnt") > 0)
+    The aggregate is keyed (group, value) — the state's OWN key — so a
+    hot GROUP is spread across its many values and the shuffle is as
+    balanced as the value distribution itself."""
+    return _union_aggregate(
+        state_old,
+        changes,
+        [group_col, val_col],
+        count_col="vcnt",
+        skip_null=val_col,
     )
 
 
@@ -1016,174 +999,3 @@ def count_distinct_from_state(
     return state.groupBy(group_col).agg(
         F.count(F.lit(1)).alias("n_distinct")
     )
-
-
-def agg_snapshot_multi(
-    df: DataFrame, group_col: str, val_cols: list[str]
-) -> DataFrame:
-    """Multi-measure rollup shape: one shared cnt plus, per measure c,
-    (total_dec_{c} DECIMAL, min_{c}, max_{c}) — all measures in ONE
-    aggregation pass."""
-    aggs = [F.count(F.lit(1)).alias("cnt")]
-    for c in val_cols:
-        aggs += [
-            F.sum(F.col(c).cast(_AGG_DEC)).alias(f"total_dec_{c}"),
-            F.min(c).alias(f"min_{c}"),
-            F.max(c).alias(f"max_{c}"),
-        ]
-    return df.groupBy(group_col).agg(*aggs)
-
-
-def maintain_agg_multi(
-    agg_old: DataFrame,
-    changes: DataFrame,
-    new_snap: DataFrame,
-    group_col: str,
-    val_cols: list[str],
-    assume_destructive: bool | None = None,
-) -> DataFrame:
-    """Multi-measure :func:`maintain_agg`: every measure maintained in
-    the SAME delta pass and the SAME merge join — a rollup with k
-    measures costs one maintenance round, not k. Same structure
-    throughout: additive count + per-measure decimal sums from the
-    delta alone, insert-only extrema merged additively, destructive
-    extrema recomputed only for touched groups (one semi-joined scan
-    aggregating all measures at once), every group-key join null-safe,
-    the append-only fast path guarded in-plan. Shapes:
-    agg_old/result from :func:`agg_snapshot_multi`."""
-    g = group_col
-    if assume_destructive is False:
-        changes = changes.withColumn(
-            "op",
-            F.when(F.col("op") == "insert", F.col("op")).otherwise(
-                F.expr(
-                    "raise_error('maintain_agg_multi(assume_destructive="
-                    "False) received a non-insert change row')"
-                )
-            ),
-        )
-    plus = changes.filter(F.col("op").isin("insert", "update")).select(
-        F.col(f"_new.{g}").alias(g),
-        F.lit(1).cast("bigint").alias("dc"),
-        *[
-            F.col(f"_new.{c}").cast(_AGG_DEC).alias(f"dv_{c}")
-            for c in val_cols
-        ],
-    )
-    minus = changes.filter(F.col("op").isin("delete", "update")).select(
-        F.col(f"_old.{g}").alias(g),
-        F.lit(-1).cast("bigint").alias("dc"),
-        *[
-            (-F.col(f"_old.{c}").cast(_AGG_DEC)).alias(f"dv_{c}")
-            for c in val_cols
-        ],
-    )
-    adj = (
-        plus.unionByName(minus)
-        .groupBy(g)
-        .agg(
-            F.sum("dc").alias("dc"),
-            *[F.sum(f"dv_{c}").alias(f"dv_{c}") for c in val_cols],
-        )
-        .withColumnRenamed(g, "__adj_g")
-    )
-    zero_dec = F.lit(0).cast(_AGG_DEC)
-    merged = (
-        agg_old.join(
-            adj, F.col(g).eqNullSafe(F.col("__adj_g")), "full_outer"
-        )
-        .select(
-            F.coalesce(F.col(g), F.col("__adj_g")).alias(g),
-            (
-                F.coalesce(F.col("cnt"), F.lit(0))
-                + F.coalesce(F.col("dc"), F.lit(0))
-            ).alias("cnt"),
-            *[
-                (
-                    F.coalesce(F.col(f"total_dec_{c}"), zero_dec)
-                    + F.coalesce(F.col(f"dv_{c}"), zero_dec)
-                ).alias(f"total_dec_{c}")
-                for c in val_cols
-            ],
-            *[F.col(f"min_{c}") for c in val_cols],
-            *[F.col(f"max_{c}") for c in val_cols],
-        )
-        .filter(F.col("cnt") > 0)
-    )
-    ins = (
-        changes.filter(F.col("op") == "insert")
-        .groupBy(F.col(f"_new.{g}").alias("__ins_g"))
-        .agg(
-            *[F.min(f"_new.{c}").alias(f"imin_{c}") for c in val_cols],
-            *[F.max(f"_new.{c}").alias(f"imax_{c}") for c in val_cols],
-        )
-    )
-    destructive = changes.filter(F.col("op").isin("delete", "update"))
-    if assume_destructive is None:
-        assume_destructive = bool(destructive.head(1))
-    out = merged.join(
-        ins, F.col(g).eqNullSafe(F.col("__ins_g")), "left"
-    ).drop("__ins_g")
-    if assume_destructive:
-        affected = (
-            destructive.select(F.col(f"_old.{g}").alias(g))
-            .unionByName(
-                changes.filter(F.col("op") == "update").select(
-                    F.col(f"_new.{g}").alias(g)
-                )
-            )
-            .distinct()
-        )
-        scan_nn = new_snap.join(
-            affected.filter(F.col(g).isNotNull()), on=g, how="left_semi"
-        )
-        scan_null = new_snap.filter(F.col(g).isNull()).join(
-            affected.filter(F.col(g).isNull()), F.lit(True), "left_semi"
-        )
-        recomputed = (
-            scan_nn.unionByName(scan_null)
-            .groupBy(F.col(g).alias("__rec_g"))
-            .agg(
-                *[F.min(c).alias(f"rmin_{c}") for c in val_cols],
-                *[F.max(c).alias(f"rmax_{c}") for c in val_cols],
-                # explicit membership flag (see maintain_agg): an
-                # all-NULL measure must overwrite stale extrema with
-                # NULL, so membership can't ride on a non-null rmin
-                F.lit(True).alias("__rec_hit"),
-            )
-        )
-        out = out.join(
-            recomputed, F.col(g).eqNullSafe(F.col("__rec_g")), "left"
-        ).drop("__rec_g")
-
-        def mm(c):
-            return (
-                F.when(F.col("__rec_hit"), F.col(f"rmin_{c}")).otherwise(
-                    F.least(f"min_{c}", f"imin_{c}")
-                ),
-                F.when(F.col("__rec_hit"), F.col(f"rmax_{c}")).otherwise(
-                    F.greatest(f"max_{c}", f"imax_{c}")
-                ),
-            )
-
-    else:
-
-        def mm(c):
-            return (
-                F.least(f"min_{c}", f"imin_{c}"),
-                F.greatest(f"max_{c}", f"imax_{c}"),
-            )
-
-    # presented per-measure sum is NULL when the measure has zero
-    # non-NULL values in the group (SQL SUM semantics) — min IS NULL
-    # is exactly that condition; see maintain_agg
-    sums, minmax = [], []
-    for c in val_cols:
-        mn, mx = mm(c)
-        sums.append(
-            F.when(mn.isNull(), F.lit(None).cast(_AGG_DEC))
-            .otherwise(F.col(f"total_dec_{c}"))
-            .alias(f"total_dec_{c}")
-        )
-        minmax += [mn.alias(f"min_{c}"), mx.alias(f"max_{c}")]
-    return out.select(F.col(g), "cnt", *sums, *minmax)

@@ -377,42 +377,16 @@ def apply_cdc_rollup_batch(
     ``epoch=<batch_id>``. A replayed batch re-reads the same
     predecessor epoch and rewrites its own directory, so delivery
     retries converge instead of double-counting — the write-ahead-by-
-    epoch form of the ingest-admit loop's scrub-then-append."""
-    from xngin_spark.sources.dml import maintain_agg_additive
+    epoch form of the ingest-admit loop's scrub-then-append.
 
-    spark = batch_df.sparkSession
-    rec = _phase_rec("rollup", batch_id)
-    with _phase(rec, "dedup_checkpoint"):
-        batch = batch_df.dropDuplicates(key_cols).localCheckpoint(eager=True)
-    prior = _latest_rollup_epoch(rollup_path, below=batch_id)
-    if prior is None:
-        raise ValueError(
-            f"no seed epoch under {rollup_path} — write the initial "
-            "agg state to epoch=-1 before starting the stream"
-        )
-    agg_old = spark.read.parquet(f"{rollup_path}/epoch={prior}")
-    updated = maintain_agg_additive(agg_old, batch, group_col, val_col)
-    with _phase(rec, "epoch_write"):
-        updated.write.mode("overwrite").parquet(
-            f"{rollup_path}/epoch={batch_id}"
-        )
-    # prune epochs OLDER than this batch's predecessor: a foreachBatch
-    # replay can only be of THIS batch (which re-reads ``prior`` — kept)
-    # or a later one (which reads ``batch_id``'s output or newer), so
-    # anything below ``prior`` is unreachable state. Keeps the state
-    # dir at two rollup-sized epochs regardless of stream lifetime.
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    with _phase(rec, "prune"):
-        for p in _glob.glob(_os.path.join(rollup_path, "epoch=*")):
-            try:
-                e = int(_os.path.basename(p).split("=", 1)[1])
-            except ValueError:
-                continue
-            if e < prior:
-                _shutil.rmtree(p, ignore_errors=True)
+    A batch costs three jobs: the dedup shuffle, one union-aggregate
+    of the deduplicated batch with the predecessor epoch
+    (sources/dml.maintain_agg_additive; the epoch is read with its
+    known schema) and the epoch write — no barrier, no
+    schema-inference job."""
+    _apply_rollup_batch(
+        batch_df, batch_id, rollup_path, group_col, val_col, key_cols
+    )
 
 
 def apply_cdc_rollup_batch_multi(
@@ -424,72 +398,67 @@ def apply_cdc_rollup_batch_multi(
     key_cols: list[str],
 ) -> None:
     """Multi-measure :func:`apply_cdc_rollup_batch` — same write-ahead
-    epoch protocol (read newest epoch < batch_id, apply the delta,
-    overwrite epoch=batch_id, prune below the predecessor), with k
-    measures folded in the one delta pass
+    epoch protocol, with k measures folded into the one aggregate
     (sources/dml.maintain_agg_additive_multi)."""
-    from xngin_spark.sources.dml import maintain_agg_additive_multi
+    _apply_rollup_batch(
+        batch_df, batch_id, rollup_path, group_col, val_cols, key_cols
+    )
 
-    spark = batch_df.sparkSession
-    batch = batch_df.dropDuplicates(key_cols).localCheckpoint(eager=True)
+
+def _apply_rollup_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    rollup_path: str,
+    group_col: str,
+    val_cols: str | list[str],
+    key_cols: list[str],
+) -> None:
+    """The body of both rollup batch functions; a ``str`` ``val_cols``
+    is the single-measure state shape."""
+    import glob
+    import os
+    import shutil
+
+    from xngin_spark.sources import dml
+
+    if isinstance(val_cols, str):
+        seed, maintain = dml.agg_state_additive, dml.maintain_agg_additive
+    else:
+        seed = dml.agg_state_additive_multi
+        maintain = dml.maintain_agg_additive_multi
+    rec = _phase_rec("rollup", batch_id)
     prior = _latest_rollup_epoch(rollup_path, below=batch_id)
     if prior is None:
         raise ValueError(
             f"no seed epoch under {rollup_path} — write the initial "
             "agg state to epoch=-1 before starting the stream"
         )
-    agg_old = spark.read.parquet(f"{rollup_path}/epoch={prior}")
-    updated = maintain_agg_additive_multi(
-        agg_old, batch, group_col, val_cols
+    # the state's schema is the seed's over the images' own types —
+    # derived by analysis, so reading the epoch submits no job
+    schema = seed(batch_df.select("_new.*"), group_col, val_cols).schema
+    agg_old = batch_df.sparkSession.read.schema(schema).parquet(
+        f"{rollup_path}/epoch={prior}"
     )
-    updated.write.mode("overwrite").parquet(
-        f"{rollup_path}/epoch={batch_id}"
+    updated = maintain(
+        agg_old, batch_df.dropDuplicates(key_cols), group_col, val_cols
     )
-    import glob as _glob
-    import os as _os
-    import shutil as _shutil
-
-    for p in _glob.glob(_os.path.join(rollup_path, "epoch=*")):
-        try:
-            e = int(_os.path.basename(p).split("=", 1)[1])
-        except ValueError:
-            continue
-        if e < prior:
-            _shutil.rmtree(p, ignore_errors=True)
-
-
-def streaming_agg_maintain_multi(
-    change_stream: DataFrame,
-    rollup_path: str,
-    checkpoint_dir: str,
-    group_col: str,
-    val_cols: list[str],
-    key_cols: list[str],
-    timeout_s: int = 180,
-) -> None:
-    """Multi-measure :func:`streaming_agg_maintain`: a k-measure
-    maintained materialized view costs one maintenance round per
-    micro-batch, not k — same epoch protocol, same replay
-    convergence, same seed contract (epoch=-1 holding the
-    maintain_agg_additive_multi-shaped state)."""
-
-    def apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cdc_rollup_batch_multi(
-            batch_df, batch_id, rollup_path, group_col, val_cols, key_cols
+    with _phase(rec, "epoch_write"):
+        updated.write.mode("overwrite").parquet(
+            f"{rollup_path}/epoch={batch_id}"
         )
-
-    q = (
-        change_stream.writeStream.foreachBatch(apply)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"agg-maintain-multi sink did not finish in {timeout_s}s"
-        )
+    # prune epochs OLDER than this batch's predecessor: a foreachBatch
+    # replay can only be of THIS batch (which re-reads ``prior`` — kept)
+    # or a later one (which reads ``batch_id``'s output or newer), so
+    # anything below ``prior`` is unreachable state. Keeps the state
+    # dir at two rollup-sized epochs regardless of stream lifetime.
+    with _phase(rec, "prune"):
+        for p in glob.glob(os.path.join(rollup_path, "epoch=*")):
+            try:
+                e = int(os.path.basename(p).split("=", 1)[1])
+            except ValueError:
+                continue
+            if e < prior:
+                shutil.rmtree(p, ignore_errors=True)
 
 
 def streaming_agg_maintain(
@@ -504,21 +473,56 @@ def streaming_agg_maintain(
     """Maintain a persisted additive rollup from a CDC change STREAM —
     the materialized-view half of the ingest loop: the stream carries
     image-bearing change rows (op, _old, _new — cdc_changes' shape),
-    each micro-batch folds its per-group signed adjustments into the
-    epoch-versioned rollup state, and the 100 TB base table is NEVER
-    read. Per-batch cost: delta-sized map work + a full-outer join on
-    the group key against a rollup-sized table. At-least-once
-    duplicate delivery collapses via dropDuplicates on the CDC key
-    BEFORE any state is touched; batch replays converge via the
-    epoch protocol (see :func:`apply_cdc_rollup_batch`).
+    each micro-batch folds its signed images into the epoch-versioned
+    rollup state, and the 100 TB base table is NEVER read. Per-batch
+    cost: delta-sized map work plus ONE aggregate over the union of
+    the images and the rollup-sized previous epoch — no join, one job.
+    At-least-once duplicate delivery collapses via dropDuplicates on
+    the CDC key BEFORE any state is touched; batch replays converge
+    via the epoch protocol (see :func:`apply_cdc_rollup_batch`).
 
-    Seed contract: write the initial :func:`~xngin_spark.sources.dml.
-    maintain_agg_additive`-shaped state to ``{rollup_path}/epoch=-1``
-    first; read the final state from the newest epoch after the run."""
+    Seed contract: write :func:`~xngin_spark.sources.dml.
+    agg_state_additive` of the base table (group, cnt, total_dec,
+    cnt_val) to ``{rollup_path}/epoch=-1`` first; read the final state
+    from the newest epoch after the run."""
+    _run_rollup_stream(
+        change_stream, rollup_path, checkpoint_dir, group_col, val_col,
+        key_cols, timeout_s,
+    )
 
+
+def streaming_agg_maintain_multi(
+    change_stream: DataFrame,
+    rollup_path: str,
+    checkpoint_dir: str,
+    group_col: str,
+    val_cols: list[str],
+    key_cols: list[str],
+    timeout_s: int = 180,
+) -> None:
+    """Multi-measure :func:`streaming_agg_maintain`: a k-measure
+    maintained materialized view costs one aggregate per micro-batch,
+    not k — same epoch protocol, same replay convergence, same seed
+    contract (epoch=-1 holding
+    :func:`~xngin_spark.sources.dml.agg_state_additive_multi`)."""
+    _run_rollup_stream(
+        change_stream, rollup_path, checkpoint_dir, group_col, val_cols,
+        key_cols, timeout_s,
+    )
+
+
+def _run_rollup_stream(
+    change_stream: DataFrame,
+    rollup_path: str,
+    checkpoint_dir: str,
+    group_col: str,
+    val_cols: str | list[str],
+    key_cols: list[str],
+    timeout_s: int,
+) -> None:
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        apply_cdc_rollup_batch(
-            batch_df, batch_id, rollup_path, group_col, val_col, key_cols
+        _apply_rollup_batch(
+            batch_df, batch_id, rollup_path, group_col, val_cols, key_cols
         )
 
     q = (
@@ -530,9 +534,7 @@ def streaming_agg_maintain(
     )
     if not q.awaitTermination(timeout_s):
         q.stop()
-        raise TimeoutError(
-            f"agg-maintain sink did not finish in {timeout_s}s"
-        )
+        raise TimeoutError(f"agg-maintain sink did not finish in {timeout_s}s")
 
 
 def apply_cdc_bm25_batch(
