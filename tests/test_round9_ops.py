@@ -628,7 +628,6 @@ def test_auto_gate_cost_log_discriminates(spark, sf_dir):
     def gate_log(sql):
         df = spark.sql(sql)
         r = sq._DPhypRenderer(
-            jvm=spark._jvm,
             spark=spark,
             mode="auto",
             optimized=df._jdf.queryExecution().optimizedPlan(),

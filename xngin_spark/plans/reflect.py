@@ -12,6 +12,17 @@ DataFrame-built plan and its SQL reflection must agree, so a
 plan-construction bug that silently changes semantics is caught by its
 own round trip.
 
+One walk over one snapshot. The renderer reads plan STRUCTURE — node
+kinds, children, output names/exprIds/qualifiers, join types — from a
+single ``toJSON()`` snapshot (:func:`_snapshot`). It calls the JVM only
+for text it emits: ``Expression.sql()`` of each expression it writes,
+a relation's parquet path, ``LocalRelation`` values and an explicit
+output select list, each reached through :func:`_live`, which resolves
+a snapshot node to its live JVM node through its parent. In
+decide-only mode those emit accessors return placeholders and make no
+JVM call; the DPhyp cost gate (:mod:`xngin_spark.plans.sqlreorder`) is
+this renderer run in that mode.
+
 Coverage is the relational core (scan/filter/project/aggregate/join/
 sort/limit/offset/distinct/setops/window); nodes with no faithful SQL
 rendering (Generate/Expand, streaming sources, recursive CTEs) raise
@@ -22,6 +33,8 @@ output names, which bare-attribute SQL can't disambiguate) also raise.
 
 from __future__ import annotations
 
+import json
+import re
 from collections import OrderedDict
 
 from pyspark.sql import DataFrame
@@ -90,22 +103,272 @@ def _name(node) -> str:
     return node.getClass().getSimpleName()
 
 
+# ---- plan snapshots -------------------------------------------------------
+
+
+class _Node:
+    """One node of a ``toJSON()`` plan snapshot: a plan operator or an
+    expression. ``kind`` is the simple class name, ``f`` the node's own
+    fields (expression-valued ones parsed into nodes), ``ch`` its
+    children. ``up``/``idx`` locate a plan node under its parent, so
+    :func:`_live` can fetch the live JVM node (cached in ``j``);
+    ``out`` caches :func:`_output`."""
+
+    __slots__ = ("kind", "f", "ch", "up", "idx", "j", "out")
+
+    def __init__(self, kind: str, f: dict, up, idx: int) -> None:
+        self.kind, self.f, self.ch = kind, f, []
+        self.up, self.idx, self.j, self.out = up, idx, None, None
+
+
+def _is_tree(v) -> bool:
+    return isinstance(v, list) and bool(v) and isinstance(v[0], dict) and "class" in v[0]
+
+
+def _parse(items: list, pos: int = 0, up=None, idx: int = 0):
+    """Rebuild the node at ``items[pos]`` of a pre-order flattened
+    tree; returns ``(node, next_pos)``."""
+    d = items[pos]
+    f = {}
+    for k, v in d.items():
+        if k in ("class", "num-children"):
+            continue
+        if _is_tree(v):
+            v = _parse(v)[0]
+        elif isinstance(v, list) and v and all(_is_tree(x) for x in v):
+            v = [_parse(x)[0] for x in v]
+        f[k] = v
+    n = _Node(d["class"].rsplit(".", 1)[-1], f, up, idx)
+    pos += 1
+    for i in range(d["num-children"]):
+        c, pos = _parse(items, pos, n, i)
+        n.ch.append(c)
+    return n, pos
+
+
+def _snapshot(jplan) -> _Node:
+    """The whole plan, read in one JVM call."""
+    root = _parse(json.loads(jplan.toJSON()))[0]
+    root.j = jplan
+    return root
+
+
+#: plan nodes whose children are not reached as ``child``/``left``/``right``
+_NARY = frozenset(("Union", "WithCTE"))
+
+
+def _live(n: _Node):
+    """The live JVM node of snapshot node ``n``, resolved once through
+    its parent (``UnaryNode.child``, ``BinaryNode.left``/``right``)."""
+    if n.j is None:
+        up, k = _live(n.up), len(n.up.ch)
+        if n.up.kind in _NARY or k > 2:
+            n.j = up.children().apply(n.idx)
+        elif k == 1:
+            n.j = up.child()
+        else:
+            n.j = up.right() if n.idx else up.left()
+    return n.j
+
+
+_JOIN_SQL = {
+    "Inner": "INNER",
+    "Cross": "CROSS",
+    "LeftOuter": "LEFT OUTER",
+    "RightOuter": "RIGHT OUTER",
+    "FullOuter": "FULL OUTER",
+    "LeftSemi": "LEFT SEMI",
+    "LeftAnti": "LEFT ANTI",
+    "LeftSingle": "LEFT SINGLE",
+    "ExistenceJoin": "EXISTENCE",
+}
+
+
+def _join_type(n: _Node) -> str:
+    """``joinType().sql()`` of a Join snapshot."""
+    jt = n.f["joinType"]
+    cls = (jt.get("object") or jt.get("product-class")).rsplit(".", 1)[-1]
+    return _JOIN_SQL.get(cls.rstrip("$"), cls)
+
+
+def _attr(e: _Node) -> tuple[int, str, str | None]:
+    """``(exprId, name, last qualifier part)`` of a named expression."""
+    q = e.f.get("qualifier") or []
+    if isinstance(q, str):  # a non-empty qualifier is written "[a, b]"
+        q = q[1:-1].split(", ")
+    return e.f["exprId"]["id"], e.f["name"], q[-1] if q else None
+
+
+#: operators whose output is their first child's output
+_FIRST_CHILD_OUTPUT = frozenset(
+    "Filter Sort GlobalLimit LocalLimit Offset Distinct Deduplicate"
+    " View ResolvedHint Repartition RepartitionByExpression"
+    " Sample Union Except Intersect".split()
+)
+
+
+def _output(n: _Node) -> list[tuple[int, str, str | None]]:
+    """:func:`_attr` of each attribute of ``n.output()``."""
+    if n.out is None:
+        n.out = _read_output(n)
+    return n.out
+
+
+def _read_output(n: _Node) -> list[tuple[int, str, str | None]]:
+    k = n.kind
+    if k == "Project":
+        return [_attr(e) for e in n.f["projectList"]]
+    if k == "Aggregate":
+        return [_attr(e) for e in n.f["aggregateExpressions"]]
+    if k == "Window":
+        return _output(n.ch[0]) + [_attr(e) for e in n.f["windowExpressions"]]
+    if k == "Join" and _join_type(n) != "EXISTENCE":
+        if _join_type(n) in ("LEFT SEMI", "LEFT ANTI"):
+            return _output(n.ch[0])
+        return _output(n.ch[0]) + _output(n.ch[1])
+    if k == "SubqueryAlias":
+        alias = n.f["identifier"]["name"]
+        return [(i, name, alias) for i, name, _ in _output(n.ch[0])]
+    if k in _FIRST_CHILD_OUTPUT:
+        return _output(n.ch[0])
+    if k == "OneRowRelation":
+        return []
+    if "output" in n.f:
+        return [_attr(e) for e in n.f["output"]]
+    out = []
+    for a in _seq(_live(n).output()):
+        q = _seq(a.qualifier())
+        out.append((a.exprId().id(), a.name(), q[-1] if q else None))
+    return out
+
+
+def _names(n: _Node) -> list[str]:
+    return [name for _, name, _ in _output(n)]
+
+
+def _passthrough(n: _Node) -> bool:
+    """True if every projected expression is a bare attribute —
+    reordering/pruning only, safe to flatten a WHERE over."""
+    return all(e.kind == "AttributeReference" for e in n.f["projectList"])
+
+
+def _limit_value(e: _Node) -> int:
+    if e.kind != "Literal":
+        raise Unreflectable("non-literal LIMIT/OFFSET")
+    return int(e.f["value"])
+
+
 class _Renderer:
-    def __init__(self, jvm=None) -> None:
-        self.n = 0
+    """Renders a plan snapshot as SQL. With ``decide=True`` (see
+    :meth:`render`) it walks the same arms without emitting: the emit
+    accessors return ``?`` and nothing calls the JVM."""
+
+    def __init__(self, jvm) -> None:
         self._jvm = jvm  # for Literal rendering of LocalRelation data
+        self._decide = False
+        #: registered barrier origins by output key, snapshotted once
+        #: so every pass over one statement sees the same nodes
+        self._barrier_roots: dict[tuple[int, ...], _Node] = {}
+        self.n = 0
         # per-SELECT stacks of filter conditions hoisted out of
         # flattened join sides (see _side); the arm that owns the
         # enclosing SELECT pops its frame and merges into its WHERE
         self._frames: list[list[str]] = []
+        #: per-SELECT stack of the Filter whose condition becomes that
+        #: SELECT's WHERE (None when it has none): the scope of the
+        #: WHERE conjuncts a join region below may use as edges
+        self._wheres: list[_Node | None] = []
+
+    def select(self, plan) -> str:
+        """Render the JVM logical plan ``plan`` as SQL."""
+        return self.render(_snapshot(plan))
+
+    def render(self, root: _Node, decide: bool = False) -> str:
+        self._decide, self.n, self._frames, self._wheres = decide, 0, [], []
+        sql = self._select(root)
+        # Expression.sql() spells the extract field as a quoted literal
+        # ("extract('YEAR' FROM x)") which Spark's own parser rejects —
+        # re-spell to the keyword form the grammar accepts.
+        return re.sub(r"extract\('(\w+)' FROM ", r"extract(\1 FROM ", sql)
 
     def _alias(self) -> str:
         self.n += 1
         return f"__r{self.n}"
 
+    # ---- emitted text: the only JVM calls ------------------------------
+
+    def _sql(self, node: _Node, field: str) -> str:
+        """``Expression.sql()`` of ``node``'s expression ``field`` (a
+        Join's condition unwrapped from its Option)."""
+        if self._decide:
+            return "?"
+        e = getattr(_live(node), field)()
+        return (e.get() if node.kind == "Join" else e).sql()
+
+    def _sqls(self, node: _Node, field: str) -> list[str]:
+        """``Expression.sql()`` of each expression in ``node``'s list
+        ``field``."""
+        n = len(node.f[field])
+        if self._decide or not n:
+            return ["?"] * n
+        seq = getattr(_live(node), field)()
+        return [seq.apply(i).sql() for i in range(n)]
+
+    def _relation(self, node: _Node) -> str:
+        if self._decide:
+            return "?"
+        rel = _live(node).relation()
+        fmt = rel.fileFormat().toString().lower()
+        if fmt != "parquet":
+            raise Unreflectable(f"non-parquet relation: {fmt}")
+        paths = _seq(rel.location().rootPaths())
+        if len(paths) != 1:
+            raise Unreflectable(f"multi-path relation ({len(paths)} roots)")
+        return f"parquet.`{paths[0]}`"
+
+    def _output_select_list(self, node: _Node) -> str:
+        """Explicit SELECT list reproducing ``node``'s plan output —
+        the faithful replacement for ``*`` over a scope that exposes
+        more columns than the plan (a peeled pruning Project).
+        QUALIFIED references (``y2.yk AS yk``): a pruned-away column
+        may share its bare name with a surviving one from the other
+        join side, so bare names would be ambiguous in SQL even though
+        the plan output is unambiguous."""
+        if self._decide:
+            return "?"
+        out = _live(node).output()
+        return ", ".join(
+            f"{out.apply(i).sql()} AS `{name}`"
+            for i, name in enumerate(_names(node))
+        )
+
+    def _values_item(self, node: _Node, alias: str) -> str:
+        """Inline literal data (createDataFrame / VALUES) as an inline
+        VALUES table usable directly as a FROM item."""
+        if self._decide:
+            return "?"
+        j = _live(node)
+        rows = _seq(j.data())
+        out = _seq(j.output())
+        if not rows:
+            raise Unreflectable("empty LocalRelation (no VALUES rendering)")
+        if len(rows) > 1000:
+            raise Unreflectable(f"LocalRelation too large ({len(rows)} rows)")
+        Lit = self._jvm.org.apache.spark.sql.catalyst.expressions.Literal
+        vals = []
+        for r in rows:
+            cells = []
+            for i, a in enumerate(out):
+                dt = a.dataType()
+                v = None if r.isNullAt(i) else r.get(i, dt)
+                cells.append(Lit(v, dt).sql())
+            vals.append("(" + ", ".join(cells) + ")")
+        cols = ", ".join(f"`{name}`" for name in _names(node))
+        return f"VALUES {', '.join(vals)} AS {alias}({cols})"
+
     # ---- helpers ---------------------------------------------------------
 
-    def _from_item(self, node, may_hoist: bool = True) -> tuple[str, bool]:
+    def _from_item(self, node: _Node, may_hoist: bool = True) -> tuple[str, bool]:
         """Render a node as something legal after FROM → ``(sql,
         pruned)``. ``pruned`` is True when the rendered scope exposes
         MORE columns than the plan node outputs (an inline join whose
@@ -125,28 +388,28 @@ class _Renderer:
         # select list instead of ``*``.
         peeled_prune = False
         probe, narrow = node, False
-        while _name(probe) == "Project" and self._is_passthrough_project(probe):
-            child = probe.children().apply(0)
-            if set(self._outputs(probe)) != set(self._outputs(child)):
+        while probe.kind == "Project" and _passthrough(probe):
+            child = probe.ch[0]
+            if set(_names(probe)) != set(_names(child)):
                 narrow = True
             probe = child
-        if probe is not node and _name(probe) in ("SubqueryAlias", "LocalRelation"):
-            exposed = self._outputs(probe)
+        if probe is not node and probe.kind in ("SubqueryAlias", "LocalRelation"):
+            exposed = _names(probe)
             if len(set(exposed)) == len(exposed):
                 node, peeled_prune = probe, narrow
-        if _name(node) == "SubqueryAlias":
-            alias = node.alias()
-            child = node.children().apply(0)
-            if _name(child) == "LogicalRelation":
+        if node.kind == "SubqueryAlias":
+            alias = node.f["identifier"]["name"]
+            child = node.ch[0]
+            if child.kind == "LogicalRelation":
                 return f"{self._relation(child)} AS {alias}", peeled_prune
-            if _name(child) == "LocalRelation":
+            if child.kind == "LocalRelation":
                 return self._values_item(child, alias), peeled_prune
-            return f"({self.select(child)}) AS {alias}", peeled_prune
-        if _name(node) == "LogicalRelation":
+            return f"({self._select(child)}) AS {alias}", peeled_prune
+        if node.kind == "LogicalRelation":
             return self._relation(node), peeled_prune
-        if _name(node) == "LocalRelation":
+        if node.kind == "LocalRelation":
             return self._values_item(node, self._alias()), peeled_prune
-        if _name(node) == "Join":
+        if node.kind == "Join":
             # joined-table fragment, parenthesized so it nests as one
             # FROM item while its side aliases stay visible to outer
             # ON/WHERE clauses (SQL scope, unlike a derived table)
@@ -159,9 +422,9 @@ class _Renderer:
         # alias is legal SQL shadowing; a same-scope collision fails
         # analysis -> Unreflectable, never silently-different.
         alias = self._common_qualifier(node) or self._alias()
-        return f"({self.select(node)}) AS {alias}", peeled_prune
+        return f"({self._select(node)}) AS {alias}", peeled_prune
 
-    def _flatten_side(self, node, may_hoist: bool):
+    def _flatten_side(self, node: _Node, may_hoist: bool):
         """If ``node`` is a chain of pass-through Projects / Filters
         ending at a Join, flatten it: return ``(fragment_sql,
         hoisted_conds, exposed_names, pruned)`` with the inner join
@@ -187,29 +450,27 @@ class _Renderer:
         silently-different query).
 
         Returns None when the chain doesn't end at a Join."""
-        conds: list[str] = []
+        filters: list[_Node] = []
         pruned = False
         cur = node
         while True:
-            k = _name(cur)
-            if k == "Project" and self._is_passthrough_project(cur):
-                child = cur.children().apply(0)
-                if set(self._outputs(cur)) != set(self._outputs(child)):
+            if cur.kind == "Project" and _passthrough(cur):
+                if set(_names(cur)) != set(_names(cur.ch[0])):
                     pruned = True
-                cur = child
-                continue
-            if k == "Filter":
-                conds.append(cur.condition().sql())
-                cur = cur.children().apply(0)
-                continue
-            break
-        if _name(cur) != "Join":
+                cur = cur.ch[0]
+            elif cur.kind == "Filter":
+                filters.append(cur)
+                cur = cur.ch[0]
+            else:
+                break
+        if cur.kind != "Join":
             return None
-        exposed = self._outputs(node)
+        conds = [self._sql(f, "condition") for f in filters]
+        exposed = _names(node)
         if may_hoist or not conds:
             frag, fp = self._join_fragment(cur, may_hoist)
             return f"({frag})", conds, exposed, pruned or fp
-        if cur.joinType().sql().upper() in ("INNER", "CROSS"):
+        if _join_type(cur) in ("INNER", "CROSS"):
             frag, fp = self._join_fragment(cur, False, extra_on=conds)
             return f"({frag})", [], exposed, pruned or fp
         frag, _ = self._join_fragment(cur, False)
@@ -222,7 +483,7 @@ class _Renderer:
             False,
         )
 
-    def _side(self, node, jt: str, is_left: bool, may_hoist: bool):
+    def _side(self, node: _Node, jt: str, is_left: bool, may_hoist: bool):
         """Render one join side → ``(sql, exposed_names, pruned)``.
         Flattening WITH filter hoisting into the enclosing WHERE is
         only legal where the filter commutes with every join between
@@ -235,10 +496,9 @@ class _Renderer:
         any ancestor side was non-hoistable, everything beneath it is
         barred from the enclosing WHERE and must bind filters locally
         (ON-merge or derived table, see _flatten_side)."""
-        u = jt.upper()
         hoist_ok = may_hoist and (
-            u in ("INNER", "CROSS")
-            or (is_left and u in ("LEFT SEMI", "LEFT ANTI", "LEFT OUTER"))
+            jt in ("INNER", "CROSS")
+            or (is_left and jt in ("LEFT SEMI", "LEFT ANTI", "LEFT OUTER"))
         )
         flat = self._flatten_side(node, hoist_ok and bool(self._frames))
         if flat is not None:
@@ -247,10 +507,10 @@ class _Renderer:
                 self._frames[-1].extend(conds)
             return sql, exposed, pruned
         sql, pruned = self._from_item(node, hoist_ok)
-        return sql, self._outputs(node), pruned
+        return sql, _names(node), pruned
 
     def _join_fragment(
-        self, node, may_hoist: bool = True, extra_on: list[str] | None = None
+        self, node: _Node, may_hoist: bool = True, extra_on: list[str] | None = None
     ) -> tuple[str, bool]:
         """Render a Join as a FROM-clause fragment (no SELECT wrapper)
         → ``(sql, pruned)``: qualified references from ABOVE the join
@@ -259,98 +519,59 @@ class _Renderer:
         every join in a derived table would hide them (the q21 shape).
         ``extra_on`` ANDs extra conditions into this join's ON (the
         no-hoist filter sink for INNER/CROSS, see _flatten_side)."""
-        jt = node.joinType().sql()
-        if "EXISTENCE" in jt.upper():
+        jt = _join_type(node)
+        if jt == "EXISTENCE":
             raise Unreflectable("ExistenceJoin has no SQL surface")
-        ch = node.children()
-        left, lexp, lpr = self._side(ch.apply(0), jt, True, may_hoist)
-        right, rexp, rpr = self._side(ch.apply(1), jt, False, may_hoist)
+        left, lexp, lpr = self._side(node.ch[0], jt, True, may_hoist)
+        right, rexp, rpr = self._side(node.ch[1], jt, False, may_hoist)
         pruned = lpr or rpr
         dup = set(lexp) & set(rexp)
         if dup:
             raise Unreflectable(f"join sides share output names: {sorted(dup)}")
-        cond = node.condition()
-        on = [f"({cond.get().sql()})"] if cond.isDefined() else []
+        on = [f"({self._sql(node, 'condition')})"] if "condition" in node.f else []
         on += [f"({c})" for c in (extra_on or [])]
         if on:
-            u = "INNER" if jt.upper() == "CROSS" else jt
+            u = "INNER" if jt == "CROSS" else jt
             return f"{left} {u} JOIN {right} ON {' AND '.join(on)}", pruned
-        if jt.upper() in ("INNER", "CROSS"):
+        if jt in ("INNER", "CROSS"):
             return f"{left} CROSS JOIN {right}", pruned
         raise Unreflectable(f"condition-less {jt} join")
 
-    def _src(self, node) -> tuple[str, str, str]:
-        """Render ``node`` as this SELECT's FROM source inside a fresh
-        hoist frame; returns ``(src_sql, extra_where, cols)`` where
-        ``extra_where`` collects filter conditions lifted out of
-        flattened join sides ('' when none) and ``cols`` is what a
-        faithful ``SELECT *`` over this source must say: literally
-        ``*`` normally, or an explicit column list when an inline join
-        side peeled a pruning Project (the SQL scope then exposes
-        columns the plan had projected away). The owning arm must AND
-        ``extra_where`` into its WHERE clause and use ``cols`` wherever
-        it would have written ``*``."""
+    def _from(self, node: _Node, conds: list[str] = ()) -> tuple[str, str]:
+        """Render ``node`` as this SELECT's source inside a fresh hoist
+        frame → ``(" FROM src[ WHERE ...]", cols)``. The WHERE ANDs
+        ``conds`` (the arm's own conditions) with the filter conditions
+        lifted out of flattened join sides. ``cols`` is what a faithful
+        ``SELECT *`` over this source must say: literally ``*``
+        normally, or an explicit column list when an inline join side
+        peeled a pruning Project (the SQL scope then exposes columns
+        the plan had projected away)."""
         self._frames.append([])
         try:
-            if _name(node) == "Join":
+            if node.kind == "Join":
                 src, pruned = self._join_fragment(node)
             else:
                 src, pruned = self._from_item(node)
         finally:
-            conds = self._frames.pop()
+            hoisted = self._frames.pop()
+        conds = list(conds)
+        if hoisted:
+            conds.append(" AND ".join(f"({c})" for c in hoisted))
+        where = f" WHERE {' AND '.join(conds)}" if conds else ""
         cols = self._output_select_list(node) if pruned else "*"
-        return src, " AND ".join(f"({c})" for c in conds), cols
+        return f" FROM {src}{where}", cols
 
     @staticmethod
-    def _common_qualifier(node) -> str | None:
+    def _common_qualifier(node: _Node) -> str | None:
         """The single user alias qualifying ``node``'s qualified output
         attributes, or None when outputs carry two different qualifiers
         (a join — no one name can stand for both sides). Unqualified
         outputs (window/computed columns like ``_we0``) don't vote:
         they are referenced bare above and resolve under any alias."""
-        quals = set()
-        for a in _seq(node.output()):
-            q = _seq(a.qualifier())
-            if q:
-                quals.add(q[-1])
-        if len(quals) == 1:
-            return quals.pop()
-        return None
+        quals = {q for _, _, q in _output(node) if q is not None}
+        return quals.pop() if len(quals) == 1 else None
 
-    @staticmethod
-    def _is_passthrough_project(node) -> bool:
-        """True if every projected expression is a bare attribute —
-        reordering/pruning only, safe to flatten a WHERE over."""
-        return all(
-            _name(e) == "AttributeReference" for e in _seq(node.projectList())
-        )
-
-    def _relation(self, node) -> str:
-        rel = node.relation()
-        fmt = rel.fileFormat().toString().lower()
-        if fmt != "parquet":
-            raise Unreflectable(f"non-parquet relation: {fmt}")
-        paths = _seq(rel.location().rootPaths())
-        if len(paths) != 1:
-            raise Unreflectable(f"multi-path relation ({len(paths)} roots)")
-        return f"parquet.`{paths[0]}`"
-
-    def _outputs(self, node) -> list[str]:
-        return [a.name() for a in _seq(node.output())]
-
-    def _output_select_list(self, node) -> str:
-        """Explicit SELECT list reproducing ``node``'s plan output —
-        the faithful replacement for ``*`` over a scope that exposes
-        more columns than the plan (a peeled pruning Project).
-        QUALIFIED references (``y2.yk AS yk``): a pruned-away column
-        may share its bare name with a surviving one from the other
-        join side, so bare names would be ambiguous in SQL even though
-        the plan output is unambiguous."""
-        return ", ".join(
-            f"{a.sql()} AS `{a.name()}`" for a in _seq(node.output())
-        )
-
-    def _grouping_sets(self, agg, expand) -> str:
+    def _grouping_sets(self, agg: _Node, expand: _Node) -> str:
         """Render Aggregate-over-Expand (the analyzed form of
         rollup/cube/groupingSets) back to ``GROUP BY GROUPING SETS``.
         Each Expand projection carries the group columns either as the
@@ -360,43 +581,41 @@ class _Renderer:
         aggregate list analyze to bit-extractions over
         ``spark_grouping_id``; those are re-spelled back to the marker
         functions so the reflected text parses standalone."""
-        import re
-
-        groupings = _seq(agg.groupingExpressions())
-        if not groupings or groupings[-1].name() != "spark_grouping_id":
+        groupings = agg.f["groupingExpressions"]
+        if not groupings or groupings[-1].f.get("name") != "spark_grouping_id":
             raise Unreflectable("Expand without spark_grouping_id grouping")
         k = len(groupings) - 1
         # base group expressions live in the Expand child's Project as
         # trailing aliases; only bare-attribute groups reflect (an
         # expression group would need alias-aware re-spelling)
-        proj = expand.children().apply(0)
-        if _name(proj) != "Project":
+        proj = expand.ch[0]
+        if proj.kind != "Project":
             raise Unreflectable("Expand child is not the dup-alias Project")
-        plist = _seq(proj.projectList())
+        plist = proj.f["projectList"]
         for e in plist:
-            en = _name(e)
-            if en == "AttributeReference":
+            if e.kind == "AttributeReference":
                 continue
-            if en == "Alias" and _name(e.child()) == "AttributeReference":
+            if e.kind == "Alias" and e.ch[0].kind == "AttributeReference":
                 continue
-            raise Unreflectable(
-                f"non-attribute grouping expression: {e.sql()}"
-            )
-        # the trailing k entries must specifically be the dup Aliases —
-        # a bare trailing AttributeReference passes the per-entry guard
-        # above but has no .child(); keep the error shape Unreflectable
-        tail = [plist[len(plist) - k + i] for i in range(k)]
-        if any(_name(e) != "Alias" for e in tail):
+            raise Unreflectable(f"non-attribute grouping expression: {e.kind}")
+        # the trailing k entries must specifically be the dup Aliases
+        if any(e.kind != "Alias" for e in plist[len(plist) - k :]):
             raise Unreflectable("Expand Project tail is not dup aliases")
-        gnames = [e.child().sql() for e in tail]
-        out_n = expand.output().size()
+        if self._decide:
+            gnames = ["?"] * k
+        else:
+            jlist = _live(proj).projectList()
+            gnames = [
+                jlist.apply(len(plist) - k + i).child().sql() for i in range(k)
+            ]
+        out_n = len(expand.f["output"])
         sets = []
-        for p in _seq(expand.projections()):
-            elems = [p.apply(out_n - (k + 1) + i) for i in range(k)]
+        for p in expand.f["projections"]:
+            elems = [_parse(t)[0] for t in p[out_n - (k + 1) : out_n - 1]]
             cols = [
                 gnames[i]
                 for i, e in enumerate(elems)
-                if _name(e) == "AttributeReference"
+                if e.kind == "AttributeReference"
             ]
             sets.append("(" + ", ".join(cols) + ")")
 
@@ -411,44 +630,45 @@ class _Renderer:
                 sql = sql.replace("spark_grouping_id", "grouping_id()")
             return sql
 
-        aggs = ", ".join(
-            respell(e.sql()) for e in _seq(agg.aggregateExpressions())
-        )
-        src, extra, _ = self._src(proj.children().apply(0))
-        where = f" WHERE {extra}" if extra else ""
-        return (
-            f"SELECT {aggs} FROM {src}{where}"
-            f" GROUP BY GROUPING SETS ({', '.join(sets)})"
-        )
+        aggs = ", ".join(respell(s) for s in self._sqls(agg, "aggregateExpressions"))
+        body, _ = self._from(proj.ch[0])
+        return f"SELECT {aggs}{body} GROUP BY GROUPING SETS ({', '.join(sets)})"
 
-    def _values_item(self, node, alias: str) -> str:
-        """Inline literal data (createDataFrame / VALUES) as an inline
-        VALUES table usable directly as a FROM item."""
-        rows = _seq(node.data())
-        out = _seq(node.output())
-        if not rows:
-            raise Unreflectable("empty LocalRelation (no VALUES rendering)")
-        if len(rows) > 1000:
-            raise Unreflectable(f"LocalRelation too large ({len(rows)} rows)")
-        if self._jvm is None:
-            raise Unreflectable("LocalRelation rendering needs a JVM handle")
-        Lit = self._jvm.org.apache.spark.sql.catalyst.expressions.Literal
-        vals = []
-        for r in rows:
-            cells = []
-            for i, a in enumerate(out):
-                dt = a.dataType()
-                v = None if r.isNullAt(i) else r.get(i, dt)
-                cells.append(Lit(v, dt).sql())
-            vals.append("(" + ", ".join(cells) + ")")
-        cols = ", ".join(f"`{a.name()}`" for a in out)
-        return f"VALUES {', '.join(vals)} AS {alias}({cols})"
+    def _ordered(self, sort: _Node, tail: str) -> str:
+        """``SELECT * FROM <sort's child> ORDER BY ...`` + ``tail``."""
+        order = ", ".join(self._sqls(sort, "order"))
+        body, cols = self._from(sort.ch[0])
+        return f"SELECT {cols}{body} ORDER BY {order}{tail}"
+
+    def _limited(self, child: _Node, clause: str) -> str:
+        """``child`` under a LIMIT/OFFSET ``clause``. The clause stays
+        attached to an inner ORDER BY to preserve top-k semantics (a
+        sorted subquery's order is not guaranteed to survive into the
+        outer query)."""
+        if child.kind == "Sort":
+            return self._ordered(child, clause)
+        body, cols = self._from(child)
+        return f"SELECT {cols}{body}{clause}"
 
     # ---- node renderers --------------------------------------------------
 
-    def select(self, node) -> str:  # noqa: C901 - one arm per plan node
-        kind = _name(node)
-        ch = node.children()
+    def _select(self, node: _Node) -> str:
+        """Render ``node`` as one query: a SELECT, or a set operation of
+        SELECTs. Opens the WHERE scope of that SELECT."""
+        where = None
+        if len(node.ch) == 1 and node.kind in ("Project", "Aggregate", "Filter", "Sort"):
+            where = node if node.kind == "Filter" else None
+            if where is None and node.ch[0].kind == "Filter":
+                where = node.ch[0]
+        self._wheres.append(where)
+        try:
+            return self._select_arm(node)
+        finally:
+            self._wheres.pop()
+
+    def _select_arm(self, node: _Node) -> str:  # noqa: C901 - one arm per plan node
+        kind = node.kind
+        ch = node.ch
 
         if kind == "LogicalRelation":
             return f"SELECT * FROM {self._relation(node)}"
@@ -458,178 +678,127 @@ class _Renderer:
             # pre-checkpoint plan (same output attributes by
             # construction); any other materialized RDD is data with
             # no SQL surface
-            orig = _barrier_origin(_output_key(node))
-            if orig is not None:
-                return self.select(orig)
-            raise Unreflectable("LogicalRDD with no registered origin")
+            key = tuple(i for i, _, _ in _output(node))
+            if key not in self._barrier_roots:
+                orig = _barrier_origin(key)
+                if orig is None:
+                    raise Unreflectable("LogicalRDD with no registered origin")
+                self._barrier_roots[key] = _snapshot(orig)
+            return self._select(self._barrier_roots[key])
 
-        if kind == "SubqueryAlias":
-            return self.select(ch.apply(0))
-
-        if kind == "ResolvedHint":
-            # join-strategy hints (broadcast(dim)) shape the physical
-            # plan, not the result; the reflection drops them and lets
-            # CBO/AQE re-derive the strategy — result-equivalence is
-            # what the round trip asserts
-            return self.select(ch.apply(0))
+        if kind in ("SubqueryAlias", "View", "ResolvedHint"):
+            # a View inlines its definition — faithful because a (temp)
+            # view IS its plan; the reflected text then stands alone
+            # without requiring the view to be registered. Join-strategy
+            # hints (broadcast(dim)) shape the physical plan, not the
+            # result; the reflection drops them and lets CBO/AQE
+            # re-derive the strategy — result-equivalence is what the
+            # round trip asserts
+            return self._select(ch[0])
 
         if kind == "Project":
-            exprs = ", ".join(e.sql() for e in _seq(node.projectList()))
-            child = ch.apply(0)
-            if _name(child) == "OneRowRelation":
+            exprs = ", ".join(self._sqls(node, "projectList"))
+            child = ch[0]
+            if child.kind == "OneRowRelation":
                 return f"SELECT {exprs}"
             conds = []
-            if _name(child) == "Filter":
+            if child.kind == "Filter":
                 # Project(Filter(x)): same level — SELECT list and WHERE
                 # share x's scope, keeping join aliases visible
-                conds.append(f"({child.condition().sql()})")
-                child = child.children().apply(0)
-            src, extra, _ = self._src(child)
-            if extra:
-                conds.append(extra)
-            where = f" WHERE {' AND '.join(conds)}" if conds else ""
-            return f"SELECT {exprs} FROM {src}{where}"
+                conds.append(f"({self._sql(child, 'condition')})")
+                child = child.ch[0]
+            return f"SELECT {exprs}{self._from(child, conds)[0]}"
 
         if kind == "Filter":
-            conds = [f"({node.condition().sql()})"]
-            child = ch.apply(0)
+            conds = [f"({self._sql(node, 'condition')})"]
+            child = ch[0]
             exprs = None
-            if _name(child) == "Project" and self._is_passthrough_project(child):
+            if child.kind == "Project" and _passthrough(child):
                 # Filter(passthrough-Project(x)): flatten so qualified
                 # refs in the condition still see x's join aliases; a
                 # computed projection can NOT flatten (SQL WHERE cannot
                 # reference SELECT-list aliases) and wraps instead
-                exprs = ", ".join(e.sql() for e in _seq(child.projectList()))
-                child = child.children().apply(0)
-            src, extra, cols = self._src(child)
-            if extra:
-                conds.append(extra)
-            return f"SELECT {exprs or cols} FROM {src} WHERE {' AND '.join(conds)}"
+                exprs = ", ".join(self._sqls(child, "projectList"))
+                child = child.ch[0]
+            body, cols = self._from(child, conds)
+            return f"SELECT {exprs or cols}{body}"
 
         if kind == "Aggregate":
-            groups = [e.sql() for e in _seq(node.groupingExpressions())]
-            child = ch.apply(0)
-            if _name(child) == "Expand":
+            child = ch[0]
+            if child.kind == "Expand":
                 return self._grouping_sets(node, child)
-            aggs = ", ".join(e.sql() for e in _seq(node.aggregateExpressions()))
+            groups = self._sqls(node, "groupingExpressions")
+            aggs = ", ".join(self._sqls(node, "aggregateExpressions"))
             conds = []
-            if _name(child) == "Filter":
-                conds.append(f"({child.condition().sql()})")
-                child = child.children().apply(0)
-            src, extra, _ = self._src(child)
-            if extra:
-                conds.append(extra)
-            where = f" WHERE {' AND '.join(conds)}" if conds else ""
-            sql = f"SELECT {aggs} FROM {src}{where}"
+            if child.kind == "Filter":
+                conds.append(f"({self._sql(child, 'condition')})")
+                child = child.ch[0]
+            sql = f"SELECT {aggs}{self._from(child, conds)[0]}"
             if groups:
                 sql += " GROUP BY " + ", ".join(groups)
             return sql
 
         if kind == "Join":
-            src, extra, cols = self._src(node)
-            where = f" WHERE {extra}" if extra else ""
-            return f"SELECT {cols} FROM {src}{where}"
+            body, cols = self._from(node)
+            return f"SELECT {cols}{body}"
 
         if kind == "Sort":
-            order = ", ".join(o.sql() for o in _seq(node.order()))
-            src, extra, cols = self._src(ch.apply(0))
-            where = f" WHERE {extra}" if extra else ""
-            return f"SELECT {cols} FROM {src}{where} ORDER BY {order}"
+            return self._ordered(node, "")
 
         if kind in ("GlobalLimit", "LocalLimit"):
-            n = node.limitExpr().sql()
-            child = ch.apply(0)
-            if kind == "GlobalLimit" and _name(child) == "LocalLimit":
-                child = child.children().apply(0)
-            # LIMIT must stay attached to an inner ORDER BY to preserve
-            # top-k semantics (a sorted subquery's order is not
-            # guaranteed to survive into the outer query)
-            if _name(child) == "Sort":
-                order = ", ".join(o.sql() for o in _seq(child.order()))
-                src, extra, cols = self._src(child.children().apply(0))
-                where = f" WHERE {extra}" if extra else ""
-                return f"SELECT {cols} FROM {src}{where} ORDER BY {order} LIMIT {n}"
-            src, extra, cols = self._src(child)
-            where = f" WHERE {extra}" if extra else ""
-            return f"SELECT {cols} FROM {src}{where} LIMIT {n}"
+            n = self._sql(node, "limitExpr")
+            child = ch[0]
+            if kind == "GlobalLimit" and child.kind == "LocalLimit":
+                child = child.ch[0]
+            return self._limited(child, f" LIMIT {n}")
 
         if kind == "Offset":
             # Plan Offset(m, Limit(n, c)) means "rows m..n of c" (limit
             # applied FIRST); SQL `LIMIT k OFFSET m` applies the offset
             # first — so the rendered limit must shrink to n-m.
-            off_sql = node.offsetExpr().sql()
-            child = ch.apply(0)
-            if _name(child) == "GlobalLimit":
-                lim_sql = child.limitExpr().sql()
-                try:
-                    k = int(lim_sql) - int(off_sql)
-                except ValueError as exc:
-                    raise Unreflectable("non-literal LIMIT/OFFSET") from exc
-                inner = child.children().apply(0)
-                if _name(inner) == "LocalLimit":
-                    inner = inner.children().apply(0)
-                if _name(inner) == "Sort":
-                    order = ", ".join(o.sql() for o in _seq(inner.order()))
-                    src, extra, cols = self._src(inner.children().apply(0))
-                    where = f" WHERE {extra}" if extra else ""
-                    return (
-                        f"SELECT {cols} FROM {src}{where} ORDER BY {order}"
-                        f" LIMIT {max(k, 0)} OFFSET {off_sql}"
-                    )
-                src, extra, cols = self._src(inner)
-                where = f" WHERE {extra}" if extra else ""
-                return (
-                    f"SELECT {cols} FROM {src}{where}"
-                    f" LIMIT {max(k, 0)} OFFSET {off_sql}"
-                )
-            src, extra, cols = self._src(child)
-            where = f" WHERE {extra}" if extra else ""
-            return f"SELECT {cols} FROM {src}{where} OFFSET {off_sql}"
-
-        if kind == "Distinct":
-            src, extra, cols = self._src(ch.apply(0))
-            where = f" WHERE {extra}" if extra else ""
-            return f"SELECT DISTINCT {cols} FROM {src}{where}"
+            off_sql = self._sql(node, "offsetExpr")
+            child = ch[0]
+            if child.kind != "GlobalLimit":
+                body, cols = self._from(child)
+                return f"SELECT {cols}{body} OFFSET {off_sql}"
+            k = _limit_value(child.f["limitExpr"]) - _limit_value(node.f["offsetExpr"])
+            inner = child.ch[0]
+            if inner.kind == "LocalLimit":
+                inner = inner.ch[0]
+            return self._limited(inner, f" LIMIT {max(k, 0)} OFFSET {off_sql}")
 
         if kind == "Deduplicate":
-            keys = {a.name() for a in _seq(node.keys())}
-            if keys == set(self._outputs(ch.apply(0))):
-                src, extra, cols = self._src(ch.apply(0))
-                where = f" WHERE {extra}" if extra else ""
-                return f"SELECT DISTINCT {cols} FROM {src}{where}"
-            raise Unreflectable("dropDuplicates on a key subset")
+            keys = {_attr(e)[1] for e in node.f["keys"]}
+            if keys != set(_names(ch[0])):
+                raise Unreflectable("dropDuplicates on a key subset")
+            kind = "Distinct"  # on every column it is a DISTINCT
+
+        if kind == "Distinct":
+            body, cols = self._from(ch[0])
+            return f"SELECT DISTINCT {cols}{body}"
 
         if kind == "Union":
-            parts = [f"({self.select(c)})" for c in _seq(ch)]
+            parts = [f"({self._select(c)})" for c in ch]
             return " UNION ALL ".join(parts)
 
         if kind in ("Except", "Intersect"):
             op = "EXCEPT" if kind == "Except" else "INTERSECT"
-            if node.isAll():
+            if node.f["isAll"]:
                 op += " ALL"
-            left, right = self.select(ch.apply(0)), self.select(ch.apply(1))
+            left, right = self._select(ch[0]), self._select(ch[1])
             return f"({left}) {op} ({right})"
 
         if kind == "Window":
-            wexprs = ", ".join(e.sql() for e in _seq(node.windowExpressions()))
-            src, extra, cols = self._src(ch.apply(0))
-            where = f" WHERE {extra}" if extra else ""
-            return f"SELECT {cols}, {wexprs} FROM {src}{where}"
+            wexprs = ", ".join(self._sqls(node, "windowExpressions"))
+            body, cols = self._from(ch[0])
+            return f"SELECT {cols}, {wexprs}{body}"
 
         if kind == "OneRowRelation":
             return "SELECT 1"
 
-        if kind == "View":
-            # inline the view definition — faithful because a (temp)
-            # view IS its plan; the reflected text then stands alone
-            # without requiring the view to be registered
-            return self.select(ch.apply(0))
-
         if kind == "Range":
-            return (
-                f"SELECT * FROM range({node.start()}, {node.end()},"
-                f" {node.step()})"
-            )
+            f = node.f
+            return f"SELECT * FROM range({f['start']}, {f['end']}, {f['step']})"
 
         if kind == "LocalRelation":
             return f"SELECT * FROM {self._values_item(node, self._alias())}"
@@ -639,14 +808,8 @@ class _Renderer:
 
 def reflect_sql(df: DataFrame) -> str:
     """Render ``df``'s analyzed logical plan as runnable Spark SQL."""
-    import re
-
     plan = df._jdf.queryExecution().analyzed()
-    sql = _Renderer(jvm=df.sparkSession._jvm).select(plan)
-    # Expression.sql() spells the extract field as a quoted literal
-    # ("extract('YEAR' FROM x)") which Spark's own parser rejects —
-    # re-spell to the keyword form the grammar accepts.
-    return re.sub(r"extract\('(\w+)' FROM ", r"extract(\1 FROM ", sql)
+    return _Renderer(df.sparkSession._jvm).select(plan)
 
 
 def roundtrip_equivalent(df: DataFrame, check_rows: int = 100_000) -> bool:

@@ -19,32 +19,33 @@ renderer (:mod:`xngin_spark.plans.reflect`) already proves every
 corpus shape renders to result-equivalent SQL; reordering only the
 join fragments of that same rendering inherits the whole proof
 surface. The rewriter is a _Renderer subclass overriding exactly one
-method (``_join_fragment``), so windows, grouping sets, setops,
-derived tables and subqueries all render through the battle-tested
-base arms.
+arm (``_join_fragment``), so windows, grouping sets, setops, derived
+tables and subqueries all render through the battle-tested base arms.
 
 Edges come from two places, matching how people actually write SQL:
 ON conditions inside the join tree (ANSI syntax), and equi-conjuncts
 of the ENCLOSING WHERE (TPC-H comma syntax — the reference's own
-.sql files). WHERE conjuncts used as edges are NOT removed from the
-WHERE: for inner joins the duplicate predicate is a no-op semantically
-and Catalyst collapses it, which keeps the rewrite purely additive —
-the fallback path (any unsupported shape) is the ORIGINAL text,
-always.
+.sql files). The enclosing WHERE is the renderer's own scope, so an
+outer WHERE equality is never an edge of a region below a Window,
+LIMIT or derived-table boundary. WHERE conjuncts used as edges are NOT
+removed from the WHERE: for inner joins the duplicate predicate is a
+no-op semantically and Catalyst collapses it, which keeps the rewrite
+purely additive — the fallback path (any unsupported shape) is the
+ORIGINAL text, always.
 
-Two passes, so a declined statement never pays for a render. The gate
-pass (:class:`_GateWalk`) reads the analyzed and the optimized plan
-once each as ``toJSON()`` snapshots and walks them in Python, visiting
-the join regions in the renderer's own order with the renderer's
-WHERE-conjunct scoping. Each region's vertices are its analyzed leaf
-subtrees under their single-leaf WHERE conjuncts, built as plans on
-the JVM (no SQL text is re-parsed). Leaf cardinalities and join-key
-NDVs are MEASURED: :func:`~xngin_spark.plans.reorder.measure_edge_ndv`
-runs one single-stage job for the vertices of a region that its
-session cache misses (sub-regions reuse their region's vertices), and
-none for a repeated statement. The text
-render runs only when some region fires — in ``"always"`` mode every
-region does — and returns the original text when none does.
+One snapshot, one walk, two passes. :meth:`_DPhypRenderer.select`
+reads the analyzed plan once as a ``toJSON()`` snapshot and runs the
+renderer over it in decide-only mode: no text, no JVM call except to
+build vertices. Each region's vertices are its analyzed leaf subtrees
+under their single-leaf WHERE conjuncts, built as plans on the JVM (no
+SQL text is re-parsed). Leaf cardinalities and join-key NDVs are
+MEASURED: :func:`~xngin_spark.plans.reorder.measure_edge_ndv` runs one
+single-stage job for the vertices of a region that its session cache
+misses (sub-regions reuse their region's vertices), and none for a
+repeated statement. The baseline is read from the optimized plan's
+snapshot, at the first gated region. The same walk then renders the
+text only when some region fired — in ``"always"`` mode every region
+does — so a declined statement never pays for a render.
 
 Scale note: at 100 TB the win is the ORDER itself: a mis-ordered
 6-table join materializes intermediate results orders of magnitude
@@ -56,7 +57,6 @@ per leaf plan — the lazy analog of an ANALYZE pass.
 
 from __future__ import annotations
 
-import json
 import re
 from dataclasses import dataclass
 from py4j.java_gateway import JavaClass
@@ -65,9 +65,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 from xngin_spark.plans.reflect import (
     Unreflectable,
-    _barrier_origin,
-    _output_key,
+    _attr,
+    _join_type,
+    _live,
+    _Node,
+    _output,
     _Renderer,
+    _snapshot,
 )
 from xngin_spark.plans.reorder import (
     CrossJoinNotSupported,
@@ -87,558 +91,21 @@ from xngin_spark.plans.reorder import (
 #: here they amortize over every later query touching the same leaf
 _NDV_CACHE: dict[int, dict[tuple[str, str], float]] = {}
 
-
-# ---- plan snapshots -------------------------------------------------------
-
-
-class _Node:
-    """One node of a ``toJSON()`` plan snapshot: a plan operator or an
-    expression. ``kind`` is the simple class name, ``f`` the node's own
-    fields (expression-valued ones parsed into nodes), ``ch`` its
-    children. ``up``/``idx`` locate a plan node under its parent, so
-    :meth:`_GateWalk.jvm` can fetch the live JVM node (cached in ``j``)
-    when a vertex is built from it."""
-
-    __slots__ = ("kind", "f", "ch", "up", "idx", "j")
-
-    def __init__(self, kind: str, f: dict, up, idx: int) -> None:
-        self.kind, self.f, self.ch = kind, f, []
-        self.up, self.idx, self.j = up, idx, None
-
-
-def _is_tree(v) -> bool:
-    return isinstance(v, list) and bool(v) and isinstance(v[0], dict) and "class" in v[0]
-
-
-def _parse(items: list, pos: int = 0, up=None, idx: int = 0):
-    """Rebuild the node at ``items[pos]`` of a pre-order flattened
-    tree; returns ``(node, next_pos)``."""
-    d = items[pos]
-    f = {}
-    for k, v in d.items():
-        if k in ("class", "num-children"):
-            continue
-        if _is_tree(v):
-            v = _parse(v)[0]
-        elif isinstance(v, list) and v and all(_is_tree(x) for x in v):
-            v = [_parse(x)[0] for x in v]
-        f[k] = v
-    n = _Node(d["class"].rsplit(".", 1)[-1], f, up, idx)
-    pos += 1
-    for i in range(d["num-children"]):
-        c, pos = _parse(items, pos, n, i)
-        n.ch.append(c)
-    return n, pos
-
-
-def _snapshot(jplan) -> _Node:
-    """The whole plan, read in one JVM call."""
-    root = _parse(json.loads(jplan.toJSON()))[0]
-    root.j = jplan
-    return root
-
-
-_JOIN_SQL = {
-    "Inner": "INNER",
-    "Cross": "CROSS",
-    "LeftOuter": "LEFT OUTER",
-    "RightOuter": "RIGHT OUTER",
-    "FullOuter": "FULL OUTER",
-    "LeftSemi": "LEFT SEMI",
-    "LeftAnti": "LEFT ANTI",
-    "ExistenceJoin": "EXISTENCE",
-}
-
-
-def _join_type(n: _Node) -> str:
-    """``joinType().sql()`` of a Join snapshot."""
-    jt = n.f["joinType"]
-    cls = (jt.get("object") or jt.get("product-class")).rsplit(".", 1)[-1]
-    return _JOIN_SQL.get(cls.rstrip("$"), cls)
+#: The auto gate rewrites a region only when the baseline order's
+#: estimated C_out exceeds ``MARGIN`` × the DPhyp optimum AND the
+#: absolute saving exceeds ``MIN_BENEFIT`` intermediate rows. The ratio
+#: finds genuinely mis-ordered texts (stock TPC-H gates ≤4.5× at
+#: sf0.01+, the adversarial q5 at 200-1100×); the absolute floor keeps
+#: tiny-input queries (where estimate ratios are noisy and the saving
+#: is thousands of rows, not billions) on their original plans — plan
+#: churn has a fixed cost, the benefit scales with rows saved, and at
+#: 100 TB any real mis-order clears 20k rows by six orders of magnitude
+MARGIN = 10.0
+MIN_BENEFIT = 20_000.0
 
 
 def _is_region_join(n: _Node) -> bool:
     return n.kind == "Join" and _join_type(n) in ("INNER", "CROSS")
-
-
-def _attr(e: _Node) -> tuple[int, str]:
-    return e.f["exprId"]["id"], e.f["name"]
-
-
-#: operators whose output is their first child's output
-_FIRST_CHILD_OUTPUT = frozenset(
-    "Filter Sort GlobalLimit LocalLimit Offset Distinct Deduplicate"
-    " SubqueryAlias View ResolvedHint Repartition RepartitionByExpression"
-    " Sample Union Except Intersect".split()
-)
-
-
-class _GateWalk:
-    """The gate pass: the renderer's traversal replayed over plan
-    snapshots, measuring and gating every join region it reaches.
-
-    Each method mirrors the renderer arm of the same name, without the
-    text: ``select`` opens a WHERE-conjunct scope exactly where the
-    renderer re-enters ``select`` (derived tables, setop children, the
-    inner query of a LIMIT arm), so an outer WHERE equality is never
-    classified as an edge of a region below a Window/Limit/derived-
-    table boundary. Attribute exprIds flow unchanged through those
-    boundaries, which is why the scope, not the attribute, decides.
-    The ``from_item``/``side``/``flatten_side`` arms return the
-    renderer's ``pruned`` flag, because a region with a pruned leaf is
-    never rewritten. Regions are visited in render order, sub-regions
-    of a declined region included, and each visit logs its gate
-    decision, so ``gate_log`` reads as the render would write it."""
-
-    def __init__(self, r: "_DPhypRenderer", analyzed) -> None:
-        self.r = r
-        self.root = _snapshot(analyzed)
-        self._opt: _Node | None = None  # read at the first gated region
-        self.pending: list[list] = []
-        self.frames = 0
-        #: output key of a region's top join -> the fired region
-        self.regions: dict[tuple[int, ...], _Region] = {}
-        # per-statement memos: a declined region's sub-regions revisit
-        # the same leaves, filters and key columns
-        self._jexprs: dict = {}
-        self._vertices: dict = {}
-        self._stats: dict = {}
-
-    def run(self) -> dict:
-        self.select(self.root)
-        return self.regions
-
-    # ---- JVM access (only to build vertices and render fired regions) --
-
-    def jvm(self, n: _Node):
-        if n.j is None:
-            n.j = self.jvm(n.up).children().apply(n.idx)
-        return n.j
-
-    def jexpr(self, loc):
-        """The live conjunct at ``loc = (owner, and_path)``."""
-        owner, path = loc
-        key = (id(owner), path)
-        e = self._jexprs.get(key)
-        if e is None:
-            if path:
-                e = self.jexpr((owner, path[:-1]))
-                e = e.right() if path[-1] else e.left()
-            else:
-                e = self.jvm(owner).condition()
-                if owner.kind == "Join":
-                    e = e.get()
-            self._jexprs[key] = e
-        return e
-
-    def output(self, n: _Node) -> list[tuple[int, str]]:
-        """``[(exprId, name)]`` of ``n.output()``."""
-        k = n.kind
-        if k == "Project":
-            return [_attr(e) for e in n.f["projectList"]]
-        if k == "Aggregate":
-            return [_attr(e) for e in n.f["aggregateExpressions"]]
-        if k == "Window":
-            return self.output(n.ch[0]) + [
-                _attr(e) for e in n.f["windowExpressions"]
-            ]
-        if k == "Join" and _join_type(n) != "EXISTENCE":
-            if _join_type(n) in ("LEFT SEMI", "LEFT ANTI"):
-                return self.output(n.ch[0])
-            return self.output(n.ch[0]) + self.output(n.ch[1])
-        if k in _FIRST_CHILD_OUTPUT:
-            return self.output(n.ch[0])
-        if "output" in n.f:
-            return [_attr(e) for e in n.f["output"]]
-        out = self.jvm(n).output()
-        return [
-            (a.exprId().id(), a.name())
-            for a in (out.apply(i) for i in range(out.size()))
-        ]
-
-    def names(self, n: _Node) -> list[str]:
-        return [name for _, name in self.output(n)]
-
-    # ---- the renderer's traversal ------------------------------------
-
-    def select(self, n: _Node) -> None:
-        f = None
-        if len(n.ch) == 1 and n.kind in ("Project", "Aggregate", "Filter", "Sort"):
-            f = n if n.kind == "Filter" else None
-            if f is None and n.ch[0].kind == "Filter":
-                f = n.ch[0]
-        self.pending.append(_conjuncts(f) if f is not None else [])
-        try:
-            self._select(n)
-        finally:
-            self.pending.pop()
-
-    def _select(self, n: _Node) -> None:  # noqa: C901 - one arm per plan node
-        k, ch = n.kind, n.ch
-        if k in ("LogicalRelation", "OneRowRelation", "Range", "LocalRelation"):
-            return
-        if k == "LogicalRDD":
-            orig = _barrier_origin(tuple(i for i, _ in self.output(n)))
-            if orig is None:
-                raise Unreflectable("LogicalRDD with no registered origin")
-            return self.select(_snapshot(orig))
-        if k in ("SubqueryAlias", "ResolvedHint", "View"):
-            return self.select(ch[0])
-        if k == "Project":
-            c = ch[0]
-            if c.kind == "OneRowRelation":
-                return
-            return self.src(c.ch[0] if c.kind == "Filter" else c)
-        if k == "Filter":
-            c = ch[0]
-            if c.kind == "Project" and _passthrough(c):
-                c = c.ch[0]
-            return self.src(c)
-        if k == "Aggregate":
-            c = ch[0]
-            if c.kind == "Expand":
-                if c.ch[0].kind != "Project":
-                    raise Unreflectable("Expand child is not the dup-alias Project")
-                return self.src(c.ch[0].ch[0])
-            return self.src(c.ch[0] if c.kind == "Filter" else c)
-        if k == "Join":
-            return self.src(n)
-        if k in ("Sort", "Distinct", "Window"):
-            return self.src(ch[0])
-        if k == "Deduplicate":
-            keys = {_attr(e)[1] for e in n.f["keys"]}
-            if keys != set(self.names(ch[0])):
-                raise Unreflectable("dropDuplicates on a key subset")
-            return self.src(ch[0])
-        if k in ("GlobalLimit", "LocalLimit"):
-            c = ch[0]
-            if k == "GlobalLimit" and c.kind == "LocalLimit":
-                c = c.ch[0]
-            return self.src(c.ch[0] if c.kind == "Sort" else c)
-        if k == "Offset":
-            c = ch[0]
-            if c.kind != "GlobalLimit":
-                return self.src(c)
-            c = c.ch[0]
-            if c.kind == "LocalLimit":
-                c = c.ch[0]
-            return self.src(c.ch[0] if c.kind == "Sort" else c)
-        if k == "Union":
-            for c in ch:
-                self.select(c)
-            return
-        if k in ("Except", "Intersect"):
-            self.select(ch[0])
-            self.select(ch[1])
-            return
-        raise Unreflectable(f"no SQL renderer for plan node {k}")
-
-    def src(self, n: _Node) -> None:
-        self.frames += 1
-        try:
-            if n.kind == "Join":
-                self.join_fragment(n)
-            else:
-                self.from_item(n)
-        finally:
-            self.frames -= 1
-
-    def from_item(self, n: _Node, may_hoist: bool = True) -> bool:
-        peeled, probe, narrow = False, n, False
-        while probe.kind == "Project" and _passthrough(probe):
-            child = probe.ch[0]
-            if set(self.names(probe)) != set(self.names(child)):
-                narrow = True
-            probe = child
-        if probe is not n and probe.kind in ("SubqueryAlias", "LocalRelation"):
-            exposed = self.names(probe)
-            if len(set(exposed)) == len(exposed):
-                n, peeled = probe, narrow
-        if n.kind == "SubqueryAlias":
-            if n.ch[0].kind not in ("LogicalRelation", "LocalRelation"):
-                self.select(n.ch[0])
-            return peeled
-        if n.kind in ("LogicalRelation", "LocalRelation"):
-            return peeled
-        if n.kind == "Join":
-            return self.join_fragment(n, may_hoist) or peeled
-        self.select(n)
-        return peeled
-
-    def flatten_side(self, n: _Node, may_hoist: bool) -> bool | None:
-        filtered, pruned, cur = False, False, n
-        while True:
-            if cur.kind == "Project" and _passthrough(cur):
-                if set(self.names(cur)) != set(self.names(cur.ch[0])):
-                    pruned = True
-                cur = cur.ch[0]
-            elif cur.kind == "Filter":
-                filtered, cur = True, cur.ch[0]
-            else:
-                break
-        if cur.kind != "Join":
-            return None
-        if may_hoist or not filtered:
-            return self.join_fragment(cur, may_hoist) or pruned
-        if _is_region_join(cur):
-            return self.join_fragment(cur, False) or pruned
-        self.join_fragment(cur, False)
-        return False
-
-    def side(self, n: _Node, jt: str, is_left: bool, may_hoist: bool) -> bool:
-        hoist_ok = may_hoist and (
-            jt in ("INNER", "CROSS")
-            or (is_left and jt in ("LEFT SEMI", "LEFT ANTI", "LEFT OUTER"))
-        )
-        flat = self.flatten_side(n, hoist_ok and self.frames > 0)
-        if flat is not None:
-            return flat
-        return self.from_item(n, hoist_ok)
-
-    def join_fragment(self, n: _Node, may_hoist: bool = True) -> bool:
-        try:
-            if self.region(n):
-                return False
-        except (
-            Unreflectable,
-            CrossJoinNotSupported,
-            DPhypBudgetExceeded,
-            ValueError,
-        ):
-            pass
-        jt = _join_type(n)
-        if jt == "EXISTENCE":
-            raise Unreflectable("ExistenceJoin has no SQL surface")
-        pruned = self.side(n.ch[0], jt, True, may_hoist)
-        pruned = self.side(n.ch[1], jt, False, may_hoist) or pruned
-        dup = set(self.names(n.ch[0])) & set(self.names(n.ch[1]))
-        if dup:
-            raise Unreflectable(f"join sides share output names: {sorted(dup)}")
-        if "condition" not in n.f and jt not in ("INNER", "CROSS"):
-            raise Unreflectable(f"condition-less {jt} join")
-        return pruned
-
-    # ---- one region: classify, measure, gate -------------------------
-
-    def region(self, n: _Node) -> bool:
-        """True when the region topped by ``n`` fires (is rewritten)."""
-        leaves, jconds = _flatten_region(n)
-        if len(leaves) < 3:
-            return False  # nothing to reorder
-        # attribute → leaf index by exprId (bare-name collisions across
-        # leaves are fine: ON conditions re-render via Expression.sql()
-        # which qualifies by the preserved leaf aliases — the q8
-        # self-joined-nation shape)
-        amap: dict[int, int] = {}
-        for i, lf in enumerate(leaves):
-            for eid, _ in self.output(lf):
-                amap[eid] = i
-        vname = [
-            lf.f["identifier"]["name"] if lf.kind == "SubqueryAlias" else f"__dp{i}"
-            for i, lf in enumerate(leaves)
-        ]
-        if len(set(vname)) != len(vname):
-            return False
-
-        def attr_leaves(e: _Node) -> set[int] | None:
-            """Leaf set referenced by expression e, None when any
-            attribute is foreign (e.g. a correlated outer ref)."""
-            if e.kind == "AttributeReference":
-                i = amap.get(_attr(e)[0])
-                return None if i is None else {i}
-            out: set[int] = set()
-            for c in e.ch:
-                s = attr_leaves(c)
-                if s is None:
-                    return None
-                out |= s
-            return out
-
-        # classify conjuncts: equi attr=attr across two leaves → edge;
-        # join-tree residue must be preserved on the final ON; WHERE
-        # residue stays in the WHERE the enclosing arm renders anyway
-        edges: list[Edge] = []
-        edge_locs: list = []  # parallel to `edges`
-        residual_locs: list = []
-        leaf_filters: dict[int, list] = {}
-
-        def classify(c: _Node, loc, from_where: bool) -> None:
-            if c.kind == "EqualTo" and all(
-                x.kind == "AttributeReference" for x in c.ch
-            ):
-                (lid, lname), (rid, rname) = _attr(c.ch[0]), _attr(c.ch[1])
-                li, ri = amap.get(lid), amap.get(rid)
-                if li is not None and ri is not None and li != ri:
-                    edges.append(Edge(vname[li], vname[ri], ((lname, rname),)))
-                    edge_locs.append(loc)
-                    return
-            if not from_where:
-                residual_locs.append(loc)
-                return
-            # a single-leaf WHERE conjunct is not an edge, but sharpens
-            # that leaf's cardinality — unless it holds a subquery: the
-            # attribute walk sees only the subquery's outer references,
-            # and measuring it would run the subquery. Either way it
-            # stays in the enclosing WHERE.
-            refs = attr_leaves(c)
-            if refs is not None and len(refs) == 1 and not _has_subquery(c):
-                leaf_filters.setdefault(next(iter(refs)), []).append(loc)
-
-        for c, loc in jconds:
-            classify(c, loc, from_where=False)
-        for c, loc in self.pending[-1] if self.pending else []:
-            classify(c, loc, from_where=True)
-        if not edges:
-            return False
-        for lf in leaves:  # the renderer renders every leaf first
-            if self.from_item(lf, may_hoist=False):
-                return False  # a pruned leaf has no faithful `*`
-
-        fired, log, trace = self._decide(n, leaves, vname, edges, leaf_filters, amap)
-        if log is not None:
-            self.r.gate_log.append(log)
-        if fired:
-            self.regions[tuple(i for i, _ in self.output(n))] = _Region(
-                leaves, vname, edges, edge_locs, residual_locs, trace
-            )
-        return fired
-
-    def _cls(self, name: str) -> JavaClass:
-        """The JVM class ``name``, by its full name (no package walk)."""
-        return JavaClass(name, self.r._spark._jvm._gateway_client)
-
-    def _vertex(self, lf: _Node, locs: list) -> DataFrame:
-        """The analyzed leaf under its single-leaf WHERE conjuncts, as
-        a DataFrame over ``Filter(And(...), leaf)``."""
-        key = _vertex_key(lf, locs)
-        df = self._vertices.get(key)
-        if df is None:
-            plan = self.jvm(lf)
-            if locs:
-                cond = self.jexpr(locs[0])
-                for loc in locs[1:]:
-                    cond = self._cls(_AND)(cond, self.jexpr(loc))
-                plan = self._cls(_FILTER)(cond, plan)
-            spark = self.r._spark
-            df = DataFrame(
-                self._cls(_DATASET).ofRows(spark._jsparkSession, plan), spark
-            )
-            self._vertices[key] = df
-        return df
-
-    def _measure(self, vertices: dict, keys: dict, edges: list) -> dict:
-        """:func:`measure_edge_ndv` over the session cache, called only
-        when this statement has not measured every (vertex, column)
-        pair yet; returns the same name-keyed dict."""
-        want = {(e.a, l) for e in edges for l, _ in e.on}
-        want |= {(e.b, r) for e in edges for _, r in e.on}
-        want |= {(v, "__rows__") for v, _ in want}
-        if any((keys[v], c) not in self._stats for v, c in want):
-            got = measure_edge_ndv(
-                vertices, edges, cache=_NDV_CACHE.setdefault(id(self.r._spark), {})
-            )
-            self._stats.update({(keys[v], c): x for (v, c), x in got.items()})
-        return {(v, c): self._stats[(keys[v], c)] for v, c in want}
-
-    def _decide(self, n, leaves, vname, edges, leaf_filters, amap):
-        """``(fired, gate_log entry | None, dphyp trace)``."""
-        vertices: dict[str, DataFrame] = {}
-        keys: dict[str, tuple] = {}
-        filtered = True
-        for i, lf in enumerate(leaves):
-            locs = leaf_filters.get(i, [])
-            try:
-                vertices[vname[i]] = self._vertex(lf, locs)
-            except AnalysisException:
-                # a filter that does not analyze over the leaf alone:
-                # cost the bare leaf, without measured NDVs
-                locs, filtered = [], False
-                vertices[vname[i]] = self._vertex(lf, locs)
-            keys[vname[i]] = _vertex_key(lf, locs)
-
-        # measured join-key NDVs, one job for every vertex the session
-        # cache misses (the lazy-ANALYZE discipline). Without them the
-        # System-R fallback treats a fact table's FK domain as its row
-        # count, which both mis-ranks orders (the q5 graph plans 9×
-        # slower, reorder.measure_edge_ndv docstring) and collapses the
-        # auto gate's discrimination: the adversarial fact-first q5
-        # estimates only 1.3× worse than optimal under the fallback,
-        # but 50×+ under measured NDVs — the signal the gate needs.
-        ndv = None
-        if filtered:
-            try:
-                ndv = self._measure(vertices, keys, edges)
-            except Exception:
-                ndv = None  # estimator degrades to the base-rows guess
-        rows = {
-            v: (ndv or {}).get((v, "__rows__")) or catalyst_rows(df)
-            for v, df in vertices.items()
-        }
-        trace = dphyp_order(rows, edges, ndv)
-        if self.r._mode != "auto":
-            return True, None, trace
-        base_seq = self._baseline_merge_seq(n, amap, vname)
-        syn_cost = tree_cost(rows, edges, base_seq, ndv)
-        dp_cost = tree_cost(rows, edges, [(L, R) for L, R, _ in trace], ndv)
-        fired = (
-            syn_cost > self.r._margin * dp_cost
-            and syn_cost - dp_cost > self.r._min_benefit
-        )
-        return fired, (syn_cost, dp_cost, fired), trace
-
-    def _baseline_merge_seq(self, n, amap, vname):
-        """Merge sequence of the order Spark would otherwise execute
-        for this region, in vname terms. Preferred source is the
-        ORIGINAL query's optimized plan (post-ReorderJoin — what plain
-        ``spark.sql`` actually runs); when the optimized plan has no
-        join region over exactly these leaves (boundary collapsed or
-        rewritten away), fall back to the analyzed region's own
-        syntactic nesting, which can only overstate the baseline cost
-        (the gate then errs toward rewriting — still result-identical,
-        only plan churn)."""
-        if self._opt is None and self.r._optimized is not None:
-            self._opt = _snapshot(self.r._optimized)
-        for root in (self._opt, n):
-            if root is not None:
-                seq = self._region_merge_seq(root, amap, vname)
-                if seq is not None:
-                    return seq
-        return []
-
-    def _region_merge_seq(self, root, amap, vname):
-        """Search ``root`` for an inner/cross-join region covering
-        exactly the leaf set named by ``vname`` (leaves matched by any
-        surviving output exprId — stable analyzed→optimized) and
-        return its merge pairs; None when no such region exists."""
-        target = frozenset(vname)
-
-        def leaf_names(m) -> frozenset | None:
-            ids = {amap[i] for i, _ in self.output(m) if i in amap}
-            if len(ids) != 1:
-                return None  # spans several region leaves or none
-            return frozenset([vname[next(iter(ids))]])
-
-        def flatten(m, pairs) -> frozenset | None:
-            if _is_region_join(m):
-                left = flatten(m.ch[0], pairs)
-                right = flatten(m.ch[1], pairs)
-                if left is None or right is None or left & right:
-                    return None
-                pairs.append((left, right))
-                return left | right
-            return leaf_names(m)
-
-        # walk top-down; the first join whose flattened leaf set is
-        # exactly the target is the region
-        stack = [root]
-        while stack:
-            m = stack.pop()
-            if _is_region_join(m):
-                pairs: list = []
-                if flatten(m, pairs) == target:
-                    return pairs
-            stack.extend(m.ch)
-        return None
 
 
 _AND = "org.apache.spark.sql.catalyst.expressions.And"
@@ -648,11 +115,6 @@ _DATASET = "org.apache.spark.sql.classic.Dataset"
 
 def _vertex_key(lf: _Node, locs: list) -> tuple:
     return id(lf), tuple((id(owner), path) for owner, path in locs)
-
-
-def _passthrough(n: _Node) -> bool:
-    """True if every projected expression is a bare attribute."""
-    return all(e.kind == "AttributeReference" for e in n.f["projectList"])
 
 
 def _conjuncts(owner: _Node) -> list[tuple[_Node, tuple]]:
@@ -713,42 +175,25 @@ class _Region:
 
 class _DPhypRenderer(_Renderer):
     """Reflection renderer whose inner-join regions (≥3 leaves) come
-    out in DPhyp order. Everything else is the base renderer. The
-    first ``select`` runs the gate pass (:meth:`plan`) unless the
-    caller already did."""
+    out in DPhyp order. Everything else is the base renderer; the one
+    override is the join fragment, which gates regions in decide mode
+    and emits fired ones in render mode."""
 
     def __init__(
-        self,
-        jvm,
-        spark: SparkSession,
-        mode: str = "always",
-        margin: float = 10.0,
-        min_benefit: float = 20_000.0,
-        optimized=None,
+        self, spark: SparkSession, mode: str = "always", optimized=None
     ) -> None:
-        super().__init__(jvm)
+        super().__init__(spark._jvm)
         self._spark = spark
-        #: "always" rewrites every reorderable region; "auto" rewrites
-        #: only when the baseline order's estimated C_out exceeds
-        #: ``margin`` × the DPhyp optimum AND the absolute saving
-        #: exceeds ``min_benefit`` intermediate rows — the cost gate
-        #: that makes default-on safe. The ratio finds genuinely
-        #: mis-ordered texts (stock TPC-H gates ≤4.5× at sf0.01+, the
-        #: adversarial q5 at 200-1100×); the absolute floor keeps
-        #: tiny-input queries (where estimate ratios are noisy and the
-        #: saving is thousands of rows, not billions) on their original
-        #: plans — plan churn has a fixed cost, the benefit scales with
-        #: rows saved, and at 100 TB any real mis-order clears 20k rows
-        #: by six orders of magnitude
+        #: "always" rewrites every reorderable region; "auto" only the
+        #: ones the cost gate passes (see MARGIN / MIN_BENEFIT)
         self._mode = mode
-        self._margin = float(margin)
-        self._min_benefit = float(min_benefit)
         #: the ORIGINAL query's optimized logical plan — the baseline
         #: the gate costs, because it is what Spark actually executes
         #: (ReorderJoin already repairs condition-less comma-join
         #: nestings; costing the raw syntactic tree would overstate the
         #: baseline and over-trigger rewrites)
         self._optimized = optimized
+        self._opt: _Node | None = None  # its snapshot, read when first needed
         #: one entry per rewritten region: the leaf-name merge order
         #: [(left_names, right_names), ...] — tests assert the emitted
         #: SQL (and therefore the executed plan) follows it
@@ -756,42 +201,241 @@ class _DPhypRenderer(_Renderer):
         #: one (baseline_cost, dphyp_cost, fired) per gate decision in
         #: auto mode — telemetry for tests and calibration
         self.gate_log: list[tuple[float, float, bool]] = []
-        self._walk: _GateWalk | None = None
+        #: top join (snapshot node) of each fired region
+        self.regions: dict[_Node, _Region] = {}
+        # per-statement memos: a declined region's sub-regions revisit
+        # the same leaves, filters and key columns
+        self._jexprs: dict = {}
+        self._vertices: dict = {}
+        self._stats: dict = {}
 
-    def plan(self, analyzed) -> bool:
-        """Gate pass over ``analyzed``; True when some region fires."""
-        self._walk = _GateWalk(self, analyzed)
-        return bool(self._walk.run())
-
-    def select(self, node) -> str:
-        if self._walk is None:
-            self.plan(node)
-        return super().select(node)
+    def select(self, plan) -> str | None:
+        """Gate every region of ``plan`` in decide mode, then render the
+        text only if some region fired; None when none did."""
+        root = _snapshot(plan)
+        self.render(root, decide=True)
+        return self.render(root) if self.regions else None
 
     def _join_fragment(self, node, may_hoist=True, extra_on=None):
         try:
-            frag = self._dphyp_fragment(node, extra_on)
-        except Unreflectable:
-            frag = None
-        if frag is not None:
-            return frag, False
+            if self._decide and self._gate_region(node):
+                return "?", False
+            if not self._decide and node in self.regions:
+                return self._region_fragment(self.regions[node], extra_on), False
+        except (Unreflectable, CrossJoinNotSupported, DPhypBudgetExceeded, ValueError):
+            pass
         return super()._join_fragment(node, may_hoist, extra_on)
 
-    # ---- the region rewrite ---------------------------------------------
+    # ---- decide mode: classify, measure and gate one region ---------
 
-    def _dphyp_fragment(self, node, extra_on) -> str | None:
-        if node.joinType().sql().upper() not in ("INNER", "CROSS"):
-            return None
-        region = self._walk.regions.get(_output_key(node))
-        if region is None:
-            return None  # declined, or not a region
-        walk = self._walk
+    def _gate_region(self, n: _Node) -> bool:
+        """True when the region topped by ``n`` fires (is rewritten)."""
+        leaves, jconds = _flatten_region(n)
+        if len(leaves) < 3:
+            return False  # nothing to reorder
+        # attribute → leaf index by exprId (bare-name collisions across
+        # leaves are fine: ON conditions re-render via Expression.sql()
+        # which qualifies by the preserved leaf aliases — the q8
+        # self-joined-nation shape)
+        amap: dict[int, int] = {}
+        for i, lf in enumerate(leaves):
+            for eid, _, _ in _output(lf):
+                amap[eid] = i
+        vname = [
+            lf.f["identifier"]["name"] if lf.kind == "SubqueryAlias" else f"__dp{i}"
+            for i, lf in enumerate(leaves)
+        ]
+        if len(set(vname)) != len(vname):
+            return False
+
+        def attr_leaves(e: _Node) -> set[int] | None:
+            """Leaf set referenced by expression e, None when any
+            attribute is foreign (e.g. a correlated outer ref)."""
+            if e.kind == "AttributeReference":
+                i = amap.get(_attr(e)[0])
+                return None if i is None else {i}
+            out: set[int] = set()
+            for c in e.ch:
+                s = attr_leaves(c)
+                if s is None:
+                    return None
+                out |= s
+            return out
+
+        # classify conjuncts: equi attr=attr across two leaves → edge;
+        # join-tree residue must be preserved on the final ON; WHERE
+        # residue stays in the WHERE the enclosing arm renders anyway
+        edges: list[Edge] = []
+        edge_locs: list = []  # parallel to `edges`
+        residual_locs: list = []
+        leaf_filters: dict[int, list] = {}
+
+        def classify(c: _Node, loc, from_where: bool) -> None:
+            if c.kind == "EqualTo" and all(
+                x.kind == "AttributeReference" for x in c.ch
+            ):
+                (lid, lname, _), (rid, rname, _) = _attr(c.ch[0]), _attr(c.ch[1])
+                li, ri = amap.get(lid), amap.get(rid)
+                if li is not None and ri is not None and li != ri:
+                    edges.append(Edge(vname[li], vname[ri], ((lname, rname),)))
+                    edge_locs.append(loc)
+                    return
+            if not from_where:
+                residual_locs.append(loc)
+                return
+            # a single-leaf WHERE conjunct is not an edge, but sharpens
+            # that leaf's cardinality — unless it holds a subquery: the
+            # attribute walk sees only the subquery's outer references,
+            # and measuring it would run the subquery. Either way it
+            # stays in the enclosing WHERE.
+            refs = attr_leaves(c)
+            if refs is not None and len(refs) == 1 and not _has_subquery(c):
+                leaf_filters.setdefault(next(iter(refs)), []).append(loc)
+
+        for c, loc in jconds:
+            classify(c, loc, from_where=False)
+        where = self._wheres[-1] if self._wheres else None
+        for c, loc in _conjuncts(where) if where is not None else []:
+            classify(c, loc, from_where=True)
+        if not edges:
+            return False
+        for lf in leaves:  # the render emits every leaf first
+            if self._from_item(lf, may_hoist=False)[1]:
+                return False  # a pruned leaf has no faithful `*`
+
+        fired, log, trace = self._decide_region(
+            n, leaves, vname, edges, leaf_filters, amap
+        )
+        if log is not None:
+            self.gate_log.append(log)
+        if fired:
+            self.regions[n] = _Region(
+                leaves, vname, edges, edge_locs, residual_locs, trace
+            )
+        return fired
+
+    def _cls(self, name: str) -> JavaClass:
+        """The JVM class ``name``, by its full name (no package walk)."""
+        return JavaClass(name, self._spark._jvm._gateway_client)
+
+    def _jexpr(self, loc):
+        """The live conjunct at ``loc = (owner, and_path)``."""
+        owner, path = loc
+        key = (id(owner), path)
+        e = self._jexprs.get(key)
+        if e is None:
+            if path:
+                e = self._jexpr((owner, path[:-1]))
+                e = e.right() if path[-1] else e.left()
+            else:
+                e = _live(owner).condition()
+                if owner.kind == "Join":
+                    e = e.get()
+            self._jexprs[key] = e
+        return e
+
+    def _vertex(self, lf: _Node, locs: list) -> DataFrame:
+        """The analyzed leaf under its single-leaf WHERE conjuncts, as
+        a DataFrame over ``Filter(And(...), leaf)``."""
+        key = _vertex_key(lf, locs)
+        df = self._vertices.get(key)
+        if df is None:
+            plan = _live(lf)
+            if locs:
+                cond = self._jexpr(locs[0])
+                for loc in locs[1:]:
+                    cond = self._cls(_AND)(cond, self._jexpr(loc))
+                plan = self._cls(_FILTER)(cond, plan)
+            spark = self._spark
+            df = DataFrame(
+                self._cls(_DATASET).ofRows(spark._jsparkSession, plan), spark
+            )
+            self._vertices[key] = df
+        return df
+
+    def _measure(self, vertices: dict, keys: dict, edges: list) -> dict:
+        """:func:`measure_edge_ndv` over the session cache, called only
+        when this statement has not measured every (vertex, column)
+        pair yet; returns the same name-keyed dict."""
+        want = {(e.a, l) for e in edges for l, _ in e.on}
+        want |= {(e.b, r) for e in edges for _, r in e.on}
+        want |= {(v, "__rows__") for v, _ in want}
+        if any((keys[v], c) not in self._stats for v, c in want):
+            got = measure_edge_ndv(
+                vertices, edges, cache=_NDV_CACHE.setdefault(id(self._spark), {})
+            )
+            self._stats.update({(keys[v], c): x for (v, c), x in got.items()})
+        return {(v, c): self._stats[(keys[v], c)] for v, c in want}
+
+    def _decide_region(self, n, leaves, vname, edges, leaf_filters, amap):
+        """``(fired, gate_log entry | None, dphyp trace)``."""
+        vertices: dict[str, DataFrame] = {}
+        keys: dict[str, tuple] = {}
+        filtered = True
+        for i, lf in enumerate(leaves):
+            locs = leaf_filters.get(i, [])
+            try:
+                vertices[vname[i]] = self._vertex(lf, locs)
+            except AnalysisException:
+                # a filter that does not analyze over the leaf alone:
+                # cost the bare leaf, without measured NDVs
+                locs, filtered = [], False
+                vertices[vname[i]] = self._vertex(lf, locs)
+            keys[vname[i]] = _vertex_key(lf, locs)
+
+        # measured join-key NDVs, one job for every vertex the session
+        # cache misses (the lazy-ANALYZE discipline). Without them the
+        # System-R fallback treats a fact table's FK domain as its row
+        # count, which both mis-ranks orders (the q5 graph plans 9×
+        # slower, reorder.measure_edge_ndv docstring) and collapses the
+        # auto gate's discrimination: the adversarial fact-first q5
+        # estimates only 1.3× worse than optimal under the fallback,
+        # but 50×+ under measured NDVs — the signal the gate needs.
+        ndv = None
+        if filtered:
+            try:
+                ndv = self._measure(vertices, keys, edges)
+            except Exception:
+                ndv = None  # estimator degrades to the base-rows guess
+        rows = {
+            v: (ndv or {}).get((v, "__rows__")) or catalyst_rows(df)
+            for v, df in vertices.items()
+        }
+        trace = dphyp_order(rows, edges, ndv)
+        if self._mode != "auto":
+            return True, None, trace
+        base_seq = self._baseline_merge_seq(n, amap, vname)
+        syn_cost = tree_cost(rows, edges, base_seq, ndv)
+        dp_cost = tree_cost(rows, edges, [(L, R) for L, R, _ in trace], ndv)
+        fired = syn_cost > MARGIN * dp_cost and syn_cost - dp_cost > MIN_BENEFIT
+        return fired, (syn_cost, dp_cost, fired), trace
+
+    def _baseline_merge_seq(self, n, amap, vname):
+        """Merge sequence of the order Spark would otherwise execute
+        for this region, in vname terms. Preferred source is the
+        ORIGINAL query's optimized plan (post-ReorderJoin — what plain
+        ``spark.sql`` actually runs); when the optimized plan has no
+        join region over exactly these leaves (boundary collapsed or
+        rewritten away), fall back to the analyzed region's own
+        syntactic nesting, which can only overstate the baseline cost
+        (the gate then errs toward rewriting — still result-identical,
+        only plan churn)."""
+        if self._opt is None and self._optimized is not None:
+            self._opt = _snapshot(self._optimized)
+        for root in (self._opt, n):
+            if root is not None:
+                seq = _region_merge_seq(root, amap, vname)
+                if seq is not None:
+                    return seq
+        return []
+
+    # ---- render mode: emit a fired region -----------------------------
+
+    def _region_fragment(self, region: _Region, extra_on) -> str:
         frag: dict[frozenset, str] = {}
         for v, lf in zip(region.vname, region.leaves):
-            sql, pruned = self._from_item(walk.jvm(lf), may_hoist=False)
-            if pruned:
-                return None
-            frag[frozenset([v])] = sql
+            # never pruned: the gate declines a region with a pruned leaf
+            frag[frozenset([v])] = self._from_item(lf, may_hoist=False)[0]
         edges = region.edges
         remaining = set(range(len(edges)))
         parts: list = []
@@ -805,7 +449,7 @@ class _DPhypRenderer(_Renderer):
             ]
             remaining -= set(crossing)
             on = [
-                f"({walk.jexpr(region.edge_locs[k]).sql()})"
+                f"({self._jexpr(region.edge_locs[k]).sql()})"
                 for k in sorted(crossing)
             ]
             merged = (
@@ -818,13 +462,49 @@ class _DPhypRenderer(_Renderer):
         # intermediate merges are parenthesized; strip the outer pair
         # (callers wrap the fragment themselves, matching the base)
         top = top[1:-1]
-        tail = [f"({walk.jexpr(loc).sql()})" for loc in region.residual_locs] + [
+        tail = [f"({self._jexpr(loc).sql()})" for loc in region.residual_locs] + [
             f"({c})" for c in (extra_on or [])
         ]
         if tail:
             top = f"{top} AND {' AND '.join(tail)}"
         self.traces.append(parts)
         return top
+
+
+def _region_merge_seq(root: _Node, amap, vname):
+    """Search ``root`` for an inner/cross-join region covering exactly
+    the leaf set named by ``vname`` (leaves matched by any surviving
+    output exprId — stable analyzed→optimized) and return its merge
+    pairs; None when no such region exists."""
+    target = frozenset(vname)
+
+    def leaf_names(m) -> frozenset | None:
+        ids = {amap[i] for i, _, _ in _output(m) if i in amap}
+        if len(ids) != 1:
+            return None  # spans several region leaves or none
+        return frozenset([vname[next(iter(ids))]])
+
+    def flatten(m, pairs) -> frozenset | None:
+        if _is_region_join(m):
+            left = flatten(m.ch[0], pairs)
+            right = flatten(m.ch[1], pairs)
+            if left is None or right is None or left & right:
+                return None
+            pairs.append((left, right))
+            return left | right
+        return leaf_names(m)
+
+    # walk top-down; the first join whose flattened leaf set is
+    # exactly the target is the region
+    stack = [root]
+    while stack:
+        m = stack.pop()
+        if _is_region_join(m):
+            pairs: list = []
+            if flatten(m, pairs) == target:
+                return pairs
+        stack.extend(m.ch)
+    return None
 
 
 #: leading comments/whitespace, then the first keyword — only genuine
@@ -845,11 +525,7 @@ def is_query_text(sql: str) -> bool:
 
 
 def _gate(
-    spark: SparkSession,
-    sql: str,
-    mode: str,
-    margin: float = 10.0,
-    min_benefit: float = 20_000.0,
+    spark: SparkSession, sql: str, mode: str
 ) -> tuple[DataFrame | None, str, list]:
     """``(df, text, traces)``: ``df`` is the analyzed DataFrame of the
     returned ``text`` (None for a non-query statement, which must not
@@ -864,24 +540,13 @@ def _gate(
             optimized = qe.optimizedPlan()
         except Exception:
             optimized = None
-    r = _DPhypRenderer(
-        jvm=spark._jvm,
-        spark=spark,
-        mode=mode,
-        margin=margin,
-        min_benefit=min_benefit,
-        optimized=optimized,
-    )
-    analyzed = qe.analyzed()
+    r = _DPhypRenderer(spark, mode, optimized)
     try:
-        if not r.plan(analyzed):
-            return df, sql, []
-        text = r.select(analyzed)
+        text = r.select(qe.analyzed())
     except Exception:  # Unreflectable or any renderer gap → fall back
         return df, sql, []
-    if not r.traces:
+    if text is None or not r.traces:
         return df, sql, []
-    text = re.sub(r"extract\('(\w+)' FROM ", r"extract(\1 FROM ", text)
     try:
         twin = spark.sql(text)
         twin.schema  # force analysis of the rewrite
@@ -891,11 +556,7 @@ def _gate(
 
 
 def dphyp_rewrite(
-    spark: SparkSession,
-    sql: str,
-    mode: str = "always",
-    margin: float = 10.0,
-    min_benefit: float = 20_000.0,
+    spark: SparkSession, sql: str, mode: str = "always"
 ) -> tuple[str, list]:
     """Rewrite ``sql`` with DPhyp-ordered join regions. Returns
     ``(text, traces)`` — ``traces`` is one merge-order list per
@@ -906,12 +567,12 @@ def dphyp_rewrite(
 
     ``mode="auto"`` adds the cost gate: a region is rewritten only
     when the baseline order (the ORIGINAL text's optimized plan —
-    what plain ``spark.sql`` executes) costs more than ``margin`` ×
+    what plain ``spark.sql`` executes) costs more than ``MARGIN`` ×
     the DPhyp optimum under the shared C_out estimator AND the saving
-    exceeds ``min_benefit`` intermediate rows. Well-written texts keep
+    exceeds ``MIN_BENEFIT`` intermediate rows. Well-written texts keep
     their plans; only genuinely mis-ordered ones change — the property
     that makes this safe as the default."""
-    _, text, traces = _gate(spark, sql, mode, margin, min_benefit)
+    _, text, traces = _gate(spark, sql, mode)
     return text, traces
 
 
