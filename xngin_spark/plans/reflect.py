@@ -259,9 +259,7 @@ def _limit_value(e: _Node) -> int:
 
 
 class _Renderer:
-    """Renders a plan snapshot as SQL. With ``decide=True`` (see
-    :meth:`render`) it walks the same arms without emitting: the emit
-    accessors return ``?`` and nothing calls the JVM."""
+    """Renders a plan snapshot as SQL."""
 
     def __init__(self, jvm) -> None:
         self._jvm = jvm  # for Literal rendering of LocalRelation data
@@ -284,6 +282,9 @@ class _Renderer:
         return self.render(_snapshot(plan))
 
     def render(self, root: _Node, decide: bool = False) -> str:
+        """SQL of snapshot ``root``. ``decide=True`` walks the same arms
+        without emitting: every emit accessor returns ``?`` and nothing
+        calls the JVM (a subclass decides things on the way)."""
         self._decide, self.n, self._frames, self._wheres = decide, 0, [], []
         sql = self._select(root)
         # Expression.sql() spells the extract field as a quoted literal
