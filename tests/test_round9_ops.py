@@ -801,9 +801,7 @@ def test_stream_pattern_bridges_batches(spark, sf_dir):
     sdf = stream_pattern_match(
         events_stream(spark, out, max_files_per_trigger=1)
     )
-    rows = run_available_now(
-        sdf, "t_pattern_bridge", output_mode="update", shuffle_partitions=4
-    )
+    rows = run_available_now(sdf, "t_pattern_bridge", output_mode="update")
     import pyspark.sql.functions as F
 
     final = {
@@ -1031,9 +1029,7 @@ def test_stream_attribution_bridges_batches(spark):
         shutil.rmtree(f"{out}/f{i}")
 
     sdf = stream_attribution(events_stream(spark, out, max_files_per_trigger=1))
-    rows = run_available_now(
-        sdf, "t_attr_bridge", output_mode="append", shuffle_partitions=4
-    )
+    rows = run_available_now(sdf, "t_attr_bridge", output_mode="append")
     got = {
         r["touch_type"]: (r["n"], r["v"])
         for r in rows.groupBy("touch_type")

@@ -243,21 +243,115 @@ def test_stream_stream_join_matches_batch(spark, events_dir):
     assert got_set == want_set and len(want_set) > 0
 
 
-def test_run_available_now_timeout_stops_query(spark, events_dir):
+def _run_tumbling(src, tmp_path):
+    run_available_now(stream_tumbling(src), "t_timeout", timeout_s=0.5)
+
+
+def _run_window_counts(src, tmp_path):
+    from xngin_spark.streaming.sinks import incremental_window_counts
+
+    incremental_window_counts(
+        src, str(tmp_path / "mv"), str(tmp_path / "ckpt"), timeout_s=0.5
+    )
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_run_tumbling, _run_window_counts],
+    ids=["run_available_now", "incremental_window_counts"],
+)
+def test_run_available_now_timeout_stops_query(spark, events_dir, tmp_path, run):
     # a timeout must RAISE and stop the query — returning the partially
     # populated sink would silently truncate results into a hash
     # mismatch with no diagnosable error (r2 advice item)
     before = {q.id for q in spark.streams.active}
-    sdf = stream_tumbling(events_stream(spark, events_dir, max_files_per_trigger=1))
+    src = events_stream(spark, events_dir, max_files_per_trigger=1)
     with pytest.raises(TimeoutError, match="did not finish"):
-        # 0.5s: four stateful micro-batches cannot finish that fast, but
+        # 0.5s: four micro-batches cannot finish that fast, but
         # awaitTermination requires a strictly positive timeout
-        run_available_now(sdf, "t_timeout", output_mode="append", timeout_s=0.5)
+        run(src, tmp_path)
     # the overrunning query was stopped, not left running in the background
     deadline = __import__("time").time() + 30
     while {q.id for q in spark.streams.active} - before:
         assert __import__("time").time() < deadline, "query still active after timeout"
         __import__("time").sleep(0.5)
+
+
+def test_stateful_run_uses_session_partitions(spark, sf_dir, monkeypatch):
+    """A registered stateful stream writes no session conf, and its state
+    operator runs with the session's ``spark.sql.shuffle.partitions`` —
+    another statement planning on the same session meanwhile sees the
+    session's value."""
+    from pyspark.sql.conf import RuntimeConfig
+    from pyspark.sql.streaming import DataStreamWriter
+
+    from xngin_spark.queries.windows import events_stream_session
+
+    started, conf_writes = [], []
+    start, conf_set = DataStreamWriter.start, RuntimeConfig.set
+
+    def record_start(self, *args, **kwargs):
+        q = start(self, *args, **kwargs)
+        started.append(q)
+        return q
+
+    def record_set(self, key, value):
+        conf_writes.append((key, value))
+        conf_set(self, key, value)
+
+    monkeypatch.setattr(DataStreamWriter, "start", record_start)
+    monkeypatch.setattr(RuntimeConfig, "set", record_set)
+    assert events_stream_session(spark, sf_dir).count() > 0
+    assert conf_writes == []
+    (q,) = started
+    # the stream thread records each batch's progress before the query
+    # terminates, so the finished query's history is complete
+    parts = {
+        op.numShufflePartitions
+        for p in q.recentProgress
+        for op in p.stateOperators
+    }
+    assert parts == {int(spark.conf.get("spark.sql.shuffle.partitions"))}
+
+
+@pytest.fixture
+def parquet_sink(monkeypatch, tmp_path):
+    monkeypatch.setenv("XNGIN_STREAM_SINK", "parquet")
+    monkeypatch.setenv("XNGIN_STREAM_SINK_DIR", str(tmp_path / "sink"))
+    return tmp_path / "sink"
+
+
+def test_parquet_sink_empty_stream_is_empty(spark, parquet_sink, tmp_path):
+    src = tmp_path / "empty_src"
+    src.mkdir()
+    sdf = events_stream(spark, str(src))
+    counts = sdf.groupBy("event_type").count()
+    for mode, stream in (("append", sdf), ("complete", counts)):
+        got = run_available_now(stream, f"t_empty_{mode}", output_mode=mode)
+        assert got.dtypes == stream.dtypes
+        assert got.count() == 0
+
+
+def test_parquet_sink_unreadable_log_raises(spark, events_dir, parquet_sink):
+    """A sink dir whose file-sink log cannot be read must raise, not read
+    back as an empty result. The filter garbles the log of batch 0 while
+    batch 1 runs (one file per batch), as a foreign writer might."""
+    import os
+
+    log0 = str(parquet_sink / "t_bad_log" / "_spark_metadata" / "0")
+
+    @F.udf("boolean")
+    def garble_log(_):
+        if os.path.exists(log0):
+            with open(log0, "w") as f:
+                f.write("garbage\n")
+        return True
+
+    sdf = events_stream(spark, events_dir, max_files_per_trigger=1).filter(
+        garble_log("event_id")
+    )
+    with pytest.raises(Exception, match="(?i)malformed"):
+        run_available_now(sdf, "t_bad_log").collect()
 
 
 @pytest.mark.slow

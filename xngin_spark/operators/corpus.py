@@ -16,8 +16,6 @@ of the beyond-reference pipeline surface the driver brief mandates.
 
 from __future__ import annotations
 
-import time as _time
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -619,7 +617,6 @@ def bm25_index_update(
     index_path: str,
     op_col: str = "op",
     batch_token: str | None = None,
-    phases: dict | None = None,
 ) -> None:
     """Apply a ``table_diff`` CDC delta to a persisted BM25 index
     IN PLACE — closing the incremental-maintenance triad (MinHash,
@@ -690,7 +687,6 @@ def bm25_index_update(
         return
     id_col, text_col = meta["id_col"], meta["text_col"]
 
-    _t = _time.time()  # phase marks (micro-batch floor itemization)
     # scrub EVERY batch key, not just delete/update: presence-based
     # adjustments make redelivered inserts cancel instead of double-count
     batch_ids = diff.select(id_col).distinct().localCheckpoint(eager=True)
@@ -757,9 +753,6 @@ def bm25_index_update(
         )
         .filter(F.col("df") > 0)
     )
-    if phases is not None:
-        phases["delta_compute"] = round(_time.time() - _t, 4)
-        _t = _time.time()
 
     # stage the transaction (all delta-sized) as ONE partitioned write
     # (partition column = logical table) — one Spark job instead of
@@ -806,16 +799,10 @@ def bm25_index_update(
         " n_docs long, sum_dl long",
         [intent_row],
     ).coalesce(1).write.mode("overwrite").json(f"{txn}/intent")
-    if phases is not None:
-        phases["stage_write"] = round(_time.time() - _t, 4)
-        _t = _time.time()
 
     _bm25_apply_txn(
         spark, index_path, _read_json_head(spark, f"{txn}/intent")
     )
-    if phases is not None:
-        phases["scrub_append_commit"] = round(_time.time() - _t, 4)
-        _t = _time.time()
 
     # bound the small-file debt the scrub-then-append cycle accretes:
     # a no-op listing while healthy, a bin-pack past the threshold —
@@ -825,8 +812,6 @@ def bm25_index_update(
 
     for sub in ("postings", "doclen", "termstats"):
         auto_compact(spark, f"{index_path}/{sub}")
-    if phases is not None:
-        phases["compact"] = round(_time.time() - _t, 4)
 
 
 def bm25_index_probe(

@@ -913,7 +913,7 @@ def docs_stream_dedup(spark, sf_dir):
         F.length("text").cast("long").alias("n_chars"),
     ).dropDuplicates(["fp_md5"])
     name = "docs_dedup_sink"
-    out = run_available_now(dd, name, output_mode="append", shuffle_partitions=8)
+    out = run_available_now(dd, name, output_mode="append")
     return out.select("fp_md5", "n_chars")
 
 
@@ -1108,9 +1108,7 @@ def docs_stream_quality(spark, sf_dir):
         )
         .dropDuplicates(["fp_md5"])
     )
-    out = run_available_now(
-        kept, "docs_quality_sink", output_mode="append", shuffle_partitions=8
-    )
+    out = run_available_now(kept, "docs_quality_sink", output_mode="append")
     return out.select("fp_md5", "n_words")
 
 
@@ -2052,9 +2050,7 @@ def docs_stream_classify(spark, sf_dir):
         documents_stream(spark, path)
     )
     scored = hashed_linear_score(doubled).dropDuplicates(["doc_id"])
-    return run_available_now(
-        scored, "docs_classify_sink", output_mode="append", shuffle_partitions=8
-    )
+    return run_available_now(scored, "docs_classify_sink", output_mode="append")
 
 
 @register(
@@ -2678,9 +2674,7 @@ def docs_stream_screen(spark, sf_dir):
         .select("new_id", "corpus_id", "est_jaccard")
         .dropDuplicates(["new_id", "corpus_id"])
     )
-    out = run_available_now(
-        screened, "docs_screen_sink", output_mode="append", shuffle_partitions=8
-    )
+    out = run_available_now(screened, "docs_screen_sink", output_mode="append")
     return out.select(
         "new_id", "corpus_id", F.col("est_jaccard").cast("double").alias("est_jaccard")
     )
@@ -2800,9 +2794,7 @@ def emb_stream_screen(spark, sf_dir):
         .filter(F.col("cosine") >= 0.3)
         .select("new_id", "corpus_id", "cosine")
     )
-    out = run_available_now(
-        screened, "emb_screen_sink", output_mode="append", shuffle_partitions=8
-    )
+    out = run_available_now(screened, "emb_screen_sink", output_mode="append")
     return out.select(
         "new_id", "corpus_id", F.col("cosine").cast("double").alias("cosine")
     )

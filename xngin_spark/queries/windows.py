@@ -288,7 +288,7 @@ def events_stream_tumbling(spark, sf_dir):
         events_stream(spark, os.path.join(sf_dir, "events.parquet")), delay="2 hours"
     )
     name = "stream_tumbling_sink"
-    return run_available_now(sdf, name, output_mode="complete", shuffle_partitions=8)
+    return run_available_now(sdf, name, output_mode="complete")
 
 
 @register(
@@ -457,7 +457,7 @@ def events_stream_dedup(spark, sf_dir):
     doubled = events_stream(spark, path).unionAll(events_stream(spark, path))
     sdf = stream_dedup(doubled, keys=("event_id",), delay="2 hours")
     name = "stream_dedup_sink"
-    out = run_available_now(sdf, name, output_mode="append", shuffle_partitions=8)
+    out = run_available_now(sdf, name, output_mode="append")
     return out.select("event_id", "user_id", "event_type")
 
 
@@ -486,7 +486,7 @@ def events_stream_join(spark, sf_dir):
     purchases = events_stream(spark, path).filter(F.col("event_type") == "purchase")
     sdf = stream_stream_join(clicks, purchases)
     name = "stream_join_sink"
-    return run_available_now(sdf, name, output_mode="append", shuffle_partitions=8)
+    return run_available_now(sdf, name, output_mode="append")
 
 
 @register(
@@ -684,7 +684,7 @@ def events_stream_transitions(spark, sf_dir):
         events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     name = "stream_transitions_sink"
-    pairs = run_available_now(sdf, name, output_mode="append", shuffle_partitions=8)
+    pairs = run_available_now(sdf, name, output_mode="append")
     counts = pairs.groupBy("event_type", "next_type").agg(count_star().alias("n"))
     from pyspark.sql import Window as W
 
@@ -931,7 +931,7 @@ def events_stream_session(spark, sf_dir):
         delay="2 hours",
     )
     name = "stream_session_sink"
-    return run_available_now(sdf, name, output_mode="complete", shuffle_partitions=8)
+    return run_available_now(sdf, name, output_mode="complete")
 
 
 @register(
@@ -1187,9 +1187,7 @@ def events_stream_pattern(spark, sf_dir):
         events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     name = "stream_pattern_sink"
-    rows = run_available_now(
-        sdf, name, output_mode="update", shuffle_partitions=8
-    )
+    rows = run_available_now(sdf, name, output_mode="update")
     return (
         rows.groupBy("user_id")
         .agg(
@@ -1287,9 +1285,7 @@ def events_stream_attribution(spark, sf_dir):
         events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     name = "stream_attribution_sink"
-    rows = run_available_now(
-        sdf, name, output_mode="append", shuffle_partitions=8
-    )
+    rows = run_available_now(sdf, name, output_mode="append")
     return rows.groupBy("touch_type").agg(
         count_star().alias("n_conversions"),
         dsum(F.col("value"), "attributed_value"),
@@ -1659,9 +1655,7 @@ def events_stream_pattern_custom(spark, sf_dir):
         pattern="cv*p",
     )
     name = "stream_pattern_custom_sink"
-    rows = run_available_now(
-        sdf, name, output_mode="update", shuffle_partitions=8
-    )
+    rows = run_available_now(sdf, name, output_mode="update")
     return (
         rows.groupBy("user_id")
         .agg(
@@ -1730,9 +1724,7 @@ def events_stream_attribution_linear(spark, sf_dir):
         events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     name = "stream_attribution_linear_sink"
-    rows = run_available_now(
-        sdf, name, output_mode="append", shuffle_partitions=8
-    )
+    rows = run_available_now(sdf, name, output_mode="append")
     return rows.groupBy("touch_type").agg(
         count_star().alias("n_credits"),
         _credit_musum(),
@@ -1790,9 +1782,7 @@ def events_stream_attribution_ushaped(spark, sf_dir):
         events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     name = "stream_attribution_ushaped_sink"
-    rows = run_available_now(
-        sdf, name, output_mode="append", shuffle_partitions=8
-    )
+    rows = run_available_now(sdf, name, output_mode="append")
     return rows.groupBy("touch_type").agg(
         count_star().alias("n_credits"),
         dsum(F.col("credit"), "attributed_value"),
@@ -1823,9 +1813,7 @@ def events_stream_attribution_timedecay(spark, sf_dir):
         events_stream(spark, os.path.join(sf_dir, "events.parquet"))
     )
     name = "stream_attribution_timedecay_sink"
-    rows = run_available_now(
-        sdf, name, output_mode="append", shuffle_partitions=8
-    )
+    rows = run_available_now(sdf, name, output_mode="append")
     return rows.groupBy("touch_type").agg(
         count_star().alias("n_credits"),
         _credit_musum(),

@@ -6,13 +6,14 @@ todo — doradb-sql/src/ast.rs:1278). This package wires the batch window
 semantics of ``xngin_spark.queries.windows`` to Structured Streaming so
 the same event-analytics run incrementally over a live feed:
 
-- ``io``       — schema-pinned file-stream source + test/demo sinks.
+- ``io``       — schema-pinned file-stream sources + the one availableNow
+                 runner every sink starts through.
 - ``windows``  — watermarked tumbling / sliding / session aggregations
                  (identical aggregate exprs to the batch twins, so batch
                  results are the oracle for streaming correctness).
 - ``stateful`` — custom per-key state machines via
-                 ``applyInPandasWithState`` (running totals with
-                 timeout-based eviction).
+                 ``applyInPandasWithState`` (running totals, pattern
+                 matching, attribution; bounded state, no timeouts).
 
 Scale notes: a streaming agg shuffles by (window, keys) exactly like the
 batch groupBy; state store size is bounded by the watermark horizon, so
@@ -26,7 +27,6 @@ from xngin_spark.streaming.io import (
     embeddings_stream,
     events_stream,
     run_available_now,
-    to_memory_sink,
 )
 from xngin_spark.streaming.joins import stream_dedup, stream_stream_join
 from xngin_spark.streaming.windows import (
@@ -49,7 +49,6 @@ __all__ = [
     "embeddings_stream",
     "events_stream",
     "run_available_now",
-    "to_memory_sink",
     "stream_tumbling",
     "stream_sliding",
     "stream_session",

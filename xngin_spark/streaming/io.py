@@ -1,4 +1,4 @@
-"""Streaming sources & sinks.
+"""Streaming sources and the one availableNow runner.
 
 File-stream source over the driver's events parquet. Streaming reads
 REQUIRE an explicit schema (no inference mid-stream) — consistent with
@@ -17,7 +17,13 @@ collected values match the zoneless batch/oracle answer in ANY session.
 
 from __future__ import annotations
 
+import os
+import shutil
+import tempfile
+import warnings
+
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -66,8 +72,6 @@ def _file_stream(
 ) -> DataFrame:
     """Schema-pinned parquet file stream; a single-file path is narrowed
     to its directory with a glob (FileStreamSource only lists dirs)."""
-    import os
-
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
@@ -124,30 +128,24 @@ def events_stream(
     )
 
 
-def to_memory_sink(
-    sdf: DataFrame,
-    name: str,
-    output_mode: str = "append",
-    checkpoint_location: str | None = None,
-):
-    """Start ``sdf`` into an in-memory table (test/demo sink) with an
-    availableNow trigger: process everything currently in the source,
-    respecting maxFilesPerTrigger pacing, then stop.
+def _run_to_end(
+    spark: SparkSession, writer: DataStreamWriter, what: str, timeout_s: float
+) -> None:
+    """Start a configured ``writer`` with an availableNow trigger (process
+    everything currently in the source, respecting maxFilesPerTrigger
+    pacing, then stop) and wait for it. Every sink in the package runs
+    through here.
 
-    ``checkpoint_location``: pass an explicit dir to OWN the checkpoint
-    lifecycle. Without it Spark creates a temp checkpoint and deletes
-    it asynchronously, best-effort, AFTER the query ends — that
-    background small-file I/O lands on whatever query runs next (and
-    leaks the dir entirely on a crash)."""
-    w = (
-        sdf.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-    )
-    if checkpoint_location is not None:
-        w = w.option("checkpointLocation", checkpoint_location)
-    return w.start()
+    Raises TimeoutError naming ``what`` if the run doesn't finish in
+    ``timeout_s``, after stopping the query: a partially-populated sink
+    left running in the background would silently truncate results."""
+    q = writer.trigger(availableNow=True).start()
+    try:
+        if not q.awaitTermination(timeout_s):
+            q.stop()
+            raise TimeoutError(f"{what} did not finish in {timeout_s}s")
+    finally:
+        spark.streams.resetTerminated()
 
 
 def run_available_now(
@@ -155,26 +153,32 @@ def run_available_now(
     name: str,
     output_mode: str = "append",
     timeout_s: int | None = None,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Run the stream to exhaustion and return the sink table.
 
-    Raises TimeoutError if the availableNow run doesn't finish in
-    ``timeout_s`` — returning a partially-populated sink while the query
-    keeps running in the background would silently truncate results.
+    Raises TimeoutError if the run doesn't finish in ``timeout_s``.
     Default is the XNGIN_STREAM_TIMEOUT_S env var, else 120s: the gate
     scales finish in seconds, but an sf10 probe sharing the host with
     another run can legitimately cross a fixed 120s (observed: a 75s
-    clean-host stream timing out under suite contention) — the knob
-    lets the probe stretch the bound without touching registrations.
+    clean-host stream timing out under suite contention) — the env var
+    stretches the bound without touching registrations.
 
-    ``shuffle_partitions`` right-sizes the state store for this run:
-    each stateful-operator partition carries fixed store overhead, so a
-    small stream on a 32-way default pays 4-10x in pure bookkeeping
-    (measured ~10s → ~3s on the stream-stream join at sf0.1). The conf
-    is read at query START and baked into the checkpoint, so setting it
-    around ``start()`` is exact; it is restored afterwards. Size it up
-    with state volume on a real cluster — it is a knob, not a shape.
+    Stateful operators size their state store by the session's
+    ``spark.sql.shuffle.partitions``, which session.py sets to the core
+    count; the run reads and writes no session conf, so a statement
+    planning concurrently on the same session sees the session's value.
+
+    The sink is an in-memory table unless XNGIN_STREAM_SINK=parquet:
+    the memory sink collects every row on the driver heap, which is the
+    bottleneck at scale (the sf100 state twins OOM'd a 28g JVM not on
+    streaming STATE — RocksDB moves that off-heap — but on the ~100M-row
+    memory sink itself). The parquet sink is the production shape:
+    results land under XNGIN_STREAM_SINK_DIR/<name> and the returned
+    frame reads them back. Append-mode streams write through the native
+    parquet sink; complete/update output replaces per trigger, which
+    foreachBatch mirrors with an overwrite write (availableNow → the
+    final batch wins, exactly the memory-sink table). A run that wrote
+    nothing reads back as an empty frame; any other read error raises.
 
     ``name`` should be STABLE per call site (not uuid-suffixed): the
     memory sink registers a session-scoped temp view, and a fresh name
@@ -191,20 +195,6 @@ def run_available_now(
                 "names must be unique among running queries"
             )
     spark.catalog.dropTempView(name)
-    key = "spark.sql.shuffle.partitions"
-    old = spark.conf.get(key) if shuffle_partitions is not None else None
-    if shuffle_partitions is not None:
-        spark.conf.set(key, str(shuffle_partitions))
-    # own the checkpoint dir and delete it SYNCHRONOUSLY after the run:
-    # Spark's auto temp checkpoint is removed by a background thread
-    # after query end, and that small-file I/O burst lands on the NEXT
-    # query's wall time (measured ~0.5-1s on the bench neighbor of each
-    # streaming query). Paying it here keeps cost attribution honest
-    # and never leaks the dir on a crash.
-    import os
-    import shutil
-    import tempfile
-
     if timeout_s is None:
         raw = os.environ.get("XNGIN_STREAM_TIMEOUT_S", "120")
         try:
@@ -212,71 +202,42 @@ def run_available_now(
         except ValueError:
             # a typo'd knob must read as a config warning, not as a
             # ValueError deep inside every streaming query (ADVICE r9)
-            import warnings
-
             warnings.warn(
                 f"XNGIN_STREAM_TIMEOUT_S={raw!r} is not an integer; "
                 "falling back to 120s",
                 stacklevel=2,
             )
             timeout_s = 120
-    ckpt = tempfile.mkdtemp(prefix=f"xngin-ckpt-{name}-")
-    sink = os.environ.get("XNGIN_STREAM_SINK", "memory").lower()
-    try:
-        if sink == "parquet":
-            # File-sink twin for scales where the memory sink's
-            # collect-everything-on-heap shape is the bottleneck: the
-            # sf100 state twins OOM'd a 28g JVM not on streaming STATE
-            # (RocksDB moves that off-heap) but on the ~100M-row memory
-            # sink itself. A parquet sink is the production shape —
-            # results land on disk, the returned frame reads them back.
-            # append-mode streams write through the native parquet
-            # sink; complete-mode output replaces per trigger, which
-            # foreachBatch mirrors with an overwrite write (availableNow
-            # → the final batch wins, exactly the memory-sink table).
-            base = os.environ.get(
-                "XNGIN_STREAM_SINK_DIR", "/tmp/xngin_stream_sink"
+    if os.environ.get("XNGIN_STREAM_SINK", "memory").lower() == "parquet":
+        base = os.environ.get("XNGIN_STREAM_SINK_DIR", "/tmp/xngin_stream_sink")
+        out_dir = os.path.join(base, name)
+        shutil.rmtree(out_dir, ignore_errors=True)
+        os.makedirs(out_dir, exist_ok=True)
+        if output_mode == "append":
+            writer = sdf.writeStream.format("parquet").option("path", out_dir)
+        else:
+            writer = sdf.writeStream.foreachBatch(
+                lambda df, _bid: df.write.mode("overwrite").parquet(out_dir)
             )
-            out_dir = os.path.join(base, name)
-            shutil.rmtree(out_dir, ignore_errors=True)
-            os.makedirs(out_dir, exist_ok=True)
-            if output_mode == "append":
-                q = (
-                    sdf.writeStream.format("parquet")
-                    .option("path", out_dir)
-                    .option("checkpointLocation", ckpt)
-                    .outputMode("append")
-                    .trigger(availableNow=True)
-                    .start()
-                )
-            else:
-                q = (
-                    sdf.writeStream.foreachBatch(
-                        lambda df, _bid: df.write.mode("overwrite").parquet(
-                            out_dir
-                        )
-                    )
-                    .option("checkpointLocation", ckpt)
-                    .outputMode(output_mode)
-                    .trigger(availableNow=True)
-                    .start()
-                )
-            if not q.awaitTermination(timeout_s):
-                q.stop()
-                raise TimeoutError(
-                    f"stream {name!r} did not finish in {timeout_s}s"
-                )
-            try:
-                return spark.read.schema(sdf.schema).parquet(out_dir)
-            except Exception:
-                return spark.createDataFrame([], sdf.schema)
-        q = to_memory_sink(sdf, name, output_mode, checkpoint_location=ckpt)
-        if not q.awaitTermination(timeout_s):
-            q.stop()
-            raise TimeoutError(f"stream {name!r} did not finish in {timeout_s}s")
+    else:
+        out_dir = None
+        writer = sdf.writeStream.format("memory").queryName(name)
+    # own the checkpoint dir and delete it SYNCHRONOUSLY after the run:
+    # Spark's auto temp checkpoint is removed by a background thread
+    # after query end, and that small-file I/O burst lands on the NEXT
+    # query's wall time (measured ~0.5-1s on the bench neighbor of each
+    # streaming query). Paying it here keeps cost attribution honest
+    # and never leaks the dir on a crash.
+    ckpt = tempfile.mkdtemp(prefix=f"xngin-ckpt-{name}-")
+    try:
+        _run_to_end(
+            spark,
+            writer.outputMode(output_mode).option("checkpointLocation", ckpt),
+            f"stream {name!r}",
+            timeout_s,
+        )
     finally:
-        if old is not None:
-            spark.conf.set(key, old)
         shutil.rmtree(ckpt, ignore_errors=True)
-        spark.streams.resetTerminated()
-    return spark.table(name)
+    if out_dir is None:
+        return spark.table(name)
+    return spark.read.schema(sdf.schema).parquet(out_dir)

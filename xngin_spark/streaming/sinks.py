@@ -20,51 +20,11 @@ the writer touches only partitions the watermark is still moving.
 
 from __future__ import annotations
 
-import time
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.errors import AnalysisException
 
-#: Per-micro-batch phase timings of the maintenance sinks (the
-#: round-8 verdict asked for the micro-batch FLOOR itemized: epoch
-#: write, scrub, state commit — so continuous-run latency is
-#: predictable from an artifact instead of inferred from suite
-#: totals). Gated: recording costs two time.time() calls per phase and
-#: nothing when off; the log is driver-side metadata. Enabled by
-#: tools/stream_floor.py, drained per run.
-_PHASE_LOG: list[dict] = []
-_PHASES_ON = False
-
-
-def record_batch_phases(on: bool = True) -> None:
-    global _PHASES_ON
-    _PHASES_ON = on
-
-
-def drain_batch_phases() -> list[dict]:
-    out = list(_PHASE_LOG)
-    _PHASE_LOG.clear()
-    return out
-
-
-@contextmanager
-def _phase(rec: dict | None, name: str):
-    if rec is None:
-        yield
-        return
-    t0 = time.time()
-    yield
-    rec[name] = round(time.time() - t0, 4)
-
-
-def _phase_rec(sink: str, batch_id: int) -> dict | None:
-    if not _PHASES_ON:
-        return None
-    rec = {"sink": sink, "batch_id": batch_id}
-    _PHASE_LOG.append(rec)
-    return rec
+from xngin_spark.streaming.io import _run_to_end, to_naive
 
 
 def incremental_window_counts(
@@ -89,8 +49,6 @@ def incremental_window_counts(
     )
     # zoneless bounds out (see streaming/io.to_naive) so the parquet MV
     # carries the same naive values as the batch twin in any session tz
-    from xngin_spark.streaming.io import to_naive
-
     agg = agg.withColumn("window_start", to_naive("window_start"))
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
@@ -104,16 +62,14 @@ def incremental_window_counts(
             .parquet(path)
         )
 
-    q = (
+    _run_to_end(
+        agg.sparkSession,
         agg.writeStream.foreachBatch(upsert)
         .outputMode("update")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        "incremental sink",
+        timeout_s,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"incremental sink did not finish in {timeout_s}s")
 
 
 def incremental_ivf_index(
@@ -150,16 +106,14 @@ def incremental_ivf_index(
             .parquet(f"{path}/batch={batch_id}")
         )
 
-    q = (
+    _run_to_end(
+        assigned.sparkSession,
         assigned.writeStream.foreachBatch(write_batch)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        "ivf index sink",
+        timeout_s,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"ivf index sink did not finish in {timeout_s}s")
 
 
 def streaming_ingest_admit(
@@ -230,16 +184,14 @@ def streaming_ingest_admit(
         diff = admitted.select(id_col).withColumn("op", F.lit("update"))
         minhash_index_update(admitted, diff, index_path)
 
-    q = (
+    _run_to_end(
+        sdf.sparkSession,
         sdf.writeStream.foreachBatch(admit)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        "ingest-admit sink",
+        timeout_s,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"ingest-admit sink did not finish in {timeout_s}s")
 
 
 def streaming_vector_ingest_admit(
@@ -332,18 +284,14 @@ def streaming_vector_ingest_admit(
             admitted, diff, index_path, centroids, id_col, vec_col
         )
 
-    q = (
+    _run_to_end(
+        sdf.sparkSession,
         sdf.writeStream.foreachBatch(admit)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        "vector ingest-admit sink",
+        timeout_s,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(
-            f"vector ingest-admit sink did not finish in {timeout_s}s"
-        )
 
 
 def _latest_rollup_epoch(rollup_path: str, below: int | None = None) -> int | None:
@@ -426,7 +374,6 @@ def _apply_rollup_batch(
     else:
         seed = dml.agg_state_additive_multi
         maintain = dml.maintain_agg_additive_multi
-    rec = _phase_rec("rollup", batch_id)
     prior = _latest_rollup_epoch(rollup_path, below=batch_id)
     if prior is None:
         raise ValueError(
@@ -442,23 +389,19 @@ def _apply_rollup_batch(
     updated = maintain(
         agg_old, batch_df.dropDuplicates(key_cols), group_col, val_cols
     )
-    with _phase(rec, "epoch_write"):
-        updated.write.mode("overwrite").parquet(
-            f"{rollup_path}/epoch={batch_id}"
-        )
+    updated.write.mode("overwrite").parquet(f"{rollup_path}/epoch={batch_id}")
     # prune epochs OLDER than this batch's predecessor: a foreachBatch
     # replay can only be of THIS batch (which re-reads ``prior`` — kept)
     # or a later one (which reads ``batch_id``'s output or newer), so
     # anything below ``prior`` is unreachable state. Keeps the state
     # dir at two rollup-sized epochs regardless of stream lifetime.
-    with _phase(rec, "prune"):
-        for p in glob.glob(os.path.join(rollup_path, "epoch=*")):
-            try:
-                e = int(os.path.basename(p).split("=", 1)[1])
-            except ValueError:
-                continue
-            if e < prior:
-                shutil.rmtree(p, ignore_errors=True)
+    for p in glob.glob(os.path.join(rollup_path, "epoch=*")):
+        try:
+            e = int(os.path.basename(p).split("=", 1)[1])
+        except ValueError:
+            continue
+        if e < prior:
+            shutil.rmtree(p, ignore_errors=True)
 
 
 def streaming_agg_maintain(
@@ -525,16 +468,14 @@ def _run_rollup_stream(
             batch_df, batch_id, rollup_path, group_col, val_cols, key_cols
         )
 
-    q = (
+    _run_to_end(
+        change_stream.sparkSession,
         change_stream.writeStream.foreachBatch(apply)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        "agg-maintain sink",
+        timeout_s,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"agg-maintain sink did not finish in {timeout_s}s")
 
 
 def apply_cdc_bm25_batch(
@@ -561,25 +502,19 @@ def apply_cdc_bm25_batch(
     from xngin_spark.operators.corpus import bm25_index_update
 
     spark = batch_df.sparkSession
-    rec = _phase_rec("bm25", batch_id)
     meta = spark.read.json(f"{index_path}/_meta").head()
     id_col, text_col = meta["id_col"], meta["text_col"]
-    with _phase(rec, "dedup_checkpoint"):
-        b = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
+    b = batch_df.dropDuplicates([id_col]).localCheckpoint(eager=True)
     if not b.head(1):
         return
     snapshot_like = b.filter(F.col("op").isin("insert", "update")).select(
         F.col(id_col), F.col(f"_new.{text_col}").alias(text_col)
     )
-    # bm25_index_update itemizes its own sub-phases into rec
-    # (delta_compute / stage_write / scrub_append_commit / compact) —
-    # no parent wrapper, so the phase sum never double-counts
     bm25_index_update(
         snapshot_like,
         b.select(id_col, "op"),
         index_path,
         batch_token=f"{token_prefix}:{batch_id}",
-        phases=rec,
     )
 
 
@@ -601,13 +536,11 @@ def streaming_bm25_maintain(
             batch_df, batch_id, index_path, token_prefix=checkpoint_dir
         )
 
-    q = (
+    _run_to_end(
+        change_stream.sparkSession,
         change_stream.writeStream.foreachBatch(apply)
         .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
+        "bm25-maintain sink",
+        timeout_s,
     )
-    if not q.awaitTermination(timeout_s):
-        q.stop()
-        raise TimeoutError(f"bm25-maintain sink did not finish in {timeout_s}s")

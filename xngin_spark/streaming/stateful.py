@@ -1,10 +1,11 @@
 """Custom stateful streaming operator via ``applyInPandasWithState``.
 
 Beyond-reference capability (the reference has no stateful execution at
-all — SURVEY.md §2.5). Pattern demonstrated: per-key running aggregate
-that survives across micro-batches, with processing-time timeout
-eviction — the skeleton for sessionization, dedup-within-horizon, or
-online feature accumulation.
+all — SURVEY.md §2.5). Pattern demonstrated: per-key state that
+survives across micro-batches (running totals, transitions, DFA pattern
+counts, attribution carries). No operator sets a state timeout: each
+key's state is bounded by construction (a few scalars, or the touches
+inside a fixed lookback), so nothing needs evicting.
 
 State is per-key and partitioned by Spark's shuffle on the grouping key,
 so the operator scales horizontally: each executor holds state only for
@@ -13,7 +14,7 @@ its key range; the state store checkpoints incrementally.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import numpy as np
@@ -41,10 +42,6 @@ _STATE_SCHEMA = T.StructType(
 def _update_totals(
     key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        # horizon passed with no new events: emit nothing, drop state
-        state.remove()
-        return
     n, total = state.get if state.exists else (0, 0.0)
     for pdf in pdfs:
         n += int(len(pdf))
@@ -112,9 +109,6 @@ def _update_transitions(
     the processor runs on applyInPandasWithState — semantics are
     identical for a single value state with no timers.)
     """
-    if state.hasTimedOut:
-        state.remove()
-        return
     pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
     types = pdf["event_type"].tolist()
     prev = ([state.get[0]] if state.exists else []) + types
@@ -187,37 +181,38 @@ def dfa_step(s: int, c: str) -> tuple[int, int]:
     return 0, 0
 
 
-def _update_pattern(
-    key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    """The streaming half of events_pattern_match: the regex is
-    compiled to an explicit DFA whose CURRENT STATE is the only thing
-    carried across micro-batches — Flink-CEP's design (pattern → NFA,
-    per-key automaton state), which is what makes sequence matching
-    bounded-state at 100 TB: no per-user history is ever stored, only
-    (state, counters). Rows sort by (ts, event_id) inside the batch —
-    the batch twin's exact tie-break; cross-batch event-time order is
-    the file-source arrival order, as for every stateful operator
-    here."""
-    if state.hasTimedOut:
-        state.remove()
-        return
-    s, n_events, n_matches = state.get if state.exists else (0, 0, 0)
-    pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-    for c in pdf["event_type"].str[0].tolist():
-        if n_events >= PATTERN_EVENT_CAP:
-            break
-        n_events += 1
-        s, hit = dfa_step(s, c)
-        n_matches += hit
-    state.update((s, n_events, n_matches))
-    yield pd.DataFrame(
-        {
-            "user_id": [key[0]],
-            "n_events": [n_events],
-            "n_matches": [n_matches],
-        }
-    )
+def _pattern_updater(step: Callable[[int, str], tuple[int, int]], start: int):
+    """The streaming half of events_pattern_match, for one DFA given by
+    its ``step`` function and ``start`` state: the regex is compiled to
+    an explicit DFA whose CURRENT STATE is the only thing carried across
+    micro-batches — Flink-CEP's design (pattern → NFA, per-key automaton
+    state), which is what makes sequence matching bounded-state at
+    100 TB: no per-user history is ever stored, only (state, counters).
+    Rows sort by (ts, event_id) inside the batch — the batch twin's
+    exact tie-break; cross-batch event-time order is the file-source
+    arrival order, as for every stateful operator here."""
+
+    def update(
+        key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        s, n_events, n_matches = state.get if state.exists else (start, 0, 0)
+        pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
+        for c in pdf["event_type"].str[0].tolist():
+            if n_events >= PATTERN_EVENT_CAP:
+                break
+            n_events += 1
+            s, hit = step(s, c)
+            n_matches += hit
+        state.update((s, n_events, n_matches))
+        yield pd.DataFrame(
+            {
+                "user_id": [key[0]],
+                "n_events": [n_events],
+                "n_matches": [n_matches],
+            }
+        )
+
+    return update
 
 
 def stream_pattern_match(sdf: DataFrame, pattern: str | None = None) -> DataFrame:
@@ -234,34 +229,12 @@ def stream_pattern_match(sdf: DataFrame, pattern: str | None = None) -> DataFram
     semantics; the per-user state stays the same 3 integers
     regardless of pattern complexity."""
     if pattern is None:
-        update = _update_pattern
+        update = _pattern_updater(dfa_step, 0)
     else:
         from xngin_spark.streaming.cep import CompiledPattern
 
         compiled = CompiledPattern(pattern)
-
-        def update(key, pdfs, state):  # noqa: ANN001 — pandas-UDF shape
-            if state.hasTimedOut:
-                state.remove()
-                return
-            s, n_events, n_matches = (
-                state.get if state.exists else (compiled.START, 0, 0)
-            )
-            pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-            for c in pdf["event_type"].str[0].tolist():
-                if n_events >= PATTERN_EVENT_CAP:
-                    break
-                n_events += 1
-                s, hit = compiled.step(s, c)
-                n_matches += hit
-            state.update((s, n_events, n_matches))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n_events],
-                    "n_matches": [n_matches],
-                }
-            )
+        update = _pattern_updater(compiled.step, compiled.START)
 
     sdf = _project(sdf, "user_id", "ts", "event_id", "event_type")
     return sdf.groupBy("user_id").applyInPandasWithState(
@@ -322,9 +295,6 @@ def _update_attribution(
     is the UNTOUCHED input double (no pandas arithmetic), so the
     consumer's decimal-sum aggregate hash-matches the batch oracle
     bit-for-bit."""
-    if state.hasTimedOut:
-        state.remove()
-        return
     touch, hw = state.get if state.exists else ("", None)
     pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
     batch_min = int(pdf["ts"].iloc[0].value)
@@ -417,9 +387,6 @@ def _update_attribution_linear(
     expression, so the consumer's micro-unit-truncated sum matches the
     batch report bit-for-bit. Ordering precondition checked against the
     carried high-watermark exactly as stream_attribution does."""
-    if state.hasTimedOut:
-        state.remove()
-        return
     nc, nv, hw = state.get if state.exists else (0, 0, None)
     pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
     batch_min = int(pdf["ts"].iloc[0].value)
@@ -539,9 +506,6 @@ def _update_attribution_ushaped(
     window expression — so the sink's dsum aggregate hash-matches the
     batch report. Ordering precondition checked via the carried
     high-watermark."""
-    if state.hasTimedOut:
-        state.remove()
-        return
     ft, lt, hw = state.get if state.exists else ("", "", None)
     pdf = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
     batch_min = int(pdf["ts"].iloc[0].value)
@@ -680,9 +644,6 @@ def _update_attribution_timedecay(
     twin's RANGE-frame counts produce — then credit = value *
     (w/tot) in the same IEEE tree. Touches older than the lookback
     (relative to the high-watermark) are pruned every batch."""
-    if state.hasTimedOut:
-        state.remove()
-        return
     touches_s, hw = state.get if state.exists else ("", None)
     touches: list[tuple[str, int]] = [
         (t.split("@")[0], int(t.split("@")[1]))
