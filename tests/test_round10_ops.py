@@ -541,7 +541,12 @@ def test_cep_stream_custom_pattern_spans_batches(spark, tmp_path):
         out.writeStream.format("memory").queryName("cep_custom")
         .outputMode("update").trigger(availableNow=True).start()
     )
-    assert q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        # a timed-out run must not keep streaming into later tests
+        q.stop()
+        spark.streams.resetTerminated()
     got = {
         r["user_id"]: r["n_matches"]
         for r in spark.sql(
@@ -592,7 +597,12 @@ def test_stream_attribution_linear_bridges_batches(spark, tmp_path):
         out.writeStream.format("memory").queryName("attr_linear_bridge")
         .outputMode("append").trigger(availableNow=True).start()
     )
-    assert q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        # a timed-out run must not keep streaming into later tests
+        q.stop()
+        spark.streams.resetTerminated()
     got = sorted(
         tuple(r)
         for r in spark.sql(
@@ -631,7 +641,12 @@ def _run_attr_stream(spark, tmp_path, op, batches, query_name):
         op(sdf).writeStream.format("memory").queryName(query_name)
         .outputMode("append").trigger(availableNow=True).start()
     )
-    assert q.awaitTermination(120)
+    try:
+        assert q.awaitTermination(120)
+    finally:
+        # a timed-out run must not keep streaming into later tests
+        q.stop()
+        spark.streams.resetTerminated()
     return sorted(
         tuple(r)
         for r in spark.sql(

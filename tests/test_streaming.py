@@ -277,6 +277,31 @@ def test_run_available_now_timeout_stops_query(spark, events_dir, tmp_path, run)
         __import__("time").sleep(0.5)
 
 
+def test_stream_timeout_env_reaches_foreach_batch_sinks(
+    spark, events_dir, tmp_path, monkeypatch
+):
+    """XNGIN_STREAM_TIMEOUT_S bounds every sink, not only
+    ``run_available_now``: a foreachBatch sink called without
+    ``timeout_s`` waits with the env value."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    from xngin_spark.streaming.sinks import incremental_window_counts
+
+    waited, wait = [], StreamingQuery.awaitTermination
+
+    def record_wait(self, timeout=None):
+        waited.append(timeout)
+        return wait(self, timeout)
+
+    monkeypatch.setenv("XNGIN_STREAM_TIMEOUT_S", "97")
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", record_wait)
+    incremental_window_counts(
+        events_stream(spark, events_dir), str(tmp_path / "mv"),
+        str(tmp_path / "ckpt"),
+    )
+    assert waited == [97]
+
+
 def test_stateful_run_uses_session_partitions(spark, sf_dir, monkeypatch):
     """A registered stateful stream writes no session conf, and its state
     operator runs with the session's ``spark.sql.shuffle.partitions`` —

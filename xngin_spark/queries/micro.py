@@ -1620,7 +1620,6 @@ def orders_stream_agg_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderpriority",
             "o_totalprice",
             ["o_orderkey"],
-            timeout_s=120,
         )
         final = _latest_rollup_epoch(rollup)
         out = (

@@ -14,6 +14,19 @@ Spark task. Conf here is chosen for the analytics path:
 - Arrow enabled: pandas-UDF fast path for the operators/ package.
 - UTC + session timezone pinned so timestamp semantics are stable and
   match the reference's zoneless Datetime (doradb-datatype/src/lib.rs:49).
+- One driver JIT policy: C2 (tier-4) thresholds at 10x the JDK 17
+  defaults. A statement here is mostly planning (dialect rewrite, the
+  DPhyp gate, Catalyst analysis and optimization, Janino compiling the
+  generated classes), and HotSpot spent more CPU optimizing that
+  lukewarm per-plan code than Spark spent running it: over a warm
+  sf0.01 tpch_wire pass the JIT compiled for 1.25 s per statement,
+  mostly in its C2 threads. With the thresholds raised, per-plan code
+  stays at C1 and C2 compiles only what is hot in proportion to the
+  data: 0.49 s per statement, and CPU per statement fell 40%
+  (tpch_wire) and 31% (cdc_stream). The trade-off is a heavy query's
+  first execution, whose scan loops reach C2 later: on six sf1 TPC-H
+  queries, first executions moved -14% to +8% per query (+0.5% in
+  total) and warm runs -4% (SCALE.md).
 """
 
 from __future__ import annotations
@@ -141,6 +154,22 @@ def get_spark(
     # memory only holds plans + collected scalars and can stay modest.
     mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     builder = builder.config("spark.driver.memory", mem)
+    # C2 only for code that is hot in proportion to the data: the four
+    # tier-4 thresholds at 10x their JDK 17 defaults (5000/600/15000/
+    # 40000), so per-plan code stays at C1 (module docstring). Set as
+    # the driver's default Java options, not its extra ones: callers
+    # pass their own extraJavaOptions (perfbench: heap and tmpdir),
+    # which would replace the policy, while Spark prepends the default
+    # options to them. Driver only: on a cluster the executors' scan
+    # loops keep the JDK defaults; in local[N] they share this JVM,
+    # which is why SCALE.md records the sf1 first executions.
+    builder = builder.config(
+        "spark.driver.defaultJavaOptions",
+        "-XX:Tier4InvocationThreshold=50000"
+        " -XX:Tier4MinInvocationThreshold=6000"
+        " -XX:Tier4CompileThreshold=150000"
+        " -XX:Tier4BackEdgeThreshold=400000",
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

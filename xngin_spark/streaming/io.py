@@ -129,7 +129,10 @@ def events_stream(
 
 
 def _run_to_end(
-    spark: SparkSession, writer: DataStreamWriter, what: str, timeout_s: float
+    spark: SparkSession,
+    writer: DataStreamWriter,
+    what: str,
+    timeout_s: float | None,
 ) -> None:
     """Start a configured ``writer`` with an availableNow trigger (process
     everything currently in the source, respecting maxFilesPerTrigger
@@ -138,7 +141,25 @@ def _run_to_end(
 
     Raises TimeoutError naming ``what`` if the run doesn't finish in
     ``timeout_s``, after stopping the query: a partially-populated sink
-    left running in the background would silently truncate results."""
+    left running in the background would silently truncate results.
+    ``None`` means the XNGIN_STREAM_TIMEOUT_S env var, else 120s: the
+    gate scales finish in seconds, but an sf10 probe sharing the host
+    with another run can legitimately cross a fixed 120s (observed: a
+    75s clean-host stream timing out under suite contention) — the env
+    var stretches every sink's bound without touching registrations."""
+    if timeout_s is None:
+        raw = os.environ.get("XNGIN_STREAM_TIMEOUT_S", "120")
+        try:
+            timeout_s = int(raw)
+        except ValueError:
+            # a typo'd knob must read as a config warning, not as a
+            # ValueError deep inside every streaming query (ADVICE r9)
+            warnings.warn(
+                f"XNGIN_STREAM_TIMEOUT_S={raw!r} is not an integer; "
+                "falling back to 120s",
+                stacklevel=3,
+            )
+            timeout_s = 120
     q = writer.trigger(availableNow=True).start()
     try:
         if not q.awaitTermination(timeout_s):
@@ -156,12 +177,8 @@ def run_available_now(
 ) -> DataFrame:
     """Run the stream to exhaustion and return the sink table.
 
-    Raises TimeoutError if the run doesn't finish in ``timeout_s``.
-    Default is the XNGIN_STREAM_TIMEOUT_S env var, else 120s: the gate
-    scales finish in seconds, but an sf10 probe sharing the host with
-    another run can legitimately cross a fixed 120s (observed: a 75s
-    clean-host stream timing out under suite contention) — the env var
-    stretches the bound without touching registrations.
+    Raises TimeoutError if the run doesn't finish in ``timeout_s``
+    (default: XNGIN_STREAM_TIMEOUT_S, else 120s; see ``_run_to_end``).
 
     Stateful operators size their state store by the session's
     ``spark.sql.shuffle.partitions``, which session.py sets to the core
@@ -195,19 +212,6 @@ def run_available_now(
                 "names must be unique among running queries"
             )
     spark.catalog.dropTempView(name)
-    if timeout_s is None:
-        raw = os.environ.get("XNGIN_STREAM_TIMEOUT_S", "120")
-        try:
-            timeout_s = int(raw)
-        except ValueError:
-            # a typo'd knob must read as a config warning, not as a
-            # ValueError deep inside every streaming query (ADVICE r9)
-            warnings.warn(
-                f"XNGIN_STREAM_TIMEOUT_S={raw!r} is not an integer; "
-                "falling back to 120s",
-                stacklevel=2,
-            )
-            timeout_s = 120
     if os.environ.get("XNGIN_STREAM_SINK", "memory").lower() == "parquet":
         base = os.environ.get("XNGIN_STREAM_SINK_DIR", "/tmp/xngin_stream_sink")
         out_dir = os.path.join(base, name)

@@ -32,11 +32,12 @@ def incremental_window_counts(
     path: str,
     checkpoint_dir: str,
     delay: str = "2 hours",
-    timeout_s: int = 120,
+    timeout_s: int | None = None,
 ) -> None:
     """Maintain a parquet table of hourly per-type event counts from a
     stream, exactly-once per partition. Runs availableNow to exhaustion
-    (raises on timeout like streaming/io.run_available_now)."""
+    (raises on timeout like streaming/io.run_available_now; every sink
+    here defaults to XNGIN_STREAM_TIMEOUT_S, else 120s)."""
     agg = (
         sdf.withWatermark("ts", delay)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -78,7 +79,7 @@ def incremental_ivf_index(
     path: str,
     checkpoint_dir: str,
     vec_col: str = "embedding",
-    timeout_s: int = 120,
+    timeout_s: int | None = None,
 ) -> None:
     """Maintain a partition-pruned IVF ANN index from a STREAM of
     embeddings: each micro-batch assigns its vectors to their nearest
@@ -124,7 +125,7 @@ def streaming_ingest_admit(
     text_col: str = "text",
     id_col: str = "doc_id",
     threshold: float = 0.7,
-    timeout_s: int = 180,
+    timeout_s: int | None = None,
 ) -> None:
     """The full ingest loop as ONE streaming job: each micro-batch of
     documents is screened against the persisted MinHash index
@@ -203,7 +204,7 @@ def streaming_vector_ingest_admit(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.999,
-    timeout_s: int = 180,
+    timeout_s: int | None = None,
 ) -> None:
     """The VECTOR twin of :func:`streaming_ingest_admit`: each
     micro-batch of embeddings is assigned its (frozen-centroid) IVF
@@ -411,7 +412,7 @@ def streaming_agg_maintain(
     group_col: str,
     val_col: str,
     key_cols: list[str],
-    timeout_s: int = 180,
+    timeout_s: int | None = None,
 ) -> None:
     """Maintain a persisted additive rollup from a CDC change STREAM —
     the materialized-view half of the ingest loop: the stream carries
@@ -441,7 +442,7 @@ def streaming_agg_maintain_multi(
     group_col: str,
     val_cols: list[str],
     key_cols: list[str],
-    timeout_s: int = 180,
+    timeout_s: int | None = None,
 ) -> None:
     """Multi-measure :func:`streaming_agg_maintain`: a k-measure
     maintained materialized view costs one aggregate per micro-batch,
@@ -461,7 +462,7 @@ def _run_rollup_stream(
     group_col: str,
     val_cols: str | list[str],
     key_cols: list[str],
-    timeout_s: int,
+    timeout_s: int | None,
 ) -> None:
     def apply(batch_df: DataFrame, batch_id: int) -> None:
         _apply_rollup_batch(
@@ -522,7 +523,7 @@ def streaming_bm25_maintain(
     change_stream: DataFrame,
     index_path: str,
     checkpoint_dir: str,
-    timeout_s: int = 180,
+    timeout_s: int | None = None,
 ) -> None:
     """Maintain a persisted BM25 index from a CDC change STREAM — the
     lexical-index member of the streaming ingest loop (the rollup MV
